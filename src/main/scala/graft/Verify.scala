@@ -6,6 +6,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev-only filter for iterating on a subset (same contract as
+    // Bench's, checked before the session starts); unset, every key is
+    // verified
+    val only = SparkEntry.onlyKeys(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // input-sized split config — see F.autoSplitMb / the Bench comment.
     // SPARK_GRAFT_SPLIT_MB is the same dev-only A/B override Bench
@@ -33,22 +37,24 @@ object Verify {
       else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev-only filter for iterating on a subset (same contract as
-    // Bench's); the driver sets no filter and verifies everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // same ReadSchema-sized split refinement as Bench (one SplitTuner
     // implementation — see the Bench comment)
     val tuner = new graft.functions.F.SplitTuner(spark, sfDir, splitMb,
       enabled = splitMb > 0 && sys.env.get("SPARK_GRAFT_SPLIT_MB").isEmpty)
-    SparkEntry.queries
+    // every key is written even after one fails; the failures make the
+    // exit code non-zero at the end
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try tuner.build(name, fn).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          tuner.build(name, fn).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            Some(name)
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -68,5 +74,9 @@ object Verify {
     // sessions that verify more than one dir
     operators.DedupOps.clearMemo(spark, sfDir)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} keys failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

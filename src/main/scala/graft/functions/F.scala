@@ -122,6 +122,8 @@ object F {
   def sinkPath(kind: String, dir: String): String =
     s"target/graft-sink/${kind}_" + dirTag(dir)
 
+  private val splitMbByDir = scala.collection.concurrent.TrieMap.empty[String, Int]
+
   /** INPUT-SIZED scan-split config for the local mains (Bench/Verify):
     * the decoded-CPU split sizing (32 MB maxPartitionBytes / 1 MB
     * openCost) that fixed p8's sf1 scan starvation MEASURABLY HURTS
@@ -136,12 +138,16 @@ object F {
     * the maxPartitionBytes MB to set, or 0 for Spark defaults. On a
     * real cluster this knob belongs in the submit conf; lake files
     * there are 128 MB+ with bounded row groups, where the defaults
-    * are right. */
+    * are right. Memoized per canonical directory for the JVM's life:
+    * the streaming materializations ask once each per pass, and an
+    * input dir does not change under a running suite. */
   def autoSplitMb(sfDir: String): Int = {
     def bytes(f: java.io.File): Long =
       if (f.isFile) f.length
       else Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
-    if (bytes(new java.io.File(sfDir)) > 64L * 1024 * 1024) 32 else 0
+    val dir = new java.io.File(sfDir).getCanonicalFile
+    splitMbByDir.getOrElseUpdate(dir.getPath,
+      if (bytes(dir) > 64L * 1024 * 1024) 32 else 0)
   }
 
   /** Per-query refinement of [[autoSplitMb]]: the 32 MB split exists to

@@ -1118,6 +1118,32 @@ object AnnOps {
   private[graft] case class BeamChain(queries: DataFrame, entryRows: DataFrame,
       visiteds: Seq[DataFrame], probed: DataFrame)
 
+  /** Single evaluation per key of `cache`, first caller wins: losers
+    * await the winner's future (the DedupOps.memoized discipline). A
+    * failure propagates raw to every waiter, which is correct: they
+    * were about to compute the identical thing. A failed build leaves
+    * no mapping, so the next caller of the key builds again. */
+  private[operators] def buildOnce[K, V](
+      cache: java.util.concurrent.ConcurrentHashMap[K, java.util.concurrent.CompletableFuture[V]],
+      key: K)(build: => V): V = {
+    val mine = new java.util.concurrent.CompletableFuture[V]()
+    val prior = cache.putIfAbsent(key, mine)
+    if (prior == null) {
+      try { val v = build; mine.complete(v); v }
+      catch {
+        case e: Throwable =>
+          cache.remove(key, mine)
+          mine.completeExceptionally(e)
+          throw e
+      }
+    } else
+      try prior.join()
+      catch {
+        case e: java.util.concurrent.CompletionException =>
+          throw Option(e.getCause).getOrElse(e)
+      }
+  }
+
   /** @param width    beam width (frontier size per round)
     * @param rounds   expansion rounds (unrolled)
     * @param degree   graph out-degree read from [[cellGraph]]'s top-
@@ -1186,25 +1212,10 @@ object AnnOps {
         .select("q_id", "label")
     def barrier(df: DataFrame): DataFrame =
       if (persist) df.materialized() else df
-    // single evaluation per shared prefix key, first builder wins —
-    // losers await the winner's future (the memoized discipline; a
-    // failure propagates raw to every sharer, which is correct: they
-    // were about to compute the identical thing)
     def sharedState(tag: String, r: Int, deg: Int)(build: => DataFrame): DataFrame =
       shared match {
         case None => build
-        case Some(cache) =>
-          val mine = new java.util.concurrent.CompletableFuture[DataFrame]()
-          val prior = cache.putIfAbsent((tag, width, r, deg), mine)
-          if (prior == null) {
-            try { val df = build; mine.complete(df); df }
-            catch { case e: Throwable => mine.completeExceptionally(e); throw e }
-          } else
-            try prior.join()
-            catch {
-              case e: java.util.concurrent.CompletionException =>
-                throw Option(e.getCause).getOrElse(e)
-            }
+        case Some(cache) => buildOnce(cache, (tag, width, r, deg))(build)
       }
     val entryRows = queries.select("q_id").crossJoin(broadcast(entries))
     // under sharing, v0 is barriered so the sharers reuse its COMPUTE,

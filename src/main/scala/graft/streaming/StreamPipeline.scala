@@ -1,9 +1,10 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 import graft.functions.F._
 import graft.pipeline.TripPipeline
 
@@ -246,17 +247,23 @@ object StreamPipeline {
     * SinkOps / the reference's Glue writer
     * (glue_jobs/KPI-Aggregator.py:117-125). Complete-mode batches carry
     * the full KPI set, so a full overwrite per micro-batch is idempotent
-    * under retries (re-running batch N rewrites the same content). */
+    * under retries (re-running batch N rewrites the same content).
+    *
+    * One trigger per landed batch: the query runs without Spark's
+    * no-data micro-batch ([[startKpiChain]]), which would re-commit
+    * every state store and rewrite every `date=` partition with the
+    * same content after each move of the watermark. That is right only
+    * while no operator of [[kpiDailyStream]] emits output when the
+    * watermark alone moves. */
   def kpiSinkStream(
       spark: SparkSession,
       events: DataFrame,
       path: String): org.apache.spark.sql.streaming.StreamingQuery =
-    kpiDailyStream(spark, events).writeStream
+    startKpiChain(spark, kpiDailyStream(spark, events).writeStream
       .outputMode("complete")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         graft.pipeline.SinkOps.writeKpiPartitioned(batch.toDF(), path): Unit
-      }
-      .start()
+      })
 
   /** p9 as an oracle-checkable BATCH result: drives the full streaming
     * pipeline (validate → watermarked dedup → stateful match → windowed
@@ -268,9 +275,9 @@ object StreamPipeline {
     * the streaming operator from test-verified to oracle-verified. */
   def kpiDailyViaFileStream(spark: SparkSession, dir: String): DataFrame = {
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = kpiDailyStream(spark, stagedEventsStream(spark, dir))
+      val query = startKpiChain(spark, kpiDailyStream(spark, stagedEventsStream(spark, dir))
         .writeStream.format("memory").queryName(memSinkName("p9", dir))
-        .outputMode("complete").start()
+        .outputMode("complete"))
       try query.processAllAvailable()
       finally { recordFloor("p9", query); query.stop() }
     }
@@ -286,12 +293,40 @@ object StreamPipeline {
     * it to aggregate state ÷ target-store-size instead. Results are
     * partition-count-invariant (DeterminismSpec), so this changes cost,
     * never content. Conf is restored even on failure. */
-  private[graft] def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
+  private[graft] def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
+    withSessionConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
+
+  /** Runs `body` with each given session conf key set to its value.
+    * Afterwards every key gets back the value it had, or is unset again
+    * if it had none, even when `body` throws. */
+  private[graft] def withSessionConf[T](spark: SparkSession, settings: (String, String)*)(
+      body: => T): T = {
+    val set = spark.conf.getAll // the explicitly set keys only
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
+
+  /** Spark's switch for the extra micro-batch it runs with no new input
+    * after the watermark moves. */
+  private[graft] val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** Starts a query of the [[kpiDailyStream]] chain without Spark's
+    * no-data micro-batch, so each batch of input costs one trigger
+    * (why that is safe: kpiDailyStream's scaladoc). The skipped batch
+    * would re-emit the previous KPI set unchanged; the next data batch
+    * evicts the dedup's expired keys against the same watermark. It
+    * filters late rows against the previous batch's watermark, one
+    * batch older than behind a no-data batch, so the chain drops fewer
+    * late rows, never more. The query reads the flag from the session
+    * copy it takes in `start()`, so the flag is set only around that
+    * call. */
+  private def startKpiChain(spark: SparkSession, writer: DataStreamWriter[Row]): StreamingQuery =
+    withSessionConf(spark, NoDataBatchesKey -> "false")(writer.start())
 
   /** Per-operator streaming FLOOR (seconds) observed by the most recent
     * materialization in this JVM: Σ over micro-batches of
@@ -361,10 +396,20 @@ object StreamPipeline {
     * size (see withStatePartitions' scaladoc). Results are
     * partition-count-invariant (DeterminismSpec), so this changes
     * cost, never content. SPARK_GRAFT_STATE_PARTS is the dev-only
-    * A/B override. */
+    * A/B override ([[parseStateParts]]). */
   private[graft] def materializeStateParts(dir: String): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt).getOrElse(
+    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(parseStateParts).getOrElse(
       if (graft.functions.F.autoSplitMb(dir) > 0) 8 else 2)
+
+  /** A SPARK_GRAFT_STATE_PARTS value as a state store count: a positive
+    * integer, or an error that names the variable. */
+  private[graft] def parseStateParts(v: String): Int = {
+    def bad = new IllegalArgumentException(
+      s"SPARK_GRAFT_STATE_PARTS must be a positive integer, got '$v'")
+    val n = try v.trim.toInt catch { case _: NumberFormatException => throw bad }
+    if (n <= 0) throw bad
+    n
+  }
 
   /** Collision-proof staging dir per (operator, data dir) — the shared
     * `F.dirTag` scheme. (`hashCode`-keyed names, the original scheme,
@@ -466,10 +511,10 @@ object StreamPipeline {
     * could not stay green. */
   def kpiDailyViaKafkaWire(spark: SparkSession, dir: String): DataFrame = {
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = kpiDailyStream(spark,
+      val query = startKpiChain(spark, kpiDailyStream(spark,
         graft.sources.KafkaEvents.decodeEvents(stagedWireStream(spark, dir)))
         .writeStream.format("memory").queryName(memSinkName("p30", dir))
-        .outputMode("complete").start()
+        .outputMode("complete"))
       try query.processAllAvailable()
       finally { recordFloor("p30", query); query.stop() }
     }
@@ -573,20 +618,20 @@ object StreamPipeline {
     * unchanged.
     *
     * Scale shape: the KPI relation is days × 1 rows, so each batch's
-    * write volume is trivial regardless of stream volume; partition
-    * rewrite cost is bounded by the dates ACTUALLY PRESENT in the
-    * batch, not the lake's history. */
+    * write volume is trivial regardless of stream volume. Under
+    * complete mode every batch carries EVERY date, so each batch
+    * rewrites every partition the sink holds: the write grows with the
+    * days kept, not with the dates the batch touched. */
   def idempotentKpiSink(spark: SparkSession, dir: String): DataFrame = {
     val out = stagingPath("p21sink", dir)
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = kpiDailyStream(spark, stagedEventsStream(spark, dir))
+      val query = startKpiChain(spark, kpiDailyStream(spark, stagedEventsStream(spark, dir))
         .writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("date").parquet(out)
-        }
-        .start()
+        })
       try query.processAllAvailable()
       finally { recordFloor("p21", query); query.stop() }
     }
@@ -1207,7 +1252,16 @@ object StreamPipeline {
   }
 
   /** Daily KPIs over the matched-trip stream — event-time 1-day window,
-    * same decimal-exact aggregates as the batch kpiDaily. */
+    * same decimal-exact aggregates as the batch kpiDaily.
+    *
+    * No operator here emits output when only the watermark moves: the
+    * watermarked dedup asks for a no-data batch only to evict expired
+    * keys, the NoTimeout matcher has no timeout to fire, and the
+    * complete-mode aggregation neither evicts nor emits on a watermark
+    * move. Its four starts ([[kpiSinkStream]], p9, p21, p30) rely on
+    * that to skip Spark's no-data micro-batch ([[startKpiChain]]). A
+    * timeout-armed matcher or an append-mode output added here must
+    * turn no-data batches back on for them. */
   def kpiDailyStream(spark: SparkSession, events: DataFrame): DataFrame =
     matchedTrips(spark, events).toDF()
       .groupBy(window(col("end_ts"), "1 day").as("w"))

@@ -15,6 +15,16 @@ class SketchSpec extends AnyFunSuite with SparkSpec {
     assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).toSeq.sorted}")
   }
 
+  test("query filter: SPARK_GRAFT_ONLY rejects names that are not query keys") {
+    assert(SparkEntry.onlyKeys(None).isEmpty)
+    assert(SparkEntry.onlyKeys(Some(" p9_dedup_exact_stream ,q1_pricing")).contains(
+      Set("p9_dedup_exact_stream", "q1_pricing")))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.onlyKeys(Some("p9_dedup_exact_stream,p9_typo,zz")))
+    assert(e.getMessage.contains("p9_typo, zz"), e.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.onlyKeys(Some(" , ")))
+  }
+
   test("s1 KMV estimate brackets the exact distinct count") {
     val r = SketchOps.kmvDistinct(spark, Sf0001).collect()(0)
     val est = r.getAs[Double]("est_distinct")

@@ -59,6 +59,60 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("streaming foreachBatch sink lands the batch-identical partitioned KPIs") {
+    val noData = StreamPipeline.NoDataBatchesKey
+    def setting(): Option[String] = spark.conf.getAll.get(noData)
+    val before = setting()
+    val evDf = Tables.events(spark, Sf0001)
+    implicit val enc = Encoders.row(evDf.schema)
+    val stream = MemoryStream[Row](enc, spark)
+    val out = "target/test-stream-sink/kpi"
+    val chunks = orderedEvents.grouped(orderedEvents.length / 3 + 1).toSeq
+    // the first chunk is there before the query starts, so no idle
+    // trigger ahead of it reports a progress
+    stream.addData(chunks.head)
+    val query = StreamPipeline.kpiSinkStream(spark, stream.toDF(), out)
+    assert(setting() === before, "kpiSinkStream must leave the session's no-data flag as it was")
+    try {
+      query.processAllAvailable()
+      chunks.tail.foreach { c => stream.addData(c); query.processAllAvailable() }
+      // one trigger per landed batch: the watermark moving after a batch
+      // must not cost a second, input-less trigger
+      val progress = query.recentProgress
+      assert(progress.length === chunks.length,
+        s"input rows per trigger: ${progress.map(_.numInputRows).mkString(", ")}")
+      assert(progress.forall(_.numInputRows > 0))
+    } finally query.stop()
+    val landed = spark.read
+      .schema(graft.pipeline.SinkOps.kpiDataSchema).json(out)
+      .select(col("date").cast("date").as("date"), col("total_fare"),
+        col("count_trips"), col("average_fare"), col("max_fare"), col("min_fare"))
+      .orderBy("date").collect()
+    val batch = TripPipeline.kpiDaily(spark, Sf0001).collect()
+    assert(landed.length === batch.length)
+    landed.zip(batch).foreach { case (g, e) =>
+      assert(g.getDate(0) === e.getDate(0))
+      assert(g.getLong(2) === e.getLong(2))
+      assert(math.abs(g.getDouble(1) - e.getDouble(1)) < 1e-9)
+    }
+    // p9 gives back an explicitly set value too. The p15 test below runs
+    // after both starts and still needs the session's no-data batches
+    // to close its sessions.
+    spark.conf.set(noData, "true")
+    try {
+      assert(StreamPipeline.kpiDailyViaFileStream(spark, Sf0001).count() === batch.length)
+      assert(setting() === Some("true"), "p9 must leave the session's no-data flag as it was")
+    } finally before.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
+  }
+
+  test("SPARK_GRAFT_STATE_PARTS is a positive integer or a named error") {
+    assert(StreamPipeline.parseStateParts(" 4 ") === 4)
+    Seq("0", "-2", "four", "2.5", "").foreach { v =>
+      val e = intercept[IllegalArgumentException](StreamPipeline.parseStateParts(v))
+      assert(e.getMessage.contains("SPARK_GRAFT_STATE_PARTS"), e.getMessage)
+    }
+  }
+
   test("streaming quarantine equals the batch DLQ complement on injected invalid rows") {
     import java.sql.Timestamp
     val t0 = Timestamp.valueOf("2024-01-01 10:00:00")
@@ -135,32 +189,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         assert(math.abs(g.getDouble(4) - e.getDouble(4)) < 1e-9)
       }
     } finally query.stop()
-  }
-
-  test("streaming foreachBatch sink lands the batch-identical partitioned KPIs") {
-    val evDf = Tables.events(spark, Sf0001)
-    implicit val enc = Encoders.row(evDf.schema)
-    val stream = MemoryStream[Row](enc, spark)
-    val out = "target/test-stream-sink/kpi"
-    val query = StreamPipeline.kpiSinkStream(spark, stream.toDF(), out)
-    try {
-      val third = orderedEvents.length / 3
-      orderedEvents.grouped(third + 1).foreach { c =>
-        stream.addData(c); query.processAllAvailable()
-      }
-    } finally query.stop()
-    val landed = spark.read
-      .schema(graft.pipeline.SinkOps.kpiDataSchema).json(out)
-      .select(col("date").cast("date").as("date"), col("total_fare"),
-        col("count_trips"), col("average_fare"), col("max_fare"), col("min_fare"))
-      .orderBy("date").collect()
-    val batch = TripPipeline.kpiDaily(spark, Sf0001).collect()
-    assert(landed.length === batch.length)
-    landed.zip(batch).foreach { case (g, e) =>
-      assert(g.getDate(0) === e.getDate(0))
-      assert(g.getLong(2) === e.getLong(2))
-      assert(math.abs(g.getDouble(1) - e.getDouble(1)) < 1e-9)
-    }
   }
 
   test("standalone matcher (EventTimeTimeout) matches batch; short retention reaps state") {

@@ -45,4 +45,14 @@ class Round19OpsSpec extends AnyFunSuite with SparkSpec {
     assert(attempts.get() == 2)
     DedupOps.clearMemo(spark, probeDir)
   }
+
+  test("buildOnce: a failed build is not cached and the next build of the key returns") {
+    val cache = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.CompletableFuture[Int]]()
+    val e = intercept[RuntimeException](AnnOps.buildOnce(cache, "k")(sys.error("injected failure")))
+    assert(e.getMessage.contains("injected failure"))
+    assert(!cache.containsKey("k"), "a failed future must not stay cached")
+    assert(AnnOps.buildOnce(cache, "k")(7) === 7)
+    assert(AnnOps.buildOnce(cache, "k")(sys.error("a cached key must not rebuild")) === 7)
+  }
 }
