@@ -1587,9 +1587,10 @@ object AnnOps {
     def arrivals = encodeCells(spark, dir,
       spark.readStream.schema(schema).parquet(s"$out/arrivals")
         .dropDuplicates("vec_id"))
-    graft.streaming.StreamPipeline.withStatePartitions(
-        spark, graft.streaming.StreamPipeline.materializeStateParts(dir)) {
-      val codesQ = arrivals
+    import graft.streaming.StreamPipeline.{materializeStateParts, startStream,
+      withStatePartitions}
+    withStatePartitions(spark, materializeStateParts(dir)) {
+      val codesQ = startStream(spark, arrivals
         .select(col("vec_id").as("c_id"), col("label"),
           posexplode(pqCodesCol(spark, col("q"))).as(Seq("m", "code")))
         .select("c_id", "label", "m", "code")
@@ -1600,12 +1601,12 @@ object AnnOps {
         .option("path", s"$out/codes_delta")
         .option("checkpointLocation", s"$out/codes_ckpt")
         .partitionBy("label")
-        .outputMode("append").start()
-      val stateQ = arrivals
+        .outputMode("append"))
+      val stateQ = startStream(spark, arrivals
         .select(col("label"), posexplode(col("q")).as(Seq("d", "v")))
         .groupBy("label", "d").agg(sum("v").as("s"), count(lit(1)).as("n"))
         .writeStream.format("memory").queryName(e18StateSink(dir))
-        .outputMode("complete").start()
+        .outputMode("complete"))
       try { codesQ.processAllAvailable(); stateQ.processAllAvailable() }
       finally {
         graft.streaming.StreamPipeline.recordFloors("e18", Seq(codesQ, stateQ))

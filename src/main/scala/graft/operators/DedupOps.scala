@@ -34,8 +34,13 @@ object DedupOps {
     * same signature build is materialized once per (session, sfDir) even
     * when several operators (d2/d3 share docNgrams; e2/e3 share buckets)
     * or both sides of a self-join need it. */
+  private type MemoKey = (SparkSession, String, String)
   private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), java.util.concurrent.CompletableFuture[DataFrame]]
+    .empty[MemoKey, java.util.concurrent.CompletableFuture[DataFrame]]
+  /** The wait-for graph of in-flight builds: which thread builds each
+    * entry, and which entry each blocked thread waits on. */
+  private val builders = new java.util.concurrent.ConcurrentHashMap[MemoKey, Thread]()
+  private val waiting = new java.util.concurrent.ConcurrentHashMap[Thread, MemoKey]()
   private[operators] def memoized(spark: SparkSession, key: String, dir: String)(
       build: => DataFrame): DataFrame = {
     MemoTrace.record(key)
@@ -50,14 +55,16 @@ object DedupOps {
     // retries) and propagates the raw failure to every waiter. The
     // putIfAbsent holds no bin lock across the build, so nested
     // memoized builds (docNgrams inside d3's substrate) cannot
-    // deadlock.
+    // deadlock on the map; a build that waits on itself, directly or
+    // through another thread's build, fails in joinMemo instead.
     memo.get(k) match {
-      case Some(done) => joinMemo(done)
+      case Some(done) => joinMemo(k, done)
       case None =>
         val mine = new java.util.concurrent.CompletableFuture[DataFrame]()
         memo.putIfAbsent(k, mine) match {
-          case Some(prior) => joinMemo(prior)
+          case Some(prior) => joinMemo(k, prior)
           case None =>
+            builders.put(k, Thread.currentThread())
             try {
               MemoTrace.push(key)
               // Storage level is a session knob (`graft.memo.level`): the
@@ -72,10 +79,12 @@ object DedupOps {
               val level = spark.conf.getOption("graft.memo.level")
                 .map(StorageLevel.fromString).getOrElse(StorageLevel.MEMORY_AND_DISK)
               val df = try build.persist(level) finally MemoTrace.pop()
+              builders.remove(k)
               mine.complete(df)
               df
             } catch {
               case e: Throwable =>
+                builders.remove(k)
                 memo.remove(k, mine)
                 mine.completeExceptionally(e)
                 throw e
@@ -84,12 +93,45 @@ object DedupOps {
     }
   }
 
-  private def joinMemo(f: java.util.concurrent.CompletableFuture[DataFrame]): DataFrame =
-    try f.join()
-    catch {
+  /** Waits for entry `k`'s build. If that build waits, through any chain
+    * of other threads' builds, on one this thread runs (or is this
+    * thread's own build), nobody would ever finish: throws an error
+    * naming the keys instead. The failure then completes every build on
+    * the cycle exceptionally, so no thread on it hangs. */
+  private def joinMemo(k: MemoKey,
+      f: java.util.concurrent.CompletableFuture[DataFrame]): DataFrame = {
+    val me = Thread.currentThread()
+    waiting.put(me, k)
+    try {
+      if (!f.isDone) waitCycle(me, k).foreach { keys =>
+        throw new IllegalStateException("memo wait cycle: " +
+          (keys :+ keys.head).map(_._2).mkString(" -> ") +
+          " (each key's build waits on the next one's)")
+      }
+      f.join()
+    } catch {
       case e: java.util.concurrent.CompletionException =>
         throw Option(e.getCause).getOrElse(e)
-    }
+    } finally waiting.remove(me)
+  }
+
+  /** The keys on a wait-for path from `k`'s builder back to `me`, `k`
+    * first, if there is one. Registering the wait before the walk means
+    * that of two threads closing a cycle at once, the later one sees
+    * it. */
+  private def waitCycle(me: Thread, k: MemoKey): Option[List[MemoKey]] = {
+    @scala.annotation.tailrec
+    def walk(key: MemoKey, path: List[MemoKey], seen: Set[Thread]): Option[List[MemoKey]] =
+      Option(builders.get(key)) match {
+        case Some(t) if t eq me => Some((key :: path).reverse)
+        case Some(t) if !seen(t) => Option(waiting.get(t)) match {
+          case Some(next) => walk(next, key :: path, seen + t)
+          case None => None
+        }
+        case _ => None
+      }
+    walk(k, Nil, Set.empty)
+  }
 
   /** Dev-only memo-topology recorder (see [[graft.DocGen]]): when
     * `edges` is non-null every [[memoized]] ACCESS records an

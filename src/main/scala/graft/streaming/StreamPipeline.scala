@@ -231,9 +231,9 @@ object StreamPipeline {
     val sdf = graft.Tables.normalizeEventsTs(
       spark.readStream.schema(raw.schema).parquet(streamDir.toString))
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = sessionizeStream(sdf)
+      val query = startStream(spark, sessionizeStream(sdf)
         .writeStream.format("memory").queryName(memSinkName("p15", dir))
-        .outputMode("append").start()
+        .outputMode("append"))
       try query.processAllAvailable()
       finally { recordFloor("p15", query); query.stop() }
     }
@@ -250,7 +250,7 @@ object StreamPipeline {
     * under retries (re-running batch N rewrites the same content).
     *
     * One trigger per landed batch: the query runs without Spark's
-    * no-data micro-batch ([[startKpiChain]]), which would re-commit
+    * no-data micro-batch ([[startStream]]), which would re-commit
     * every state store and rewrite every `date=` partition with the
     * same content after each move of the watermark. That is right only
     * while no operator of [[kpiDailyStream]] emits output when the
@@ -259,11 +259,11 @@ object StreamPipeline {
       spark: SparkSession,
       events: DataFrame,
       path: String): org.apache.spark.sql.streaming.StreamingQuery =
-    startKpiChain(spark, kpiDailyStream(spark, events).writeStream
+    startStream(spark, kpiDailyStream(spark, events).writeStream
       .outputMode("complete")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         graft.pipeline.SinkOps.writeKpiPartitioned(batch.toDF(), path): Unit
-      })
+      }, noDataBatches = false)
 
   /** p9 as an oracle-checkable BATCH result: drives the full streaming
     * pipeline (validate → watermarked dedup → stateful match → windowed
@@ -275,9 +275,9 @@ object StreamPipeline {
     * the streaming operator from test-verified to oracle-verified. */
   def kpiDailyViaFileStream(spark: SparkSession, dir: String): DataFrame = {
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startKpiChain(spark, kpiDailyStream(spark, stagedEventsStream(spark, dir))
+      val query = startStream(spark, kpiDailyStream(spark, stagedEventsStream(spark, dir))
         .writeStream.format("memory").queryName(memSinkName("p9", dir))
-        .outputMode("complete"))
+        .outputMode("complete"), noDataBatches = false)
       try query.processAllAvailable()
       finally { recordFloor("p9", query); query.stop() }
     }
@@ -315,18 +315,31 @@ object StreamPipeline {
     * after the watermark moves. */
   private[graft] val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-  /** Starts a query of the [[kpiDailyStream]] chain without Spark's
-    * no-data micro-batch, so each batch of input costs one trigger
-    * (why that is safe: kpiDailyStream's scaladoc). The skipped batch
-    * would re-emit the previous KPI set unchanged; the next data batch
-    * evicts the dedup's expired keys against the same watermark. It
-    * filters late rows against the previous batch's watermark, one
-    * batch older than behind a no-data batch, so the chain drops fewer
-    * late rows, never more. The query reads the flag from the session
-    * copy it takes in `start()`, so the flag is set only around that
-    * call. */
-  private def startKpiChain(spark: SparkSession, writer: DataStreamWriter[Row]): StreamingQuery =
-    withSessionConf(spark, NoDataBatchesKey -> "false")(writer.start())
+  /** Starts a streaming query. Every query graft starts goes through
+    * here.
+    *
+    * Its checkpoint (offset and commit logs, state stores) goes through
+    * [[graft.io.LocalCheckpointFileManager]], so a local checkpoint
+    * forks no `chmod` or `readlink` per file (why: [[graft.io.LocalFs]]).
+    *
+    * `noDataBatches = false` is for the [[kpiDailyStream]] chain only:
+    * it runs without Spark's no-data micro-batch, so each batch of input
+    * costs one trigger (why that is safe: kpiDailyStream's scaladoc).
+    * The skipped batch would re-emit the previous KPI set unchanged; the
+    * next data batch evicts the dedup's expired keys against the same
+    * watermark. It filters late rows against the previous batch's
+    * watermark, one batch older than behind a no-data batch, so the
+    * chain drops fewer late rows, never more. Append- and update-mode
+    * outputs need the no-data batch to emit closed windows and sessions.
+    *
+    * The query reads both settings from the session copy it takes in
+    * `start()`, so they are set only around that call. */
+  private[graft] def startStream(spark: SparkSession, writer: DataStreamWriter[Row],
+      noDataBatches: Boolean = true): StreamingQuery = {
+    val settings = graft.io.LocalCheckpointFileManager.sessionSetting +:
+      (if (noDataBatches) Nil else Seq(NoDataBatchesKey -> "false"))
+    withSessionConf(spark, settings: _*)(writer.start())
+  }
 
   /** Per-operator streaming FLOOR (seconds) observed by the most recent
     * materialization in this JVM: Σ over micro-batches of
@@ -511,10 +524,10 @@ object StreamPipeline {
     * could not stay green. */
   def kpiDailyViaKafkaWire(spark: SparkSession, dir: String): DataFrame = {
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startKpiChain(spark, kpiDailyStream(spark,
+      val query = startStream(spark, kpiDailyStream(spark,
         graft.sources.KafkaEvents.decodeEvents(stagedWireStream(spark, dir)))
         .writeStream.format("memory").queryName(memSinkName("p30", dir))
-        .outputMode("complete"))
+        .outputMode("complete"), noDataBatches = false)
       try query.processAllAvailable()
       finally { recordFloor("p30", query); query.stop() }
     }
@@ -553,9 +566,9 @@ object StreamPipeline {
     * memory sink), like kpiDailyViaFileStream. */
   def signupPurchaseJoinViaFileStream(spark: SparkSession, dir: String): DataFrame = {
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = signupPurchaseJoin(spark, stagedEventsStream(spark, dir))
+      val query = startStream(spark, signupPurchaseJoin(spark, stagedEventsStream(spark, dir))
         .writeStream.format("memory").queryName(memSinkName("p13", dir))
-        .outputMode("append").start()
+        .outputMode("append"))
       try query.processAllAvailable()
       finally { recordFloor("p13", query); query.stop() }
     }
@@ -597,9 +610,10 @@ object StreamPipeline {
     * via a file streaming source; oracle = the equivalent batch join. */
   def revenueByNationViaFileStream(spark: SparkSession, dir: String): DataFrame = {
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = revenueByNationStream(spark, stagedEventsStream(spark, dir), dir)
+      val query = startStream(spark,
+        revenueByNationStream(spark, stagedEventsStream(spark, dir), dir)
         .writeStream.format("memory").queryName(memSinkName("p20", dir))
-        .outputMode("complete").start()
+        .outputMode("complete"))
       try query.processAllAvailable()
       finally { recordFloor("p20", query); query.stop() }
     }
@@ -625,13 +639,13 @@ object StreamPipeline {
   def idempotentKpiSink(spark: SparkSession, dir: String): DataFrame = {
     val out = stagingPath("p21sink", dir)
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startKpiChain(spark, kpiDailyStream(spark, stagedEventsStream(spark, dir))
+      val query = startStream(spark, kpiDailyStream(spark, stagedEventsStream(spark, dir))
         .writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite")
+          batch.write.mode("overwrite").options(graft.io.LocalFs.writeOptions)
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("date").parquet(out)
-        })
+        }, noDataBatches = false)
       try query.processAllAvailable()
       finally { recordFloor("p21", query); query.stop() }
     }
@@ -669,9 +683,9 @@ object StreamPipeline {
     * joins in from a batch scan as the accuracy reference column. */
   def hllDistinctStream(spark: SparkSession, dir: String): DataFrame = {
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = hllRegistersStream(stagedEventsStream(spark, dir))
+      val query = startStream(spark, hllRegistersStream(stagedEventsStream(spark, dir))
         .writeStream.format("memory").queryName(memSinkName("p19", dir))
-        .outputMode("complete").start()
+        .outputMode("complete"))
       try query.processAllAvailable()
       finally { recordFloor("p19", query); query.stop() }
     }
@@ -718,9 +732,9 @@ object StreamPipeline {
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(col("event_type"), to_date(col("ts")).as("date"))
         .agg(count(lit(1)).as("n"))
-      val query = counts
+      val query = startStream(spark, counts
         .writeStream.format("memory").queryName(memSinkName("p26", dir))
-        .outputMode("complete").start()
+        .outputMode("complete"))
       try query.processAllAvailable()
       finally { recordFloor("p26", query); query.stop() }
     }
@@ -754,9 +768,9 @@ object StreamPipeline {
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(col("event_type"), to_date(col("ts")).as("date"))
         .agg(count(lit(1)).as("n"))
-      val query = counts
+      val query = startStream(spark, counts
         .writeStream.format("memory").queryName(memSinkName("p34", dir))
-        .outputMode("complete").start()
+        .outputMode("complete"))
       try query.processAllAvailable()
       finally { recordFloor("p34", query); query.stop() }
     }
@@ -868,14 +882,14 @@ object StreamPipeline {
         .option("maxFilesPerTrigger", "1").parquet(streamDir.toString))
     val sink = memSinkName("p35", dir)
     withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = sdf.filter(TripPipeline.validCond)
+      val query = startStream(spark, sdf.filter(TripPipeline.validCond)
         .withWatermark("ts", LateDelay)
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_stream"))
         .select(col("w.start").cast("timestamp_ntz").as("win_start"),
           col("event_type"), col("n_stream"))
         .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
+        .outputMode("append"))
       try query.processAllAvailable()
       finally { recordFloor("p35", query); query.stop() }
     }
@@ -950,8 +964,8 @@ object StreamPipeline {
             .as("chg"))
         .groupBy("key")
         .agg(max("chg").as("last"), count(lit(1)).as("n_changes"))
-      val query = changes.writeStream.format("memory")
-        .queryName(memSinkName("p27", dir)).outputMode("complete").start()
+      val query = startStream(spark, changes.writeStream.format("memory")
+        .queryName(memSinkName("p27", dir)).outputMode("complete"))
       try query.processAllAvailable()
       finally { recordFloor("p27", query); query.stop() }
     }
@@ -995,8 +1009,8 @@ object StreamPipeline {
           .select(col("ts"), col("event_id"), col("user_id")),
         col("user_id"))
         .groupBy("d", "cell").agg(count(lit(1)).as("cnt"))
-      val query = cells.writeStream.format("memory")
-        .queryName(memSinkName("p28", dir)).outputMode("complete").start()
+      val query = startStream(spark, cells.writeStream.format("memory")
+        .queryName(memSinkName("p28", dir)).outputMode("complete"))
       try query.processAllAvailable()
       finally { recordFloor("p28", query); query.stop() }
     }
@@ -1112,9 +1126,9 @@ object StreamPipeline {
         col("n_agree").cast(org.apache.spark.sql.types.DoubleType) / DedupOps.K)
       .filter(col("est_jaccard") >= 0.25)
       .select("incoming_doc", "existing_doc", "est_jaccard")
-    val query = out
+    val query = startStream(spark, out
       .writeStream.format("memory").queryName(memSinkName("p39", dir))
-      .outputMode("append").start()
+      .outputMode("append"))
     try query.processAllAvailable()
     finally { recordFloor("p39", query); query.stop() }
     spark.table(memSinkName("p39", dir)).orderBy("incoming_doc", "existing_doc")
@@ -1187,9 +1201,9 @@ object StreamPipeline {
       .select(col("vec_id"), col("b").isNull.as("is_kept"),
         col("b").getField("eval_id").as("contam_of"),
         round(col("b").getField("sim"), 6).as("sim"))
-    val query = out
+    val query = startStream(spark, out
       .writeStream.format("memory").queryName(memSinkName("p40", dir))
-      .outputMode("append").start()
+      .outputMode("append"))
     try query.processAllAvailable()
     finally { recordFloor("p40", query); query.stop() }
     spark.table(memSinkName("p40", dir)).orderBy("vec_id")
@@ -1243,9 +1257,9 @@ object StreamPipeline {
         when(col("sc.quality_score") < CorpusOps.MinQuality, lit("low_quality"))
           .when(col("sc.pred_lang") =!= col("lang"), lit("lang_mismatch"))
           .otherwise(lit("admitted")).as("verdict"))
-    val query = out
+    val query = startStream(spark, out
       .writeStream.format("memory").queryName(memSinkName("p41", dir))
-      .outputMode("append").start()
+      .outputMode("append"))
     try query.processAllAvailable()
     finally { recordFloor("p41", query); query.stop() }
     spark.table(memSinkName("p41", dir)).orderBy("doc_id")
@@ -1259,7 +1273,7 @@ object StreamPipeline {
     * keys, the NoTimeout matcher has no timeout to fire, and the
     * complete-mode aggregation neither evicts nor emits on a watermark
     * move. Its four starts ([[kpiSinkStream]], p9, p21, p30) rely on
-    * that to skip Spark's no-data micro-batch ([[startKpiChain]]). A
+    * that to skip Spark's no-data micro-batch ([[startStream]]). A
     * timeout-armed matcher or an append-mode output added here must
     * turn no-data batches back on for them. */
   def kpiDailyStream(spark: SparkSession, events: DataFrame): DataFrame =

@@ -19,6 +19,12 @@ trait SparkSpec { self: Suite =>
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
+      // the production session's two sizing knobs, as Bench and Verify
+      // set them
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        graft.functions.F.ObjectAggFallbackGroups.toString)
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.functions.F.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

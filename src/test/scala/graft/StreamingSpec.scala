@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.TripPipeline
 import graft.streaming.StreamPipeline
@@ -61,8 +62,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("streaming foreachBatch sink lands the batch-identical partitioned KPIs") {
     val noData = StreamPipeline.NoDataBatchesKey
-    def setting(): Option[String] = spark.conf.getAll.get(noData)
-    val before = setting()
+    // every session key the start helper sets
+    val keys = Seq(noData, graft.io.LocalCheckpointFileManager.sessionSetting._1)
+    def settings(): Seq[Option[String]] = keys.map(spark.conf.getAll.get)
+    val before = settings()
     val evDf = Tables.events(spark, Sf0001)
     implicit val enc = Encoders.row(evDf.schema)
     val stream = MemoryStream[Row](enc, spark)
@@ -72,7 +75,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // trigger ahead of it reports a progress
     stream.addData(chunks.head)
     val query = StreamPipeline.kpiSinkStream(spark, stream.toDF(), out)
-    assert(setting() === before, "kpiSinkStream must leave the session's no-data flag as it was")
+    assert(settings() === before, "kpiSinkStream must leave the session keys it sets as they were")
     try {
       query.processAllAvailable()
       chunks.tail.foreach { c => stream.addData(c); query.processAllAvailable() }
@@ -95,14 +98,20 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(g.getLong(2) === e.getLong(2))
       assert(math.abs(g.getDouble(1) - e.getDouble(1)) < 1e-9)
     }
-    // p9 gives back an explicitly set value too. The p15 test below runs
+    // p9 gives back explicitly set values too. The p15 test below runs
     // after both starts and still needs the session's no-data batches
     // to close its sessions.
-    spark.conf.set(noData, "true")
+    val explicit = Seq("true", classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileContextBasedCheckpointFileManager].getName)
+    keys.zip(explicit).foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       assert(StreamPipeline.kpiDailyViaFileStream(spark, Sf0001).count() === batch.length)
-      assert(setting() === Some("true"), "p9 must leave the session's no-data flag as it was")
-    } finally before.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
+      assert(settings() === explicit.map(Some(_)),
+        "p9 must leave the session keys it sets as they were")
+    } finally keys.zip(before).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("SPARK_GRAFT_STATE_PARTS is a positive integer or a named error") {
@@ -226,11 +235,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("checkpointed restart recovers matcher state and completes the KPIs") {
-    // the operational property a Step-Function retry gives the
-    // reference: kill the job mid-stream, restart from the checkpoint,
-    // end with the same answer. Half the events, stop, NEW query object
-    // over the SAME checkpoint + sink dir, rest of the events.
+  /** The trip matcher over `orderedEvents` into a checkpointed parquet
+    * sink: the first half under `first`, then, when `second` is given,
+    * a NEW query object over the SAME checkpoint and sink dir started by
+    * `second` gets the rest; without `second` one query gets both
+    * halves. The sorted sink content. */
+  private def checkpointedTrips(first: DataStreamWriter[Row] => StreamingQuery,
+      second: Option[DataStreamWriter[Row] => StreamingQuery]): Array[Row] = {
     // under target/ so `sbt clean` reclaims the state dirs instead of
     // accumulating them in the system tmp across runs
     import java.nio.file.{Files, Paths}
@@ -240,19 +251,35 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val evDf = Tables.events(spark, Sf0001)
     implicit val enc = Encoders.row(evDf.schema)
     val stream = MemoryStream[Row](enc, spark)
-    def start() = StreamPipeline.matchedTrips(spark, stream.toDF()).toDF()
+    val writer = StreamPipeline.matchedTrips(spark, stream.toDF()).toDF()
       .writeStream.format("parquet")
       .option("checkpointLocation", ckpt).option("path", out)
-      .outputMode("append").start()
+      .outputMode("append")
     val half = orderedEvents.length / 2
-    val q1 = start()
-    try { stream.addData(orderedEvents.take(half)); q1.processAllAvailable() }
-    finally q1.stop()
-    val q2 = start() // fresh query, same checkpoint: state must recover
-    try { stream.addData(orderedEvents.drop(half)); q2.processAllAvailable() }
-    finally q2.stop()
-    val got = spark.read.parquet(out)
-      .orderBy("user_id").collect()
+    val q1 = first(writer)
+    try {
+      stream.addData(orderedEvents.take(half)); q1.processAllAvailable()
+      if (second.isEmpty) { stream.addData(orderedEvents.drop(half)); q1.processAllAvailable() }
+    } finally q1.stop()
+    second.foreach { start =>
+      val q2 = start(writer) // fresh query, same checkpoint: state must recover
+      try { stream.addData(orderedEvents.drop(half)); q2.processAllAvailable() }
+      finally q2.stop()
+    }
+    spark.read.parquet(out).orderBy("user_id").collect()
+  }
+
+  private val helperStart: DataStreamWriter[Row] => StreamingQuery =
+    StreamPipeline.startStream(spark, _)
+  /** A start under Spark's default checkpoint manager. */
+  private val defaultStart: DataStreamWriter[Row] => StreamingQuery = _.start()
+  private lazy val uninterruptedTrips = checkpointedTrips(helperStart, None)
+
+  test("checkpointed restart recovers matcher state and completes the KPIs") {
+    // the operational property a Step-Function retry gives the
+    // reference: kill the job mid-stream, restart from the checkpoint,
+    // end with the same answer
+    val got = checkpointedTrips(helperStart, Some(helperStart))
     val batch = TripPipeline.tripMatch(spark, Sf0001)
       .select(col("user_id"),
         col("start_ts").cast("timestamp").as("start_ts"),
@@ -262,6 +289,33 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     got.zip(batch).foreach { case (g, e) =>
       assert(g.getLong(0) === e.getLong(0) && g.getDouble(3) === e.getDouble(3))
     }
+    assert(got.toSeq === uninterruptedTrips.toSeq)
+  }
+
+  test("a checkpoint begun under Spark's default manager resumes under graft's, and back") {
+    // same file names and .crc sidecars either way, so neither manager
+    // strands the other's state or logs
+    assert(checkpointedTrips(defaultStart, Some(helperStart)).toSeq === uninterruptedTrips.toSeq,
+      "default manager, then graft's")
+    assert(checkpointedTrips(helperStart, Some(defaultStart)).toSeq === uninterruptedTrips.toSeq,
+      "graft's manager, then the default")
+  }
+
+  test("checkpoint manager: file: paths stay local, every other scheme goes to FileContext") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.{
+      FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    import graft.io.LocalCheckpointFileManager
+    val conf = spark.sessionState.newHadoopConf()
+    Seq("target/streams-tmp/dispatch", "file:/tmp/graft-dispatch").foreach { p =>
+      val m = new LocalCheckpointFileManager(new Path(p), conf)
+      assert(m.delegate.isInstanceOf[FileSystemBasedCheckpointFileManager], p)
+      assert(m.isLocal, p)
+    }
+    // nothing listens on port 1; building the FileContext opens no connection
+    val remote = new LocalCheckpointFileManager(new Path("hdfs://localhost:1/ckpt"), conf)
+    assert(remote.delegate.isInstanceOf[FileContextBasedCheckpointFileManager])
+    assert(!remote.isLocal)
   }
 
   test("p19 HLL registers are idempotent under re-delivery and equal the batch registers") {

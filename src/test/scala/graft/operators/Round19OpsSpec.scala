@@ -46,6 +46,42 @@ class Round19OpsSpec extends AnyFunSuite with SparkSpec {
     DedupOps.clearMemo(spark, probeDir)
   }
 
+  test("memoized: two builds waiting on each other fail naming both keys, without hanging") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    val probeDir = "/tmp/graft-memo-cycle-probe"
+    // both builds are running before either asks for the other's key
+    val bothBuilding = new CountDownLatch(2)
+    def build(own: String, other: String): Long = DedupOps.memoized(spark, own, probeDir) {
+      bothBuilding.countDown()
+      bothBuilding.await(30, TimeUnit.SECONDS)
+      DedupOps.memoized(spark, other, probeDir)(spark.range(1).toDF("v"))
+    }.count()
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val a = pool.submit(() => build("cycle_a", "cycle_b"))
+      val b = pool.submit(() => build("cycle_b", "cycle_a"))
+      Seq(a, b).foreach { f =>
+        val e = intercept[java.util.concurrent.ExecutionException](f.get(60, TimeUnit.SECONDS))
+        assert(e.getCause.isInstanceOf[IllegalStateException], e.getCause)
+        assert(e.getCause.getMessage.contains("cycle_a") &&
+          e.getCause.getMessage.contains("cycle_b"), e.getCause.getMessage)
+      }
+    } finally pool.shutdownNow(): Unit
+    // the failure left no entry behind: both keys build again
+    assert(DedupOps.memoized(spark, "cycle_a", probeDir)(spark.range(2).toDF("v")).count() == 2L)
+    DedupOps.clearMemo(spark, probeDir)
+  }
+
+  test("memoized: a build that memoizes its own key fails naming it") {
+    val probeDir = "/tmp/graft-memo-self-probe"
+    val e = intercept[IllegalStateException](
+      DedupOps.memoized(spark, "self_cycle", probeDir) {
+        DedupOps.memoized(spark, "self_cycle", probeDir)(spark.range(1).toDF("v"))
+      })
+    assert(e.getMessage.contains("self_cycle -> self_cycle"), e.getMessage)
+    DedupOps.clearMemo(spark, probeDir)
+  }
+
   test("buildOnce: a failed build is not cached and the next build of the key returns") {
     val cache = new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.CompletableFuture[Int]]()
