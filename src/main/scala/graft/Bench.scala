@@ -28,18 +28,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   val DefaultReps = 3
 
+  /** Timed passes: `SPARK_GRAFT_REPS`, a dev-only knob for the builder's
+    * iteration loop (1 halves the wall of a what-did-my-change-do run);
+    * unset, the full 3-pass median methodology. */
+  def reps(env: collection.Map[String, String] = sys.env): Int =
+    GraftSession.intKnob("SPARK_GRAFT_REPS", 1, env).getOrElse(DefaultReps)
+
   def main(args: Array[String]): Unit = {
     // dev-only filter for isolating queries while iterating
     // (SPARK_GRAFT_ONLY=d2_ngram_jaccard,d7_winnow); unset, every key is
     // benched. Checked before the session starts.
     val only = SparkEntry.onlyKeys(sys.env.get("SPARK_GRAFT_ONLY"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // dev-only knob for the builder's iteration loop (SPARK_GRAFT_REPS=1
-    // halves the wall of a what-did-my-change-do run); the driver sets
-    // nothing and gets the full 3-pass median methodology
-    val Reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(DefaultReps)
-    require(Reps >= 1, s"SPARK_GRAFT_REPS must be >= 1, got $Reps")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val Reps = reps()
     // Scan-split sizing for the local harness: snappy parquet with
     // string-heavy columns (events.props JSON) decodes at 5-20× its
     // stored bytes of CPU, so the 128 MB/4 MB defaults leave a big
@@ -50,38 +51,8 @@ object Bench {
     // that fixes sf1 minted 4× the tasks at sf0.1 and cost a measured
     // 18% there — defaults below 64 MB of input, 32 MB/1 MB above.
     // SPARK_GRAFT_SPLIT_MB is the dev-only A/B override (=0 forces
-    // Spark defaults).
-    val splitMb = sys.env.get("SPARK_GRAFT_SPLIT_MB").map(_.toInt)
-      .getOrElse(graft.functions.F.autoSplitMb(sfDir))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // ObjectHashAggregate (the minhash typed aggregate, every
-      // collect_list state build) falls back to SORT-BASED aggregation
-      // after a default of 128 in-memory groups — at the 3.2M-doc
-      // carve that made every map task SORT its ~10⁸-row gram stream
-      // (a 20+ min straggler in the d3 substrate) where hash
-      // aggregation of its ~10⁵ doc groups needs ~25 MB. Size the
-      // threshold to the memory the groups actually cost instead —
-      // see F.ObjectAggFallbackGroups.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.functions.F.ObjectAggFallbackGroups.toString)
-      // 197-query suite vs the 100-entry default codegen class cache:
-      // every pass recompiled every stage — see F.CodegenCacheEntries
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.functions.F.CodegenCacheEntries.toString)
-    val spark = (if (splitMb > 0) builder
-        .config("spark.sql.files.maxPartitionBytes", s"${splitMb.toLong * 1024 * 1024}")
-        .config("spark.sql.files.openCostInBytes", s"${1024 * 1024}")
-      else builder).getOrCreate()
-    // carve-scale memo demotion (see DedupOps.memoized): e.g.
-    // SPARK_GRAFT_MEMO_LEVEL=MEMORY_AND_DISK_SER
-    sys.env.get("SPARK_GRAFT_MEMO_LEVEL")
-      .foreach(l => spark.conf.set("graft.memo.level", l))
-    spark.sparkContext.setLogLevel("WARN")
+    // Spark defaults). The session's other keys: GraftSession.
+    val spark = GraftSession(sfDir)
 
     // Warm-up: JIT + whole-stage codegen + shuffle machinery + parquet
     // readers, charged to no query.
@@ -117,8 +88,7 @@ object Bench {
     // 1/read-fraction so b4-class 2-of-16-column scans stop paying 3×
     // task-scheduling overhead for p8's full-width win. The A/B
     // override keeps its fixed-config meaning (tuning off under it).
-    val tuner = new graft.functions.F.SplitTuner(spark, sfDir, splitMb,
-      enabled = splitMb > 0 && sys.env.get("SPARK_GRAFT_SPLIT_MB").isEmpty)
+    val tuner = GraftSession.splitTuner(spark, sfDir)
 
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =
       try { tuner.build(name, fn).write.format("noop").mode("overwrite").save(); true }

@@ -1,7 +1,6 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only generator (NOT driver contract) for MEMOGRAPH.md — the
   * auditable reuse topology of the 182-key API surface: which memoized
@@ -21,16 +20,9 @@ import org.apache.spark.sql.SparkSession
 object DocGen {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "MEMOGRAPH.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-docgen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
+    val spark = GraftSession(dir)
+    spark.sparkContext.setLogLevel("ERROR")
 
     val trace = graft.operators.DedupOps.MemoTrace
     trace.edges = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,37 +9,12 @@ object Verify {
     // Bench's, checked before the session starts); unset, every key is
     // verified
     val only = SparkEntry.onlyKeys(sys.env.get("SPARK_GRAFT_ONLY"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // input-sized split config — see F.autoSplitMb / the Bench comment.
-    // SPARK_GRAFT_SPLIT_MB is the same dev-only A/B override Bench
-    // honors, so a split-config experiment applies to BOTH mains and
-    // the two can never silently run different scan configs.
-    val splitMb = sys.env.get("SPARK_GRAFT_SPLIT_MB").map(_.toInt)
-      .getOrElse(graft.functions.F.autoSplitMb(sfDir))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // object-agg fallback sized to group memory, not Spark's
-      // 128-group default — see the Bench builder comment and
-      // F.ObjectAggFallbackGroups
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.functions.F.ObjectAggFallbackGroups.toString)
-      // suite-sized codegen class cache — see F.CodegenCacheEntries
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.functions.F.CodegenCacheEntries.toString)
-    val spark = (if (splitMb > 0) builder
-        .config("spark.sql.files.maxPartitionBytes", s"${splitMb.toLong * 1024 * 1024}")
-        .config("spark.sql.files.openCostInBytes", s"${1024 * 1024}")
-      else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session, split override included, so the two mains can
+    // never silently run different scan configs
+    val spark = GraftSession(sfDir)
     new java.io.File(outDir).mkdirs()
-    // same ReadSchema-sized split refinement as Bench (one SplitTuner
-    // implementation — see the Bench comment)
-    val tuner = new graft.functions.F.SplitTuner(spark, sfDir, splitMb,
-      enabled = splitMb > 0 && sys.env.get("SPARK_GRAFT_SPLIT_MB").isEmpty)
+    // same ReadSchema-sized split refinement as Bench
+    val tuner = GraftSession.splitTuner(spark, sfDir)
     // every key is written even after one fails; the failures make the
     // exit code non-zero at the end
     val failed = SparkEntry.queries.toSeq

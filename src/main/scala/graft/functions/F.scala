@@ -64,7 +64,7 @@ object F {
   val ObjectAggFallbackGroups: Int = 1 << 21
 
   /** Whole-stage-codegen class-cache size for the graft session
-    * builders (Bench/Verify and the dev mains) —
+    * ([[graft.GraftSession]]) —
     * `spark.sql.codegen.cache.maxEntries`, a STATIC conf (must be set
     * at session build). Spark's default is 100 compiled classes, sized
     * for a driver that runs a handful of distinct plans; this library's
@@ -93,16 +93,7 @@ object F {
     * cache keys on generated SOURCE TEXT, so a hit replays the
     * identical class. */
   val CodegenCacheEntries: Int =
-    sys.env.get("SPARK_GRAFT_CODEGEN_CACHE").map { v =>
-      // parse failure here surfaces as ExceptionInInitializerError on
-      // the first touch of object F — name the env var in the cause so
-      // the stack trace points at the actual misconfiguration
-      try v.trim.toInt
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_CODEGEN_CACHE must be an integer, got '$v'")
-      }
-    }.getOrElse(16384)
+    graft.GraftSession.intKnob("SPARK_GRAFT_CODEGEN_CACHE", 0).getOrElse(16384)
 
   /** Collision-proof per-data-dir tag: the sanitized dir name keeps it
     * readable, the md5-derived suffix keeps DISTINCT dirs from ever

@@ -22,9 +22,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   * same permission bits through `java.nio`; everything else is Hadoop's
   * own code, so file names, checksums and layout are unchanged.
   *
-  * It is installed per use, never session-wide: checkpoints get it
-  * through [[LocalCheckpointFileManager]], writes through
-  * [[LocalFs.writeOptions]]. */
+  * It is installed for the whole JVM: `core-site.xml` on graft's
+  * classpath sets `fs.file.impl` to this class, so every Hadoop conf
+  * (each session's, and a plain `new Configuration()`) resolves `file:`
+  * to it. The FS cache is keyed by scheme, not by conf, so with every
+  * conf naming the same class it can only ever hold this one. The same
+  * file selects [[LocalCheckpointFileManager]] for streaming
+  * checkpoints. A deployment whose own `core-site.xml` comes earlier on
+  * the classpath gets Hadoop's defaults back: the forks return, results
+  * do not change. */
 class LocalFs extends LocalFileSystem(new LocalFs.NioRawLocalFs)
 
 object LocalFs {
@@ -42,25 +48,11 @@ object LocalFs {
       catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
     }
   }
-
-  /** Hadoop conf entries that put `file:` paths on [[LocalFs]]. The FS
-    * cache is keyed by scheme and user, not by conf, so the cache must
-    * be bypassed or the JVM's cached plain local filesystem comes back.
-    * Use them only on a private conf copy or as one write's options. */
-  val writeOptions: Map[String, String] = Map(
-    "fs.file.impl" -> classOf[LocalFs].getName,
-    "fs.file.impl.disable.cache" -> "true")
-
-  /** `conf` plus [[writeOptions]], as a new conf. */
-  private[io] def confOf(conf: Configuration): Configuration = {
-    val c = new Configuration(conf)
-    writeOptions.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
 }
 
 /** Streaming checkpoint manager that keeps local checkpoints off child
-  * processes (`spark.sql.streaming.checkpointFileManagerClass`).
+  * processes (`spark.sql.streaming.checkpointFileManagerClass`, set for
+  * the whole JVM by `core-site.xml`).
   *
   * Spark's default manager goes through Hadoop's `FileContext`, whose
   * local rename probes both paths with `getFileLinkStatus`; without
@@ -77,7 +69,7 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
   private[graft] val delegate: CheckpointFileManager = {
     val scheme = Option(path.toUri.getScheme)
       .getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme)
-    if (scheme == "file") new FileSystemBasedCheckpointFileManager(path, LocalFs.confOf(hadoopConf))
+    if (scheme == "file") new FileSystemBasedCheckpointFileManager(path, hadoopConf)
     else new FileContextBasedCheckpointFileManager(path, hadoopConf)
   }
 
@@ -93,12 +85,4 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
   override def isLocal: Boolean = delegate.isLocal
   override def createCheckpointDirectory(): Path = delegate.createCheckpointDirectory()
   override def close(): Unit = delegate.close()
-}
-
-object LocalCheckpointFileManager {
-
-  /** The session conf entry that makes streaming queries started under
-    * it use this manager. */
-  val sessionSetting: (String, String) =
-    "spark.sql.streaming.checkpointFileManagerClass" -> classOf[LocalCheckpointFileManager].getName
 }

@@ -1331,17 +1331,14 @@ object AnnOps {
       // invocation-local prefix-state cache: the swept configs share
       // identical chain prefixes (see beamChain's `shared` doc); dies
       // with this call — nothing crosses invocations.
-      // SPARK_GRAFT_BEAM_SHARE=0 is the dev-only A/B override.
-      val prefixCache =
-        if (sys.env.get("SPARK_GRAFT_BEAM_SHARE").contains("0")) None
-        else Some(new java.util.concurrent.ConcurrentHashMap[
-          (String, Int, Int, Int),
-          java.util.concurrent.CompletableFuture[org.apache.spark.sql.DataFrame]]())
+      val prefixCache = new java.util.concurrent.ConcurrentHashMap[
+        (String, Int, Int, Int),
+        java.util.concurrent.CompletableFuture[org.apache.spark.sql.DataFrame]]()
       try Await.result(
         Future.sequence(BeamSweep.map { case (w, r, d) => Future {
           SparkSession.setActiveSession(spark) // thread-local; new pool thread
           val chain = beamChain(spark, dir, w, r, d, Some(panelQueries),
-            persist = true, shared = prefixCache)
+            persist = true, shared = Some(prefixCache))
           val cost = chain.probed.join(broadcast(cellSizes), "label")
             .agg(sum("n").as("candidates_scanned"))
           val ranked = (count1(chain.entryRows) +: chain.visiteds.map(count1))

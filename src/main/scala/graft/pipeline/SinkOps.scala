@@ -19,12 +19,9 @@ import graft.Tables
 object SinkOps {
 
   /** Write `kpi` partitioned by `date` (JSON like the reference by
-    * default; parquet also supported) and return the output path. A
-    * local `path` is written through [[graft.io.LocalFs]], so part files
-    * and `_temporary` directories fork no `chmod` each. */
+    * default; parquet also supported) and return the output path. */
   def writeKpiPartitioned(kpi: DataFrame, path: String, format: String = "json"): String = {
-    kpi.write.mode("overwrite").options(graft.io.LocalFs.writeOptions)
-      .format(format).partitionBy("date").save(path)
+    kpi.write.mode("overwrite").format(format).partitionBy("date").save(path)
     path
   }
 

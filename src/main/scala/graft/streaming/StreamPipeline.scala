@@ -318,9 +318,9 @@ object StreamPipeline {
   /** Starts a streaming query. Every query graft starts goes through
     * here.
     *
-    * Its checkpoint (offset and commit logs, state stores) goes through
-    * [[graft.io.LocalCheckpointFileManager]], so a local checkpoint
-    * forks no `chmod` or `readlink` per file (why: [[graft.io.LocalFs]]).
+    * Its checkpoint needs no setting: `core-site.xml` puts every local
+    * checkpoint on [[graft.io.LocalCheckpointFileManager]] (why:
+    * [[graft.io.LocalFs]]).
     *
     * `noDataBatches = false` is for the [[kpiDailyStream]] chain only:
     * it runs without Spark's no-data micro-batch, so each batch of input
@@ -332,14 +332,12 @@ object StreamPipeline {
     * chain drops fewer late rows, never more. Append- and update-mode
     * outputs need the no-data batch to emit closed windows and sessions.
     *
-    * The query reads both settings from the session copy it takes in
-    * `start()`, so they are set only around that call. */
+    * The query reads the switch from the session copy it takes in
+    * `start()`, so it is set only around that call. */
   private[graft] def startStream(spark: SparkSession, writer: DataStreamWriter[Row],
-      noDataBatches: Boolean = true): StreamingQuery = {
-    val settings = graft.io.LocalCheckpointFileManager.sessionSetting +:
-      (if (noDataBatches) Nil else Seq(NoDataBatchesKey -> "false"))
-    withSessionConf(spark, settings: _*)(writer.start())
-  }
+      noDataBatches: Boolean = true): StreamingQuery =
+    if (noDataBatches) writer.start()
+    else withSessionConf(spark, NoDataBatchesKey -> "false")(writer.start())
 
   /** Per-operator streaming FLOOR (seconds) observed by the most recent
     * materialization in this JVM: Σ over micro-batches of
@@ -353,7 +351,7 @@ object StreamPipeline {
   /** Snapshot for Bench: streaming-query short id → floor seconds. */
   def streamFloors: Map[String, Double] = floors.toMap
 
-  /** Dev-only (ScratchProf): the most recent materialization's raw
+  /** Dev-only (`graft.Dev prof`): the most recent materialization's raw
     * per-batch progress JSON per kind — the durationMs breakdown that
     * says where a streaming floor's milliseconds go. A few KB per kind;
     * no query path reads it. */
@@ -416,13 +414,8 @@ object StreamPipeline {
 
   /** A SPARK_GRAFT_STATE_PARTS value as a state store count: a positive
     * integer, or an error that names the variable. */
-  private[graft] def parseStateParts(v: String): Int = {
-    def bad = new IllegalArgumentException(
-      s"SPARK_GRAFT_STATE_PARTS must be a positive integer, got '$v'")
-    val n = try v.trim.toInt catch { case _: NumberFormatException => throw bad }
-    if (n <= 0) throw bad
-    n
-  }
+  private[graft] def parseStateParts(v: String): Int =
+    graft.GraftSession.parseKnob("SPARK_GRAFT_STATE_PARTS", 1)(v)
 
   /** Collision-proof staging dir per (operator, data dir) — the shared
     * `F.dirTag` scheme. (`hashCode`-keyed names, the original scheme,
@@ -642,8 +635,7 @@ object StreamPipeline {
       val query = startStream(spark, kpiDailyStream(spark, stagedEventsStream(spark, dir))
         .writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").options(graft.io.LocalFs.writeOptions)
-            .option("partitionOverwriteMode", "dynamic")
+          batch.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
             .partitionBy("date").parquet(out)
         }, noDataBatches = false)
       try query.processAllAvailable()

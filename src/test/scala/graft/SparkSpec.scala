@@ -6,29 +6,14 @@ import org.scalatest.Suite
 /** Shared local test session — one per JVM (suites run sequentially,
   * see build.sbt Test / parallelExecution). */
 trait SparkSpec { self: Suite =>
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // local[threads, maxFailures]: 2 attempts per task, so the
-      // transient-fault injection test (DeterminismSpec) exercises
-      // Spark's REAL retry machinery instead of failing the job —
-      // behavior is identical to local[4] unless a task throws
-      .master("local[4, 2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      // the production session's two sizing knobs, as Bench and Verify
-      // set them
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.functions.F.ObjectAggFallbackGroups.toString)
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.functions.F.CodegenCacheEntries.toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    // Bench's session (GraftSession), with local[threads, maxFailures]:
+    // 2 attempts per task, so the transient-fault injection test
+    // (DeterminismSpec) exercises Spark's REAL retry machinery instead
+    // of failing the job — behavior is identical to local[4] unless a
+    // task throws
+    GraftSession(Sf001, threads = 4, master = Some("local[4, 2]"),
+      conf = Seq("spark.sql.warehouse.dir" -> "target/spark-warehouse"))
 
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"

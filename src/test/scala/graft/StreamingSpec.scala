@@ -63,7 +63,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("streaming foreachBatch sink lands the batch-identical partitioned KPIs") {
     val noData = StreamPipeline.NoDataBatchesKey
     // every session key the start helper sets
-    val keys = Seq(noData, graft.io.LocalCheckpointFileManager.sessionSetting._1)
+    val keys = Seq(noData)
     def settings(): Seq[Option[String]] = keys.map(spark.conf.getAll.get)
     val before = settings()
     val evDf = Tables.events(spark, Sf0001)
@@ -101,8 +101,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // p9 gives back explicitly set values too. The p15 test below runs
     // after both starts and still needs the session's no-data batches
     // to close its sessions.
-    val explicit = Seq("true", classOf[org.apache.spark.sql.execution.streaming.checkpointing
-      .FileContextBasedCheckpointFileManager].getName)
+    val explicit = Seq("true")
     keys.zip(explicit).foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       assert(StreamPipeline.kpiDailyViaFileStream(spark, Sf0001).count() === batch.length)
@@ -271,8 +270,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   private val helperStart: DataStreamWriter[Row] => StreamingQuery =
     StreamPipeline.startStream(spark, _)
-  /** A start under Spark's default checkpoint manager. */
-  private val defaultStart: DataStreamWriter[Row] => StreamingQuery = _.start()
+  /** A start under Spark's default checkpoint manager, named explicitly:
+    * graft's `core-site.xml` makes graft's manager the default of every
+    * conf that does not. */
+  private val defaultStart: DataStreamWriter[Row] => StreamingQuery = w =>
+    StreamPipeline.withSessionConf(spark, "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[org.apache.spark.sql.execution.streaming.checkpointing
+        .FileContextBasedCheckpointFileManager].getName)(w.start())
   private lazy val uninterruptedTrips = checkpointedTrips(helperStart, None)
 
   test("checkpointed restart recovers matcher state and completes the KPIs") {
