@@ -64,14 +64,14 @@ object ScaleGen {
       }
     }
 
-    def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
+    def read(name: String) = Tables.raw(spark, src, name)
     // df is BY-NAME: the source read must not evaluate for unselected
     // tables, or a partial source dir (e.g. a documents+embeddings
     // carve used as the next derivation level) fails on the eager
     // read of a table the run never asked for.
     def write(df: => DataFrame, name: String): Unit = if (tables(name)) {
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"[scalegen] $name -> ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
+      println(s"[scalegen] $name -> ${Tables.raw(spark, out, name).count()} rows")
     }
 
     /** Key stride = the next power of ten PAST the key's actual max in

@@ -11,6 +11,15 @@ import org.apache.spark.sql.types._
   * (`spark.read.parquet` handles both), and all downstream operators are
   * written against the schema, not the file layout.
   *
+  * Every read is planned against a declared schema ([[rawSchema]]), so
+  * no read but the first of a table runs Spark's one-task footer job.
+  * The schema is the one Spark infers, inferred once and cached per
+  * path, keyed on the path's [[graft.io.PathStamp]] (the name, length
+  * and mtime of each data file) and on the session's parquet
+  * schema-inference settings: a table rewritten in place, or read by a
+  * session with other inference settings, is inferred again. The cache
+  * has no switch; it holds one entry per path and settings.
+  *
   * EVERY read is conformed against a per-table column/type-family
   * expectation ([[conform]]): the testdata is regenerated by an external
   * driver each round and its physical types have drifted before
@@ -137,9 +146,9 @@ object Tables {
       case _ => df
     }
 
-  /** The events-specific entry kept for streaming callers that read the
-    * raw file themselves (the stream must be planned on the RAW schema,
-    * then normalized per micro-batch through this same dispatch). */
+  /** The events-specific entry for streaming callers: a stream is
+    * planned on the RAW schema ([[rawSchema]]), then normalized per
+    * micro-batch through this same dispatch. */
   def normalizeEventsTs(df: DataFrame): DataFrame = normalizeTs(df, "ts")
 
   /** A `ts` literal worth `micros` epoch-µs in the PHYSICAL type of
@@ -155,13 +164,44 @@ object Tables {
         micros / 1000000L, (micros % 1000000L) * 1000L))
     }
 
-  /** Every table read runs through here: set `nanosAsLong` (a no-op for
-    * non-nanos files, required to read TIMESTAMP(NANOS) at all), read,
-    * conform. */
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    conform(spark.read.parquet(s"$sfDir/$name.parquet"), name)
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The session settings parquet schema inference reads: a schema
+    * inferred under one set of values is never served under another. */
+  private val InferenceSettings = Seq(NanosAsLong,
+    "spark.sql.parquet.mergeSchema", "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.caseSensitive",
+    "spark.sql.files.ignoreCorruptFiles")
+
+  private val rawSchemas = new graft.io.StampedMemo[(String, Seq[Option[String]]), StructType]
+
+  /** The schema Spark infers for table `name` under `dir`, before
+    * [[conform]]: what a stream over a staged copy of the table is
+    * planned on. Sets `nanosAsLong` (a no-op for non-nanos files,
+    * required to read TIMESTAMP(NANOS) at all) — the one place that
+    * sets it. Inferred by Spark on the first read of a path stamp and
+    * served from the cache after; a missing path is left to Spark's
+    * own read error. */
+  def rawSchema(spark: SparkSession, dir: String, name: String): StructType = {
+    spark.conf.set(NanosAsLong, "true")
+    val path = s"$dir/$name.parquet"
+    graft.io.PathStamp.of(path, spark.sparkContext.hadoopConfiguration) match {
+      case None => spark.read.parquet(path).schema
+      case Some(stamp) =>
+        rawSchemas((path, InferenceSettings.map(spark.conf.getOption)), stamp) {
+          spark.read.parquet(path).schema
+        }
+    }
   }
+
+  /** Table `name` as stored, read against its [[rawSchema]]. */
+  def raw(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(rawSchema(spark, dir, name)).parquet(s"$dir/$name.parquet")
+
+  /** Every table read runs through here: read raw, conform. */
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    conform(raw(spark, sfDir, name), name)
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")

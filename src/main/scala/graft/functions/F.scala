@@ -231,18 +231,18 @@ object F {
   }
 
   /** Top-level-column compressed byte totals from one parquet footer,
-    * memoized per path (footers are a few KB; queries re-probe the
-    * same tables every bench pass). */
-  private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
-  private def footerColBytes(
+    * memoized per path and [[graft.io.PathStamp]] (footers are a few KB;
+    * queries re-probe the same tables every bench pass, and a file
+    * rewritten at the same path is read again). */
+  private val footerCache = new graft.io.StampedMemo[String, Map[String, Long]]
+  private[graft] def footerColBytes(
       path: String,
-      conf: org.apache.hadoop.conf.Configuration): Map[String, Long] =
-    footerCache.computeIfAbsent(path, { p =>
-      import scala.jdk.CollectionConverters._
-      try {
+      conf: org.apache.hadoop.conf.Configuration): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    try graft.io.PathStamp.of(path, conf).fold(Map.empty[String, Long]) { stamp =>
+      footerCache(path, stamp) {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(p), conf)
+          .fromPath(new org.apache.hadoop.fs.Path(path), conf)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try reader.getFooter.getBlocks.asScala
           .flatMap(_.getColumns.asScala)
@@ -250,8 +250,9 @@ object F {
           .map { case (k, cs) => k -> cs.map(_.getTotalSize).sum }
           .toMap
         finally reader.close()
-      } catch { case scala.util.control.NonFatal(_) => Map.empty[String, Long] }
-    })
+      }
+    } catch { case scala.util.control.NonFatal(_) => Map.empty[String, Long] }
+  }
 
   /** Land a parquet input into a staging dir as top-level files a file
     * streaming source will list — handling BOTH physical layouts a

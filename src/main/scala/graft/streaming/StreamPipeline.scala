@@ -20,7 +20,12 @@ case class TripEvent(
 
 /** Per-user matcher state: the earliest signup seen (null until one
   * arrives) and whether the completed trip was already emitted. Two
-  * fields per user — bounded, tiny state at any scale. */
+  * fields per user, but one row for EVERY user seen so far: the
+  * NoTimeout matcher ([[StreamPipeline.matchedTrips]]) never drops a
+  * user, finished trips included, so the state grows with the number
+  * of users (a traced 62-batch trip_stream run went from 33.6k to
+  * 149.6k state rows). [[StreamPipeline.matchedTripsStandalone]] reaps
+  * it, but cannot feed another stateful operator. */
 case class TripMatchState(startTs: Timestamp, emitted: Boolean)
 
 /** A completed trip: first signup matched with the first at-or-after
@@ -49,14 +54,17 @@ case class CompletedTrip(user_id: Long, start_ts: Timestamp, end_ts: Timestamp, 
   *  - daily KPI aggregation (KPI-Aggregator.py:104-110) → event-time
   *    window aggregation over the matched trips.
   *
-  * Scale notes: every stage is keyed by user_id, so dedup, the stateful
-  * matcher and the shuffle they imply share one hash partitioning;
-  * matcher state is 2 small fields per user; watermarks bound the dedup
-  * state. Exactness caveat (inherent to single-pass streaming): results
-  * equal the batch pipeline when events arrive in event-time order per
-  * user — intra-batch disorder is handled by sorting each group's batch
-  * slice, cross-batch disorder would need retraction, which the
-  * reference (DynamoDB conditional writes) doesn't do either.
+  * Scale notes: the chain shuffles three times, once per stateful
+  * operator (`explain()` of the KPI chain): the dedup hash-partitions on
+  * event_id, the matcher on user_id (its grouping key) and the daily
+  * aggregation on the window. Matcher state is 2 small fields per user,
+  * kept for every user ever seen (see [[TripMatchState]]); watermarks
+  * bound the dedup state. Exactness caveat (inherent to single-pass
+  * streaming): results equal the batch pipeline when events arrive in
+  * event-time order per user — intra-batch disorder is handled by
+  * sorting each group's batch slice, cross-batch disorder would need
+  * retraction, which the reference (DynamoDB conditional writes)
+  * doesn't do either.
   */
 object StreamPipeline {
 
@@ -83,7 +91,8 @@ object StreamPipeline {
     * trips), split the query at this boundary: run the matcher with
     * EventTimeTimeout into a foreachBatch/Kafka sink and aggregate in a
     * second query, exactly like the reference splits Lambda (match) from
-    * Glue (aggregate). State here is 2 fields per user either way. */
+    * Glue (aggregate). State is 2 fields per user either way; here it
+    * keeps a row for every user ever seen. */
   def matchedTrips(spark: SparkSession, events: DataFrame): Dataset[CompletedTrip] = {
     import spark.implicits._
     dedupedEvents(events)
@@ -206,8 +215,7 @@ object StreamPipeline {
     val streamDir = java.nio.file.Paths.get(stagingPath("p15", dir))
     graft.functions.F.stageParquet(
       s"$dir/events.parquet", streamDir.toString, "events")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = graft.Tables.raw(spark, dir, "events")
     // typed max via the shared normalizer — the raw physical ts type is
     // Tables' concern, not ours (graft.Tables.normalizeEventsTs)
     val maxMicros = graft.Tables.normalizeEventsTs(raw)
@@ -442,10 +450,8 @@ object StreamPipeline {
       graft.functions.F.stageParquet(
         s"$dir/events.parquet", streamDir.toString, "events")
     }
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(rawSchema).parquet(streamDir.toString))
+    graft.Tables.normalizeEventsTs(spark.readStream
+      .schema(graft.Tables.rawSchema(spark, dir, "events")).parquet(streamDir.toString))
   }
 
   /** Wire partition count for the p30 staged Kafka-shaped input. 32 —
@@ -831,8 +837,7 @@ object StreamPipeline {
   private[graft] def streamedWindowCounts(spark: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.TripPipeline
     val streamDir = java.nio.file.Paths.get(stagingPath("p35", dir))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = graft.Tables.raw(spark, dir, "events")
     graft.functions.F.landOnce(streamDir.toString,
         Seq("evens", "tick", "odds", "flush").map(n =>
           streamDir.resolve(s"$n.parquet").toString)) {
@@ -1052,7 +1057,7 @@ object StreamPipeline {
       streamDir.resolve(stagedMarkerName("documents")).toString) {
       stageParquet(s"$dir/documents.parquet", streamDir.toString, "documents")
     }
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.rawSchema(spark, dir, "documents")
     val p = DedupOps.P
     // the SAME md5-derived permutation coefficients as
     // DedupOps.minhashSig, derived via the one driver-side hash mirror
@@ -1159,7 +1164,7 @@ object StreamPipeline {
       streamDir.resolve(stagedMarkerName("embeddings")).toString) {
       stageParquet(s"$dir/embeddings.parquet", streamDir.toString, "embeddings")
     }
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
+    val schema = graft.Tables.rawSchema(spark, dir, "embeddings")
     val dot = dotBest(spark)
     // static per-cell eval index: array_sort on the (eval_id, eq, e_n2)
     // structs orders by eval_id — the fold's tie-break order
@@ -1233,7 +1238,7 @@ object StreamPipeline {
       streamDir.resolve(stagedMarkerName("documents")).toString) {
       stageParquet(s"$dir/documents.parquet", streamDir.toString, "documents")
     }
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.rawSchema(spark, dir, "documents")
     val arrivals = spark.readStream.schema(schema).parquet(streamDir.toString)
       .withColumn("t", graft.functions.F.tokens(col("text")))
     val out = TextOps.withPredLang(TextOps.withQuality(arrivals))

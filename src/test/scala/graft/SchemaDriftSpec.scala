@@ -72,6 +72,15 @@ class SchemaDriftSpec extends AnyFunSuite with SparkSpec {
     identicalUnderDrift("e1_ann_topk")
   }
 
+  test("every table's cached read schema is the one Spark infers") {
+    for (dir <- Seq(Sf0001, driftDir); t <- Tables.all) {
+      val cached = Tables.rawSchema(spark, dir, t)
+      val inferred = spark.read.parquet(s"$dir/$t.parquet").schema
+      assert(cached === inferred, s"$dir/$t")
+      assert(Tables.raw(spark, dir, t).schema === inferred, s"$dir/$t")
+    }
+  }
+
   test("cross-family drift fails loudly naming the column") {
     val docs = Tables.documents(spark, Sf0001)
     val bad = docs.withColumn("text", lit(1L))
