@@ -34,6 +34,17 @@ object Bench {
   def reps(env: collection.Map[String, String] = sys.env): Int =
     GraftSession.intKnob("SPARK_GRAFT_REPS", 1, env).getOrElse(DefaultReps)
 
+  /** `SPARK_GRAFT_GC_EACH`: forced GC between timed queries — `1`
+    * before every query, `0` never; unset (None), ADAPTIVE: only when
+    * used heap crosses half of max. */
+  def gcEach(env: collection.Map[String, String] = sys.env): Option[Boolean] =
+    GraftSession.flagKnob("SPARK_GRAFT_GC_EACH", env)
+
+  /** `SPARK_GRAFT_FAMILY_MAJOR=1`: warm, time and release one family at a
+    * time (see main); `0` or unset keeps the global interleave. */
+  def familyMajor(env: collection.Map[String, String] = sys.env): Boolean =
+    GraftSession.flagKnob("SPARK_GRAFT_FAMILY_MAJOR", env).getOrElse(false)
+
   def main(args: Array[String]): Unit = {
     // dev-only filter for isolating queries while iterating
     // (SPARK_GRAFT_ONLY=d2_ngram_jaccard,d7_winnow); unset, every key is
@@ -41,6 +52,8 @@ object Bench {
     val only = SparkEntry.onlyKeys(sys.env.get("SPARK_GRAFT_ONLY"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val Reps = reps()
+    val gcMode = gcEach()
+    val byFamily = familyMajor()
     // Scan-split sizing for the local harness: snappy parquet with
     // string-heavy columns (events.props JSON) decodes at 5-20× its
     // stored bytes of CPU, so the 128 MB/4 MB defaults leave a big
@@ -119,12 +132,11 @@ object Bench {
     // round-9 experiment was actually about), which skips the forced
     // pause for the majority of light queries. SPARK_GRAFT_GC_EACH=1
     // restores every-query GC; =0 disables forced GC entirely.
-    val gcMode = sys.env.getOrElse("SPARK_GRAFT_GC_EACH", "adaptive")
     val maxHeap = Runtime.getRuntime.maxMemory
     def maybeGc(): Unit = gcMode match {
-      case "0" => ()
-      case "1" => System.gc()
-      case _ =>
+      case Some(false) => ()
+      case Some(true) => System.gc()
+      case None =>
         val used = heapPools().map(_.getUsage.getUsed).sum
         if (used * 2 > maxHeap) System.gc()
     }
@@ -151,13 +163,12 @@ object Bench {
     // off: the driver's sf0.1 bench keeps the global interleave
     // (substrates there are small, and cross-pass spike robustness
     // matters more than heap headroom).
-    val familyMajor = sys.env.get("SPARK_GRAFT_FAMILY_MAJOR").contains("1")
     val calPre = Seq.fill(3)(calOnce())
     val warmT0 = System.nanoTime()
     // pass 0: substrate/cache warm pass, untimed (per family when
     // family-major — see above)
     val warmOks = scala.collection.mutable.Map.empty[String, Boolean]
-    if (!familyMajor)
+    if (!byFamily)
       selected.foreach { case (name, fn) => warmOks(name) = runOnce(name, fn) }
     // telemetry window = the timed passes only (warm-pass substrate
     // builds are charged to no query, so their GC isn't either). In
@@ -182,7 +193,7 @@ object Bench {
         }.toMap
       }
     val passes: Seq[Map[String, (Double, Boolean)]] =
-      if (!familyMajor) runPasses(selected)
+      if (!byFamily) runPasses(selected)
       else selected.groupBy(_._1.head).toSeq.sortBy(_._1).flatMap { case (_, fam) =>
         // family-scoped warm pass (substrate builds untimed, as ever)
         fam.foreach { case (name, fn) => warmOks(name) = runOnce(name, fn) }

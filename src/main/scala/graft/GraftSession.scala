@@ -13,8 +13,9 @@ import graft.functions.F
   * [[graft.io.LocalFs]] and every streaming checkpoint on
   * [[graft.io.LocalCheckpointFileManager]] (why: [[graft.io.LocalFs]]).
   *
-  * The session's `SPARK_GRAFT_*` integers are read through [[intKnob]],
-  * which names the variable when its value is not a valid integer. */
+  * The session's `SPARK_GRAFT_*` knobs are read through [[intKnob]],
+  * [[flagKnob]] and [[memoLevel]], which name the variable when its
+  * value is not valid, before any session starts. */
 object GraftSession {
 
   /** Bench's session over `dataDir`: `master` (default `local[threads]`)
@@ -26,6 +27,7 @@ object GraftSession {
     * scale). `conf` adds keys that belong to one caller only. */
   def apply(dataDir: String, threads: Int = cpus(), master: Option[String] = None,
       conf: Seq[(String, String)] = Nil): SparkSession = {
+    val level = memoLevel()
     val mb = splitMb(dataDir)
     val split =
       if (mb > 0) Seq(
@@ -45,7 +47,7 @@ object GraftSession {
     val spark = keys.foldLeft(SparkSession.builder().master(master.getOrElse(s"local[$threads]"))) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
-    sys.env.get("SPARK_GRAFT_MEMO_LEVEL").foreach(l => spark.conf.set("graft.memo.level", l))
+    level.foreach(l => spark.conf.set("graft.memo.level", l))
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -53,6 +55,17 @@ object GraftSession {
   /** `SPARK_GRAFT_CPUS`: local threads and shuffle partitions (default 4). */
   def cpus(env: collection.Map[String, String] = sys.env): Int =
     intKnob("SPARK_GRAFT_CPUS", 1, env).getOrElse(4)
+
+  /** `SPARK_GRAFT_MEMO_LEVEL`: a storage level name
+    * (`StorageLevel.fromString`) for memoized substrates, if set. */
+  def memoLevel(env: collection.Map[String, String] = sys.env): Option[String] =
+    env.get("SPARK_GRAFT_MEMO_LEVEL").map { v =>
+      try { org.apache.spark.storage.StorageLevel.fromString(v); v }
+      catch {
+        case _: IllegalArgumentException => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_MEMO_LEVEL must name a storage level (e.g. MEMORY_AND_DISK_SER), got '$v'")
+      }
+    }
 
   /** `SPARK_GRAFT_SPLIT_MB`: the dev A/B override of the input-sized scan
     * split, in MB; 0 keeps Spark's defaults. */
@@ -74,6 +87,14 @@ object GraftSession {
   /** The integer knob `name` of `env`, if set. */
   def intKnob(name: String, min: Int, env: collection.Map[String, String] = sys.env): Option[Int] =
     env.get(name).map(parseKnob(name, min))
+
+  /** The 0/1 knob `name` of `env`, if set, or an error that names it. */
+  def flagKnob(name: String, env: collection.Map[String, String]): Option[Boolean] =
+    env.get(name).map(_.trim match {
+      case "0" => false
+      case "1" => true
+      case v => throw new IllegalArgumentException(s"$name must be 0 or 1, got '$v'")
+    })
 
   /** `v` as an integer of at least `min`, or an error that names `name`. */
   def parseKnob(name: String, min: Int)(v: String): Int = {

@@ -333,55 +333,26 @@ object F {
     * `dstDir/this` (not the bare dstDir) as the [[landOnce]] artifact. */
   def stagedMarkerName(baseName: String): String = s"_staged_$baseName"
 
-  /** Per-key completion latches of builds landed by THIS JVM
-    * (see [[landOnce]]). */
-  private val landed =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[Void]]()
+  /** Builds landed by THIS JVM, per key (see [[landOnce]]). */
+  private val landed = new graft.Once[String, Unit](identity)
 
   /** Single-artifact convenience overload of [[landOnce]]. */
   def landOnce(key: String, artifact: String)(build: => Unit): Unit =
     landOnce(key, Seq(artifact))(build)
 
-  /** Runs `build` at most once per JVM per key — atomically (a second
-    * concurrent caller awaits the winner's completion latch instead of
-    * racing a duplicate overwrite into the same directory) — and again
-    * if ANY of `artifacts` (the directories the build must land) has
-    * been cleaned from disk since, so a partially wiped target/ heals
-    * instead of serving a missing sibling path. The map operation only
-    * installs the latch (putIfAbsent — short, no bin lock held across
-    * the multi-second Spark job), so a re-entrant landOnce from inside
-    * a build, or an unrelated key hashing to the same bin, can never
-    * deadlock on the map (the round-7 advice hazard). The heal check
-    * only evicts COMPLETED latches: an in-flight build's artifacts
-    * legitimately don't exist yet. A build that throws leaves no
-    * mapping (the next caller retries) and propagates the raw failure
-    * to every waiter. Used by every operator whose MEASURED work is
-    * maintenance/serving over a landed artifact (e10-e14, p32): the
-    * landing is setup, charged to no timed pass after the first. */
-  def landOnce(key: String, artifacts: Seq[String])(build: => Unit): Unit = {
-    val cur = landed.get(key)
-    if (cur != null && cur.isDone &&
-        artifacts.exists(a => !new java.io.File(a).exists()))
-      landed.remove(key, cur)
-    val mine = new java.util.concurrent.CompletableFuture[Void]()
-    val prior = landed.putIfAbsent(key, mine)
-    if (prior == null) {
-      try { build; mine.complete(null) }
-      catch {
-        case e: Throwable =>
-          landed.remove(key, mine)
-          mine.completeExceptionally(e)
-          throw e
-      }
-    } else {
-      try prior.join()
-      catch {
-        case e: java.util.concurrent.CompletionException =>
-          throw Option(e.getCause).getOrElse(e)
-      }
-    }
-    ()
-  }
+  /** Runs `build` at most once per JVM per key ([[graft.Once]]: a second
+    * concurrent caller awaits the winner instead of racing a duplicate
+    * overwrite into the same directory, and a failed build is run again
+    * by the next caller) — and again if ANY of `artifacts` (the
+    * directories the build must land) has been cleaned from disk since
+    * it completed, so a partially wiped target/ heals instead of
+    * serving a missing sibling path. An in-flight build is never
+    * evicted: its artifacts legitimately don't exist yet. Used by every
+    * operator whose MEASURED work is maintenance/serving over a landed
+    * artifact (e10-e14, p32): the landing is setup, charged to no timed
+    * pass after the first. */
+  def landOnce(key: String, artifacts: Seq[String])(build: => Unit): Unit =
+    landed(key, _ => artifacts.exists(a => !new java.io.File(a).exists()))(build)
 
   /** hash60 over a CALLER-OWNED MessageDigest — the per-partition hot
     * path (m2 frame sampling) hoists one instance per partition and

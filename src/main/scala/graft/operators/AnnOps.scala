@@ -614,6 +614,40 @@ object AnnOps {
       k)
   }
 
+  /** Lands a code relation into a `label=<cell>/` parquet lake with the
+    * rows CLUSTERED on the partition column first. Without the cluster
+    * a dynamic-partition write fans out |tasks| × |cells| files — at
+    * the 1.28M-vector carve that is 32 × 5120 ≈ 164k four-row files,
+    * and the driver's single-threaded commit walk over them dominates
+    * the build (the small-files catastrophe; at 1000 executors it
+    * would be 160M files per index version). Hash-clustering on label
+    * sends each cell to exactly ONE task → one file per cell
+    * directory; Spark's planned write sorts cells within the task, so
+    * writer memory stays one open file. */
+  private def writeCells(codes: DataFrame, path: String): Unit =
+    codes.repartition(col("label"))
+      .write.mode("overwrite").partitionBy("label").parquet(path)
+
+  /** Lands the e10 index artifacts (first call per JVM per dir, see
+    * [[graft.functions.F.landOnce]]) and returns the index root — shared
+    * by the batch-serving e10 and the single-request e12 paths. Serving
+    * calls after the first skip the rewrite, so repeated bench passes
+    * measure the SERVING path; the artifacts are a deterministic
+    * function of the dir, so skipping can only skip an identical
+    * rewrite. */
+  private def buildPersistedIndex(spark: SparkSession, dir: String): String = {
+    val out = graft.functions.F.sinkPath("annindex", dir)
+    landOnce(out, Seq(s"$out/centroids", s"$out/codes")) {
+      centroids(spark, dir).write.mode("overwrite").parquet(s"$out/centroids")
+      writeCells(pqCodes(spark, dir), s"$out/codes")
+      // a previous run's cached file listing would point at deleted
+      // files after the overwrite (the p29 lesson)
+      spark.catalog.refreshByPath(s"$out/centroids")
+      spark.catalog.refreshByPath(s"$out/codes")
+    }
+    out
+  }
+
   /** e10: the PERSISTED vector index — a production vector search does
     * not rebuild its index per session: the IVF centroid table and the
     * PQ code inverted file are LAKE ARTIFACTS, built once and read by
@@ -632,46 +666,6 @@ object AnnOps {
     * `centroids/` (tiny, broadcast) + the probed `label=` directories.
     * Incremental corpora append new cell directories; re-clustering is
     * a rebuild, as in any IVF system. */
-  /** Index builds are once per corpus version (here: per data dir);
-    * serving calls after the first skip the rewrite, so e10/e12's
-    * repeated bench passes measure the SERVING path the scaladocs
-    * claim, not the build. The artifacts are a deterministic function
-    * of the dir, so skipping can only ever skip an identical rewrite.
-    * (The once-per-JVM machinery itself is [[graft.functions.F.landOnce]],
-    * shared with p32's lake landing.) */
-  private def landOnce(key: String, artifacts: Seq[String])(build: => Unit): Unit =
-    graft.functions.F.landOnce(key, artifacts)(build)
-
-  /** Lands a code relation into a `label=<cell>/` parquet lake with the
-    * rows CLUSTERED on the partition column first. Without the cluster
-    * a dynamic-partition write fans out |tasks| × |cells| files — at
-    * the 1.28M-vector carve that is 32 × 5120 ≈ 164k four-row files,
-    * and the driver's single-threaded commit walk over them dominates
-    * the build (the small-files catastrophe; at 1000 executors it
-    * would be 160M files per index version). Hash-clustering on label
-    * sends each cell to exactly ONE task → one file per cell
-    * directory; Spark's planned write sorts cells within the task, so
-    * writer memory stays one open file. */
-  private def writeCells(codes: DataFrame, path: String): Unit =
-    codes.repartition(col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(path)
-
-  /** Lands the e10 index artifacts (first call per JVM per dir) and
-    * returns the index root — shared by the batch-serving e10 and the
-    * single-request e12 paths. */
-  private def buildPersistedIndex(spark: SparkSession, dir: String): String = {
-    val out = graft.functions.F.sinkPath("annindex", dir)
-    landOnce(out, Seq(s"$out/centroids", s"$out/codes")) {
-      centroids(spark, dir).write.mode("overwrite").parquet(s"$out/centroids")
-      writeCells(pqCodes(spark, dir), s"$out/codes")
-      // a previous run's cached file listing would point at deleted
-      // files after the overwrite (the p29 lesson)
-      spark.catalog.refreshByPath(s"$out/centroids")
-      spark.catalog.refreshByPath(s"$out/codes")
-    }
-    out
-  }
-
   def annPersistedIndex(spark: SparkSession, dir: String, k: Int = 3,
       nProbe: Int = NProbe): DataFrame = {
     val out = buildPersistedIndex(spark, dir)
@@ -1118,32 +1112,6 @@ object AnnOps {
   private[graft] case class BeamChain(queries: DataFrame, entryRows: DataFrame,
       visiteds: Seq[DataFrame], probed: DataFrame)
 
-  /** Single evaluation per key of `cache`, first caller wins: losers
-    * await the winner's future (the DedupOps.memoized discipline). A
-    * failure propagates raw to every waiter, which is correct: they
-    * were about to compute the identical thing. A failed build leaves
-    * no mapping, so the next caller of the key builds again. */
-  private[operators] def buildOnce[K, V](
-      cache: java.util.concurrent.ConcurrentHashMap[K, java.util.concurrent.CompletableFuture[V]],
-      key: K)(build: => V): V = {
-    val mine = new java.util.concurrent.CompletableFuture[V]()
-    val prior = cache.putIfAbsent(key, mine)
-    if (prior == null) {
-      try { val v = build; mine.complete(v); v }
-      catch {
-        case e: Throwable =>
-          cache.remove(key, mine)
-          mine.completeExceptionally(e)
-          throw e
-      }
-    } else
-      try prior.join()
-      catch {
-        case e: java.util.concurrent.CompletionException =>
-          throw Option(e.getCause).getOrElse(e)
-      }
-  }
-
   /** @param width    beam width (frontier size per round)
     * @param rounds   expansion rounds (unrolled)
     * @param degree   graph out-degree read from [[cellGraph]]'s top-
@@ -1165,20 +1133,17 @@ object AnnOps {
     *                 v0 depends on width alone ((4,1,4)/(4,2,4)/(4,2,8)
     *                 share it) and visited(1) on (width, degree)
     *                 ((4,1,4) is a strict prefix of (4,2,4)). Single
-    *                 evaluation per key via cached futures (the
-    *                 memoized discipline); rows are by construction
-    *                 identical to the unshared build — every rank is
-    *                 total-ordered. The cache object lives only for one
-    *                 annBeamEval call: nothing is reused across
-    *                 invocations or bench passes. None (e24's serving
-    *                 path) = exactly the old plan. */
+    *                 evaluation per key ([[graft.Once]]); rows are by
+    *                 construction identical to the unshared build —
+    *                 every rank is total-ordered. The cache object
+    *                 lives only for one annBeamEval call: nothing is
+    *                 reused across invocations or bench passes. None
+    *                 (e24's serving path) = exactly the old plan. */
   private[graft] def beamChain(spark: SparkSession, dir: String,
       width: Int = BeamWidth, rounds: Int = BeamRounds,
       degree: Int = BeamDegree, queriesOpt: Option[DataFrame] = None,
       persist: Boolean = false,
-      shared: Option[java.util.concurrent.ConcurrentHashMap[
-        (String, Int, Int, Int),
-        java.util.concurrent.CompletableFuture[DataFrame]]] = None): BeamChain = {
+      shared: Option[graft.Once[(String, Int, Int, Int), DataFrame]] = None): BeamChain = {
     require(degree <= BeamDegreeMax, s"degree $degree > BeamDegreeMax $BeamDegreeMax")
     val dot = dotBest(spark)
     val qv = quantized(spark, dir)
@@ -1215,7 +1180,7 @@ object AnnOps {
     def sharedState(tag: String, r: Int, deg: Int)(build: => DataFrame): DataFrame =
       shared match {
         case None => build
-        case Some(cache) => buildOnce(cache, (tag, width, r, deg))(build)
+        case Some(cache) => cache((tag, width, r, deg))(build)
       }
     val entryRows = queries.select("q_id").crossJoin(broadcast(entries))
     // under sharing, v0 is barriered so the sharers reuse its COMPUTE,
@@ -1316,14 +1281,11 @@ object AnnOps {
     // Build them CONCURRENTLY (the guide's overlap-independent-jobs
     // discipline): each chain's barrier jobs back-fill the idle slots of
     // the others' tails; at carve scale the same overlap fills the
-    // cluster during each chain's small-relation rounds. The shared
-    // substrate (cellGraph) is touched ONCE before forking —
-    // DedupOps.memoized's getOrElseUpdate is atomic for the map but a
-    // concurrent first build would run `build` twice and leak a persist,
-    // so the substrate must be warm before threads race to read it.
-    // Row content is identical to the sequential form: per-chain results
-    // never depend on scheduling.
-    cellGraph(spark, dir)
+    // cluster during each chain's small-relation rounds. The chains'
+    // first calls of the shared memoized substrates (cellGraph) build
+    // each one once; the other chains wait for it. Row content is
+    // identical to the sequential form: per-chain results never depend
+    // on scheduling.
     val beamRows = {
       import scala.concurrent.{Await, ExecutionContext, Future}
       val pool = java.util.concurrent.Executors.newFixedThreadPool(BeamSweep.size)
@@ -1331,9 +1293,8 @@ object AnnOps {
       // invocation-local prefix-state cache: the swept configs share
       // identical chain prefixes (see beamChain's `shared` doc); dies
       // with this call — nothing crosses invocations.
-      val prefixCache = new java.util.concurrent.ConcurrentHashMap[
-        (String, Int, Int, Int),
-        java.util.concurrent.CompletableFuture[org.apache.spark.sql.DataFrame]]()
+      val prefixCache = new graft.Once[(String, Int, Int, Int), DataFrame](
+        k => s"e25_${k._1}_w${k._2}_r${k._3}_d${k._4}")
       try Await.result(
         Future.sequence(BeamSweep.map { case (w, r, d) => Future {
           SparkSession.setActiveSession(spark) // thread-local; new pool thread

@@ -21,14 +21,16 @@ object BucketOps {
     * layout the first is reading; a NEW context starts with an empty
     * catalog, so its key misses and the layout rebuilds (a plain
     * JVM-global key would skip the rebuild and leave b1 reading tables
-    * that no longer exist). [[clearBuilt]] forces rebuilds — the
+    * that no longer exist). Concurrent first callers share one build
+    * ([[graft.Once]]) instead of dropping and rewriting the same tables
+    * under each other. [[clearBuilt]] forces rebuilds — the
     * BucketingSpec rebuild test exercises it. */
   private val built =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.SparkContext, String), Unit]
+    new graft.Once[(org.apache.spark.SparkContext, String), Unit](k => s"b1_layout_${k._2}")
 
   /** Forget every completed layout build (the tables themselves stay in
     * the catalog) — the lifecycle hook mirroring DedupOps.clearMemo. */
-  def clearBuilt(): Unit = built.clear()
+  def clearBuilt(): Unit = built.removeWhere(_ => true)
 
   /** Collision-proof table suffix for a data dir — the shared
     * `F.dirTag` scheme. LOWERCASED there too: the catalog lowercases
@@ -62,7 +64,7 @@ object BucketOps {
     val suffix = dirSuffix(dir)
     val ordT = s"graft_b_orders_$suffix"
     val liT = s"graft_b_lineitem_$suffix"
-    built.getOrElseUpdate((spark.sparkContext, suffix), {
+    built((spark.sparkContext, suffix)) {
       Seq(ordT, liT).foreach(dropTableAndDir(spark, _))
       Tables.orders(spark, dir).write
         .bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
@@ -70,7 +72,7 @@ object BucketOps {
       Tables.lineitem(spark, dir).write
         .bucketBy(Buckets, "l_orderkey").sortBy("l_orderkey")
         .format("parquet").mode("overwrite").saveAsTable(liT)
-    })
+    }
     spark.table(ordT)
       .join(spark.table(liT), col("o_orderkey") === col("l_orderkey"))
       .groupBy("o_orderpriority")

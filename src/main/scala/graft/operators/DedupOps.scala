@@ -33,104 +33,29 @@ object DedupOps {
   /** Session-scoped memo of persisted intermediate DataFrames, so the
     * same signature build is materialized once per (session, sfDir) even
     * when several operators (d2/d3 share docNgrams; e2/e3 share buckets)
-    * or both sides of a self-join need it. */
-  private type MemoKey = (SparkSession, String, String)
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[MemoKey, java.util.concurrent.CompletableFuture[DataFrame]]
-  /** The wait-for graph of in-flight builds: which thread builds each
-    * entry, and which entry each blocked thread waits on. */
-  private val builders = new java.util.concurrent.ConcurrentHashMap[MemoKey, Thread]()
-  private val waiting = new java.util.concurrent.ConcurrentHashMap[Thread, MemoKey]()
+    * or both sides of a self-join need it. Concurrent first callers of a
+    * key share one build, a failed build is built again by the next
+    * caller, and a build that waits on itself fails naming the keys
+    * ([[graft.Once]]). */
+  private val memo = new graft.Once[(SparkSession, String, String), DataFrame](_._2)
   private[operators] def memoized(spark: SparkSession, key: String, dir: String)(
       build: => DataFrame): DataFrame = {
     MemoTrace.record(key)
-    val k = (spark, key, dir)
-    // SINGLE-EVALUATION under races, enforced by code (cached-future —
-    // the landOnce discipline): TrieMap.getOrElseUpdate may run `build`
-    // twice when two threads race a cold key, and the losing build's
-    // persist leaks for the session lifetime. Callers that fork threads
-    // over shared substrates (annBeamEval) used to depend on a
-    // warm-before-fork comment; now the loser just awaits the winner's
-    // future. A build that throws leaves no mapping (next caller
-    // retries) and propagates the raw failure to every waiter. The
-    // putIfAbsent holds no bin lock across the build, so nested
-    // memoized builds (docNgrams inside d3's substrate) cannot
-    // deadlock on the map; a build that waits on itself, directly or
-    // through another thread's build, fails in joinMemo instead.
-    memo.get(k) match {
-      case Some(done) => joinMemo(k, done)
-      case None =>
-        val mine = new java.util.concurrent.CompletableFuture[DataFrame]()
-        memo.putIfAbsent(k, mine) match {
-          case Some(prior) => joinMemo(k, prior)
-          case None =>
-            builders.put(k, Thread.currentThread())
-            try {
-              MemoTrace.push(key)
-              // Storage level is a session knob (`graft.memo.level`): the
-              // default deserialized MEMORY_AND_DISK is right for the driver's
-              // SFs, but a carve-scale suite co-residing many array-heavy
-              // substrates in ONE local JVM runs the heap to its ceiling
-              // (round 15: 46 of 48 GB, 21.7 s GC at n = 1.28M) —
-              // MEMORY_AND_DISK_SER stores the long-array rows packed,
-              // trading per-read deserialization CPU for the headroom the
-              // n = 10⁷ decade needs. On a cluster substrates partition
-              // across executors and the default stands.
-              val level = spark.conf.getOption("graft.memo.level")
-                .map(StorageLevel.fromString).getOrElse(StorageLevel.MEMORY_AND_DISK)
-              val df = try build.persist(level) finally MemoTrace.pop()
-              builders.remove(k)
-              mine.complete(df)
-              df
-            } catch {
-              case e: Throwable =>
-                builders.remove(k)
-                memo.remove(k, mine)
-                mine.completeExceptionally(e)
-                throw e
-            }
-        }
+    memo((spark, key, dir)) {
+      // Storage level is a session knob (`graft.memo.level`): the
+      // default deserialized MEMORY_AND_DISK is right for the driver's
+      // SFs, but a carve-scale suite co-residing many array-heavy
+      // substrates in ONE local JVM runs the heap to its ceiling
+      // (round 15: 46 of 48 GB, 21.7 s GC at n = 1.28M) —
+      // MEMORY_AND_DISK_SER stores the long-array rows packed,
+      // trading per-read deserialization CPU for the headroom the
+      // n = 10⁷ decade needs. On a cluster substrates partition
+      // across executors and the default stands.
+      val level = spark.conf.getOption("graft.memo.level")
+        .map(StorageLevel.fromString).getOrElse(StorageLevel.MEMORY_AND_DISK)
+      MemoTrace.push(key)
+      try build.persist(level) finally MemoTrace.pop()
     }
-  }
-
-  /** Waits for entry `k`'s build. If that build waits, through any chain
-    * of other threads' builds, on one this thread runs (or is this
-    * thread's own build), nobody would ever finish: throws an error
-    * naming the keys instead. The failure then completes every build on
-    * the cycle exceptionally, so no thread on it hangs. */
-  private def joinMemo(k: MemoKey,
-      f: java.util.concurrent.CompletableFuture[DataFrame]): DataFrame = {
-    val me = Thread.currentThread()
-    waiting.put(me, k)
-    try {
-      if (!f.isDone) waitCycle(me, k).foreach { keys =>
-        throw new IllegalStateException("memo wait cycle: " +
-          (keys :+ keys.head).map(_._2).mkString(" -> ") +
-          " (each key's build waits on the next one's)")
-      }
-      f.join()
-    } catch {
-      case e: java.util.concurrent.CompletionException =>
-        throw Option(e.getCause).getOrElse(e)
-    } finally waiting.remove(me)
-  }
-
-  /** The keys on a wait-for path from `k`'s builder back to `me`, `k`
-    * first, if there is one. Registering the wait before the walk means
-    * that of two threads closing a cycle at once, the later one sees
-    * it. */
-  private def waitCycle(me: Thread, k: MemoKey): Option[List[MemoKey]] = {
-    @scala.annotation.tailrec
-    def walk(key: MemoKey, path: List[MemoKey], seen: Set[Thread]): Option[List[MemoKey]] =
-      Option(builders.get(key)) match {
-        case Some(t) if t eq me => Some((key :: path).reverse)
-        case Some(t) if !seen(t) => Option(waiting.get(t)) match {
-          case Some(next) => walk(next, key :: path, seen + t)
-          case None => None
-        }
-        case _ => None
-      }
-    walk(k, Nil, Set.empty)
   }
 
   /** Dev-only memo-topology recorder (see [[graft.DocGen]]): when
@@ -160,31 +85,19 @@ object DedupOps {
   /** Release every memoized persist for a session — call between
     * experiments (the determinism tests do) or before retiring a
     * long-lived session; otherwise the memo pins its signature builds
-    * for the session lifetime by design (they are re-read per query). */
-  def clearMemo(spark: SparkSession): Unit = {
-    memo.keys.filter(_._1 eq spark).foreach { k =>
-      memo.remove(k).foreach(unpersistWhenBuilt)
-    }
-  }
+    * for the session lifetime by design (they are re-read per query).
+    * A clear racing an in-flight build unpersists it once it is built. */
+  def clearMemo(spark: SparkSession): Unit =
+    memo.removeWhere(_._1 eq spark, unpersist)
 
-  /** Unpersist a memo entry's DataFrame once its build completes — a
-    * clear racing an in-flight build must not skip the unpersist (the
-    * callback runs immediately for the common already-done case; a
-    * failed build has nothing persisted). */
-  private def unpersistWhenBuilt(
-      f: java.util.concurrent.CompletableFuture[DataFrame]): Unit = {
-    f.thenAccept(df => df.unpersist(blocking = false): Unit): Unit
-  }
+  private def unpersist(df: DataFrame): Unit = df.unpersist(blocking = false): Unit
 
   /** Release only the persists built for one data directory — the memo
     * lifecycle hook for long-lived sessions that sweep many dirs
     * (Verify/Bench call this after finishing a dir, so the session never
     * pins more than one dir's substrates at a time). */
-  def clearMemo(spark: SparkSession, dir: String): Unit = {
-    memo.keys.filter(k => (k._1 eq spark) && k._3 == dir).foreach { k =>
-      memo.remove(k).foreach(unpersistWhenBuilt)
-    }
-  }
+  def clearMemo(spark: SparkSession, dir: String): Unit =
+    memo.removeWhere(k => (k._1 eq spark) && k._3 == dir, unpersist)
 
   /** Token 3-gram array (empty when the doc has < 3 tokens). */
   private def ngramsExpr: Column = expr(

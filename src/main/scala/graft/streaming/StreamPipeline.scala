@@ -437,8 +437,8 @@ object StreamPipeline {
     * the unbounded-input surface for the oracle-checked streaming
     * operators (p9, p13). The staging is scaffolding (a deterministic
     * copy of the dir's events parquet), not the operator, so it runs
-    * under the shared F.landOnce discipline (once per JVM per dir,
-    * heals a cleaned target/) — ten streaming operators × four bench
+    * through F.landOnce ([[graft.Once]]: once per JVM per dir, heals a
+    * cleaned target/) — ten streaming operators × four bench
     * passes must not pay forty identical copies. */
   private def stagedEventsStream(spark: SparkSession, dir: String): DataFrame = {
     val streamDir = java.nio.file.Paths.get(stagingPath("p9", dir))
@@ -478,7 +478,7 @@ object StreamPipeline {
   /** The staging is test/verify scaffolding (a deterministic function
     * of the dir), not the operator; repeated p30 calls should measure
     * the INGESTION, not a rewrite of the same parquet — so the landing
-    * runs under the shared F.landOnce discipline (once per JVM per dir,
+    * runs through F.landOnce ([[graft.Once]]: once per JVM per dir,
     * atomic, heals a cleaned target/). */
   private def stagedWireStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.KafkaEvents
@@ -724,21 +724,9 @@ object StreamPipeline {
     * verbatim. */
   def kpiAnomalyStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val counts = stagedEventsStream(spark, dir)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .groupBy(col("event_type"), to_date(col("ts")).as("date"))
-        .agg(count(lit(1)).as("n"))
-      val query = startStream(spark, counts
-        .writeStream.format("memory").queryName(memSinkName("p26", dir))
-        .outputMode("complete"))
-      try query.processAllAvailable()
-      finally { recordFloor("p26", query); query.stop() }
-    }
     val trailing = Window.partitionBy("event_type").orderBy("date")
       .rowsBetween(-7, -1)
-    spark.table(memSinkName("p26", dir))
+    dailyTypeCounts(spark, dir, "p26")
       .withColumn("sum7", coalesce(sum("n").over(trailing), lit(0L)))
       .withColumn("cnt7", count("n").over(trailing))
       .withColumn("flag",
@@ -759,7 +747,14 @@ object StreamPipeline {
     * definition batch a14 runs, so the streamed forecast cannot drift
     * from the batch one (spec pins hash-equality); the oracle is a14's
     * statement verbatim. */
-  def ewmaForecastStream(spark: SparkSession, dir: String): DataFrame = {
+  def ewmaForecastStream(spark: SparkSession, dir: String): DataFrame =
+    graft.analytics.Analytics.ewmaFoldOver(dailyTypeCounts(spark, dir, "p34"))
+
+  /** The deduped per-(event_type, day) count stream p26 and p34 read:
+    * a watermarked event_id dedup over the staged events, counted per
+    * type and day, run to completion into `key`'s own memory sink,
+    * which is returned as a table. */
+  private def dailyTypeCounts(spark: SparkSession, dir: String, key: String): DataFrame = {
     withStatePartitions(spark, materializeStateParts(dir)) {
       val counts = stagedEventsStream(spark, dir)
         .withWatermark("ts", "1 hour")
@@ -767,13 +762,12 @@ object StreamPipeline {
         .groupBy(col("event_type"), to_date(col("ts")).as("date"))
         .agg(count(lit(1)).as("n"))
       val query = startStream(spark, counts
-        .writeStream.format("memory").queryName(memSinkName("p34", dir))
+        .writeStream.format("memory").queryName(memSinkName(key, dir))
         .outputMode("complete"))
       try query.processAllAvailable()
-      finally { recordFloor("p34", query); query.stop() }
+      finally { recordFloor(key, query); query.stop() }
     }
-    graft.analytics.Analytics.ewmaFoldOver(
-      spark.table(memSinkName("p34", dir)))
+    spark.table(memSinkName(key, dir))
   }
 
   /** p35's lateness allowance — how far behind the max observed event

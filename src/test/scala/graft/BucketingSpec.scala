@@ -53,6 +53,39 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
     assert(first.toSeq === rebuilt.toSeq)
   }
 
+  test("concurrent cold b1 calls build the layout once and answer like a sequential call") {
+    import graft.operators.BucketOps
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every saveAsTable call runs one SaveAsV1TableCommand
+    val saves = new java.util.concurrent.atomic.AtomicInteger(0)
+    def count(qe: QueryExecution): Unit =
+      if (qe.logical.nodeName == "SaveAsV1TableCommand") saves.incrementAndGet(): Unit
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = count(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = count(qe)
+    }
+    BucketOps.clearBuilt()
+    spark.listenerManager.register(listener)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val racers = try {
+      val start = new java.util.concurrent.CountDownLatch(4)
+      (1 to 4).map(_ => pool.submit(() => {
+        start.countDown()
+        start.await()
+        BucketOps.bucketedJoin(spark, Sf0001).collect().toSeq
+      })).map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      pool.shutdownNow()
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    // one build writes the two bucketed tables once
+    assert(saves.get() === 2, s"${saves.get()} saveAsTable runs")
+    val sequential = BucketOps.bucketedJoin(spark, Sf0001).collect().toSeq
+    racers.foreach(rows => assert(rows === sequential))
+  }
+
   test("b1 operator joins without any exchange on the bucket key") {
     val conf = spark.conf
     val prev = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")

@@ -4,8 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One session builder for every entry point, and its integer knobs
-  * fail by name. */
+/** One session builder for every entry point, and its knobs fail by
+  * name. */
 class GraftSessionSpec extends AnyFunSuite with SparkSpec {
 
   private def knobError(name: String)(read: => Any): Unit = {
@@ -36,6 +36,35 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec {
     assert(Bench.reps(Map("SPARK_GRAFT_REPS" -> "1")) === 1)
     Seq("0", "three", "").foreach { v =>
       knobError("SPARK_GRAFT_REPS")(Bench.reps(Map("SPARK_GRAFT_REPS" -> v)))
+    }
+  }
+
+  test("SPARK_GRAFT_GC_EACH is 0 or 1 or a named error") {
+    assert(Bench.gcEach(Map.empty) === None)
+    assert(Bench.gcEach(Map("SPARK_GRAFT_GC_EACH" -> "1")) === Some(true))
+    assert(Bench.gcEach(Map("SPARK_GRAFT_GC_EACH" -> "0")) === Some(false))
+    Seq("yes", "adaptive", "2", "").foreach { v =>
+      knobError("SPARK_GRAFT_GC_EACH")(Bench.gcEach(Map("SPARK_GRAFT_GC_EACH" -> v)))
+    }
+  }
+
+  test("SPARK_GRAFT_FAMILY_MAJOR is 0 or 1 or a named error") {
+    assert(!Bench.familyMajor(Map.empty))
+    assert(Bench.familyMajor(Map("SPARK_GRAFT_FAMILY_MAJOR" -> "1")))
+    assert(!Bench.familyMajor(Map("SPARK_GRAFT_FAMILY_MAJOR" -> "0")))
+    Seq("true", "on", "").foreach { v =>
+      knobError("SPARK_GRAFT_FAMILY_MAJOR")(
+        Bench.familyMajor(Map("SPARK_GRAFT_FAMILY_MAJOR" -> v)))
+    }
+  }
+
+  test("SPARK_GRAFT_MEMO_LEVEL is a storage level name or a named error") {
+    assert(GraftSession.memoLevel(Map.empty) === None)
+    assert(GraftSession.memoLevel(Map("SPARK_GRAFT_MEMO_LEVEL" -> "MEMORY_AND_DISK_SER")) ===
+      Some("MEMORY_AND_DISK_SER"))
+    Seq("MEMORY_ONLY_FAST", "disk", "").foreach { v =>
+      knobError("SPARK_GRAFT_MEMO_LEVEL")(
+        GraftSession.memoLevel(Map("SPARK_GRAFT_MEMO_LEVEL" -> v)))
     }
   }
 

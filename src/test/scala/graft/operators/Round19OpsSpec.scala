@@ -4,11 +4,11 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
-/** Round-19 optimization-round specs: the round hardened
-  * DedupOps.memoized from comment-enforced warm-before-fork discipline
-  * to code-enforced single evaluation (cached-future pattern — the
-  * ADVICE r18 race: two threads hitting a cold key used to run `build`
-  * twice and leak the loser's persist). These pin the new contract. */
+/** DedupOps.memoized's contract, which it takes from graft.Once: a
+  * cold key builds exactly once under concurrent first callers, a
+  * failed build is built again by the next caller, and a build that
+  * waits on itself fails naming the keys. OnceSpec pins the primitive
+  * itself and its other users (landed artifacts, e25's prefix cache). */
 class Round19OpsSpec extends AnyFunSuite with SparkSpec {
 
   test("memoized: a cold key builds exactly once under concurrent first callers") {
@@ -80,15 +80,5 @@ class Round19OpsSpec extends AnyFunSuite with SparkSpec {
       })
     assert(e.getMessage.contains("self_cycle -> self_cycle"), e.getMessage)
     DedupOps.clearMemo(spark, probeDir)
-  }
-
-  test("buildOnce: a failed build is not cached and the next build of the key returns") {
-    val cache = new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.CompletableFuture[Int]]()
-    val e = intercept[RuntimeException](AnnOps.buildOnce(cache, "k")(sys.error("injected failure")))
-    assert(e.getMessage.contains("injected failure"))
-    assert(!cache.containsKey("k"), "a failed future must not stay cached")
-    assert(AnnOps.buildOnce(cache, "k")(7) === 7)
-    assert(AnnOps.buildOnce(cache, "k")(sys.error("a cached key must not rebuild")) === 7)
   }
 }
