@@ -14,8 +14,8 @@ import graft.functions.F
   * [[graft.io.LocalCheckpointFileManager]] (why: [[graft.io.LocalFs]]).
   *
   * The session's `SPARK_GRAFT_*` knobs are read through [[intKnob]],
-  * [[flagKnob]] and [[memoLevel]], which name the variable when its
-  * value is not valid, before any session starts. */
+  * [[flagKnob]], [[memoLevel]] and [[stateParts]], which name the
+  * variable when its value is not valid, before any session starts. */
 object GraftSession {
 
   /** Bench's session over `dataDir`: `master` (default `local[threads]`)
@@ -24,10 +24,13 @@ object GraftSession {
     * of [[F]], and the scan split sized to the input ([[splitMb]]).
     * `SPARK_GRAFT_MEMO_LEVEL` sets `graft.memo.level`, the storage
     * level of memoized substrates (e.g. `MEMORY_AND_DISK_SER` at carve
-    * scale). `conf` adds keys that belong to one caller only. */
+    * scale), and `SPARK_GRAFT_STATE_PARTS` sets `graft.state.parts`, the
+    * state store count of the finite stream runs. `conf` adds keys that
+    * belong to one caller only. */
   def apply(dataDir: String, threads: Int = cpus(), master: Option[String] = None,
       conf: Seq[(String, String)] = Nil): SparkSession = {
     val level = memoLevel()
+    val parts = stateParts()
     val mb = splitMb(dataDir)
     val split =
       if (mb > 0) Seq(
@@ -48,6 +51,7 @@ object GraftSession {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
     level.foreach(l => spark.conf.set("graft.memo.level", l))
+    parts.foreach(n => spark.conf.set("graft.state.parts", n.toString))
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -66,6 +70,12 @@ object GraftSession {
           s"SPARK_GRAFT_MEMO_LEVEL must name a storage level (e.g. MEMORY_AND_DISK_SER), got '$v'")
       }
     }
+
+  /** `SPARK_GRAFT_STATE_PARTS`: the dev A/B override of the state store
+    * count of the finite stream runs (input-sized by default, see
+    * `StreamPipeline.materializeStateParts`), if set. */
+  def stateParts(env: collection.Map[String, String] = sys.env): Option[Int] =
+    intKnob("SPARK_GRAFT_STATE_PARTS", 1, env)
 
   /** `SPARK_GRAFT_SPLIT_MB`: the dev A/B override of the input-sized scan
     * split, in MB; 0 keeps Spark's defaults. */

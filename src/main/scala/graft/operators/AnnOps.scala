@@ -1445,11 +1445,6 @@ object AnnOps {
     branches.reduce(_ unionByName _).orderBy("nprobe")
   }
 
-  /** Memory-sink name for e18's streamed centroid-state leg — the
-    * shared collision-proof per-dir tag. */
-  private def e18StateSink(dir: String): String =
-    "graft_e18_state_" + graft.functions.F.dirTag(dir)
-
   /** e18: STREAMING INDEX UPSERT — e11's delta-only maintenance with
     * the delta arriving on a STREAM: a production vector lake does not
     * receive its new embeddings as a neat batch; they land continuously
@@ -1505,14 +1500,13 @@ object AnnOps {
       Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 0)
         .write.mode("overwrite").parquet(s"$out/arrivals")
     }
-    ingestDeltaStream(spark, dir, out)
     // ---- merge + serve, batch-side over the streamed artifacts ----
-    spark.catalog.refreshByPath(s"$out/codes_delta")
-    val deltaState = spark.table(e18StateSink(dir))
+    val deltaState = ingestDeltaStream(spark, dir, out)
       .groupBy("label").agg(
         transform(array_sort(collect_list(struct(col("d"), col("s")))),
           x => x.getField("s")).as("sd"),
         min("n").as("nd"))
+    spark.catalog.refreshByPath(s"$out/codes_delta")
     val cent = spark.read.parquet(s"$out/centroids_v1")
       .select(col("label"), col("s").as("sb"), col("n").as("nb"))
       .join(deltaState, Seq("label"), "full_outer")
@@ -1537,40 +1531,31 @@ object AnnOps {
     * nothing and present an EMPTY table — the fresh query re-reads the
     * small arrival set and re-derives the identical state, dedup
     * included, which is also what makes repeated bench passes measure
-    * the maintenance op rather than a warm no-op). */
-  private def ingestDeltaStream(spark: SparkSession, dir: String, out: String): Unit = {
+    * the maintenance op rather than a warm no-op). Both legs run as one
+    * [[graft.streaming.StreamPipeline.run]]; the state leg's memory
+    * sink is returned as a table. */
+  private def ingestDeltaStream(spark: SparkSession, dir: String, out: String): DataFrame = {
     val schema = spark.read.parquet(s"$out/arrivals").schema
     // the delta's cell id must derive from the SAME composite geometry
     // as the base index — the one shared [[encodeCells]] definition
     def arrivals = encodeCells(spark, dir,
       spark.readStream.schema(schema).parquet(s"$out/arrivals")
         .dropDuplicates("vec_id"))
-    import graft.streaming.StreamPipeline.{materializeStateParts, startStream,
-      withStatePartitions}
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val codesQ = startStream(spark, arrivals
-        .select(col("vec_id").as("c_id"), col("label"),
-          posexplode(pqCodesCol(spark, col("q"))).as(Seq("m", "code")))
-        .select("c_id", "label", "m", "code")
-        // cluster the micro-batch on the cell label for the same
-        // one-file-per-cell reason as [[writeCells]]
-        .repartition(col("label"))
-        .writeStream.format("parquet")
-        .option("path", s"$out/codes_delta")
-        .option("checkpointLocation", s"$out/codes_ckpt")
-        .partitionBy("label")
-        .outputMode("append"))
-      val stateQ = startStream(spark, arrivals
-        .select(col("label"), posexplode(col("q")).as(Seq("d", "v")))
-        .groupBy("label", "d").agg(sum("v").as("s"), count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(e18StateSink(dir))
-        .outputMode("complete"))
-      try { codesQ.processAllAvailable(); stateQ.processAllAvailable() }
-      finally {
-        graft.streaming.StreamPipeline.recordFloors("e18", Seq(codesQ, stateQ))
-        codesQ.stop(); stateQ.stop()
-      }
-    }
+    val codes = arrivals
+      .select(col("vec_id").as("c_id"), col("label"),
+        posexplode(pqCodesCol(spark, col("q"))).as(Seq("m", "code")))
+      .select("c_id", "label", "m", "code")
+      // cluster the micro-batch on the cell label for the same
+      // one-file-per-cell reason as [[writeCells]]
+      .repartition(col("label"))
+      .writeStream.format("parquet")
+      .option("path", s"$out/codes_delta")
+      .option("checkpointLocation", s"$out/codes_ckpt")
+      .partitionBy("label")
+      .outputMode("append")
+    graft.streaming.StreamPipeline.toMemory(spark, "e18", dir, "complete")(arrivals
+      .select(col("label"), posexplode(col("q")).as(Seq("d", "v")))
+      .groupBy("label", "d").agg(sum("v").as("s"), count(lit(1)).as("n")), codes)
   }
 
   /** e20: HOT-CELL SPLIT — the rebalance leg e15 diagnoses and nothing

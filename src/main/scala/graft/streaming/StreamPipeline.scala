@@ -65,6 +65,24 @@ case class CompletedTrip(user_id: Long, start_ts: Timestamp, end_ts: Timestamp, 
   * sorting each group's batch slice, cross-batch disorder would need
   * retraction, which the reference (DynamoDB conditional writes)
   * doesn't do either.
+  *
+  * Finite runs: each of the 17 oracle-checked streaming keys (p9 …
+  * p41, e18) proves its stream equal to a batch answer by running it
+  * to completion over a finite staged input, and every one of them
+  * does so through [[run]] (the memory-sink form is [[toMemory]],
+  * sink `graft_<key>_<dirTag>`). A run scopes the state store count,
+  * starts each query through [[startStream]], processes all available
+  * input, then records the key's floor and per-batch progress and
+  * stops its queries, also on failure. An input table is staged by
+  * [[staged]]: one copy of `$dir/<table>.parquet` per (table, dir)
+  * per JVM, read on [[graft.Tables.rawSchema]]; p15, p30 and p35 stage
+  * their own files (sentinel, wire shape, replay order), one-file
+  * landings through [[landFile]]. There is no knob for another path;
+  * restart and counter runs attach in [[run]]. The one unbounded
+  * query, [[kpiSinkStream]], starts through [[startStream]] itself.
+  * StreamingSpec fails if any other source file calls
+  * `processAllAvailable`, makes a memory sink or scopes the state
+  * partitions.
   */
 object StreamPipeline {
 
@@ -213,41 +231,55 @@ object StreamPipeline {
     * advances; this is purely the finite-input materialization trick. */
   def sessionizeViaFileStream(spark: SparkSession, dir: String): DataFrame = {
     val streamDir = java.nio.file.Paths.get(stagingPath("p15", dir))
-    graft.functions.F.stageParquet(
-      s"$dir/events.parquet", streamDir.toString, "events")
     val raw = graft.Tables.raw(spark, dir, "events")
-    // typed max via the shared normalizer — the raw physical ts type is
-    // Tables' concern, not ours (graft.Tables.normalizeEventsTs)
-    val maxMicros = graft.Tables.normalizeEventsTs(raw)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0)
-    val sentinelMicros = maxMicros + 3L * 3600 * 1000000L
-    // write the one-row sentinel into an underscore-prefixed dir (Spark
-    // file listings ignore those) and move its part file up as a real
-    // top-level file the stream source will pick up
-    val tmp = streamDir.resolve("_flush_tmp")
-    raw.sparkSession.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(
-          -1L, graft.Tables.tsLiteral(raw.schema, sentinelMicros),
-          FlushUser, "click", 0.0, null)), raw.schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val listing = java.nio.file.Files.list(tmp)
+    landOnce(streamDir.toString, Seq(stagedMarkerName("events"), "flush.parquet")
+        .map(streamDir.resolve(_).toString)) {
+      stageParquet(s"$dir/events.parquet", streamDir.toString, "events")
+      landFile(clickRow(raw, -1L, maxTsMicros(raw) + FlushLeadMicros, FlushUser),
+        streamDir.resolve("flush.parquet"))
+    }
+    val sdf = graft.Tables.normalizeEventsTs(
+      spark.readStream.schema(raw.schema).parquet(streamDir.toString))
+    toMemory(spark, "p15", dir, "append")(sessionizeStream(sdf))
+      .filter(col("user_id") =!= FlushUser)
+      .orderBy("user_id", "session_start")
+  }
+
+  /** How far past the corpus max the flush sentinel of p15 and p35
+    * lands: 3 h, so sentinel − 1 h watermark clears every real session
+    * end + 30 min gap and every real 1-hour window end. */
+  private val FlushLeadMicros = 3L * 3600 * 1000000L
+
+  /** The latest event time of `raw` (the events table as stored), in
+    * epoch µs. */
+  private def maxTsMicros(raw: DataFrame): Long =
+    graft.Tables.normalizeEventsTs(raw).agg(max(unix_micros(col("ts")))).head().getLong(0)
+
+  /** One `click` event row in `raw`'s schema, for the staged sentinel
+    * and spacer files. */
+  private def clickRow(raw: DataFrame, eventId: Long, tsMicros: Long, userId: Long): DataFrame =
+    raw.sparkSession.createDataFrame(java.util.List.of(Row(
+      eventId, graft.Tables.tsLiteral(raw.schema, tsMicros), userId, "click", 0.0, null)),
+      raw.schema)
+
+  /** Lands `df` as the one parquet file `dst`, modified at `mtimeMs`
+    * if given. Spark writes it as one part file into an
+    * underscore-prefixed sibling dir (file listings skip those), and
+    * the part file moves up to `dst`, where a file stream source over
+    * `dst`'s dir picks it up. */
+  private def landFile(df: DataFrame, dst: java.nio.file.Path, mtimeMs: Option[Long] = None)
+      : Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val name = dst.getFileName.toString.stripSuffix(".parquet")
+    val tmp = dst.resolveSibling(s"_tmp_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val listing = Files.list(tmp)
     val part =
       try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
       finally listing.close() // Files.list holds a directory handle open
-    java.nio.file.Files.move(part, streamDir.resolve("flush.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val sdf = graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(raw.schema).parquet(streamDir.toString))
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startStream(spark, sessionizeStream(sdf)
-        .writeStream.format("memory").queryName(memSinkName("p15", dir))
-        .outputMode("append"))
-      try query.processAllAvailable()
-      finally { recordFloor("p15", query); query.stop() }
-    }
-    spark.table(memSinkName("p15", dir))
-      .filter(col("user_id") =!= FlushUser)
-      .orderBy("user_id", "session_start")
+    Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
+    mtimeMs.foreach(ms => Files.setLastModifiedTime(dst,
+      java.nio.file.attribute.FileTime.fromMillis(ms)))
   }
 
   /** Streaming partitioned KPI sink: lands the daily KPIs under
@@ -281,16 +313,9 @@ object StreamPipeline {
     * input (proven under re-delivery by StreamingSpec), the result
     * hash-matches the same DuckDB oracle as p5 — which is what promotes
     * the streaming operator from test-verified to oracle-verified. */
-  def kpiDailyViaFileStream(spark: SparkSession, dir: String): DataFrame = {
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startStream(spark, kpiDailyStream(spark, stagedEventsStream(spark, dir))
-        .writeStream.format("memory").queryName(memSinkName("p9", dir))
-        .outputMode("complete"), noDataBatches = false)
-      try query.processAllAvailable()
-      finally { recordFloor("p9", query); query.stop() }
-    }
-    spark.table(memSinkName("p9", dir)).orderBy("date")
-  }
+  def kpiDailyViaFileStream(spark: SparkSession, dir: String): DataFrame =
+    toMemory(spark, "p9", dir, "complete", noDataBatches = false)(
+      kpiDailyStream(spark, staged(spark, dir, "events"))).orderBy("date")
 
   /** Runs `body` with the session's shuffle-partition count — which for
     * streaming is also the STATE STORE count — scoped down to `n`.
@@ -301,7 +326,7 @@ object StreamPipeline {
     * it to aggregate state ÷ target-store-size instead. Results are
     * partition-count-invariant (DeterminismSpec), so this changes cost,
     * never content. Conf is restored even on failure. */
-  private[graft] def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
+  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
     withSessionConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** Runs `body` with each given session conf key set to its value.
@@ -324,7 +349,8 @@ object StreamPipeline {
   private[graft] val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
 
   /** Starts a streaming query. Every query graft starts goes through
-    * here.
+    * here: the finite runs through [[run]], the unbounded
+    * [[kpiSinkStream]] directly.
     *
     * Its checkpoint needs no setting: `core-site.xml` puts every local
     * checkpoint on [[graft.io.LocalCheckpointFileManager]] (why:
@@ -346,6 +372,46 @@ object StreamPipeline {
       noDataBatches: Boolean = true): StreamingQuery =
     if (noDataBatches) writer.start()
     else withSessionConf(spark, NoDataBatchesKey -> "false")(writer.start())
+
+  /** Runs `kind`'s stream queries over their finite staged input to
+    * completion — the one way graft does it. The run scopes the shuffle
+    * partition (state store) count to [[materializeStateParts]], the
+    * stateless p39–p41 included (their stream-static shuffle joins ran
+    * no slower at that count), starts every writer through
+    * [[startStream]] and has each query process all available input.
+    * Whether that succeeds or throws, it records `kind`'s floor and
+    * per-batch progress ([[streamFloors]], [[lastProgress]]) and stops
+    * every query it started. */
+  private[graft] def run(spark: SparkSession, kind: String, dir: String,
+      noDataBatches: Boolean = true)(writers: DataStreamWriter[Row]*): Unit =
+    withStatePartitions(spark, materializeStateParts(spark, dir)) {
+      val qs = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+      try {
+        writers.foreach(w => qs += startStream(spark, w, noDataBatches))
+        qs.foreach(_.processAllAvailable())
+      } finally {
+        if (qs.nonEmpty) record(kind, qs.toSeq)
+        qs.foreach(_.stop())
+      }
+    }
+
+  /** [[run]] with `df` written to a memory sink in output `mode`, run
+    * alongside the `also` writers (e18's code lake leg), and the sink
+    * returned as a table. */
+  private[graft] def toMemory(spark: SparkSession, kind: String, dir: String, mode: String,
+      noDataBatches: Boolean = true)(df: DataFrame, also: DataStreamWriter[Row]*): DataFrame = {
+    val name = sinkName(kind, dir)
+    run(spark, kind, dir, noDataBatches)(
+      also :+ df.writeStream.format("memory").queryName(name).outputMode(mode): _*)
+    spark.table(name)
+  }
+
+  /** The session-global memory-sink name per (operator, data dir) —
+    * the shared collision-proof tag: a fixed name would make two
+    * invocations for different dirs (or a concurrent Verify/Bench
+    * sharing the session) read each other's materialization. */
+  private[graft] def sinkName(kind: String, dir: String): String =
+    s"graft_${kind}_" + dirTag(dir)
 
   /** Per-operator streaming FLOOR (seconds) observed by the most recent
     * materialization in this JVM: Σ over micro-batches of
@@ -369,35 +435,20 @@ object StreamPipeline {
     * progress JSON of its most recent run in this JVM. */
   def lastProgress(kind: String): Seq[String] = progressDump.getOrElse(kind, Nil)
 
-  /** Reads the finished query's progress buffer; call before stop().
-    * recentProgress holds the last ~100 batches — far above any finite
-    * materialization here. */
-  private def recordFloor(kind: String, q: StreamingQuery): Unit = {
-    progressDump.put(kind, q.recentProgress.toSeq.map(_.json))
-    floors.put(kind, floorOf(q)): Unit
-  }
-
-  /** Multi-query variant for operators whose materialization runs more
-    * than one streaming query (e18's codes + state legs): the floor
-    * reported for the kind is the SUM — the total scheduling/commit
-    * overhead that invocation paid. */
-  private[graft] def recordFloors(kind: String, qs: Seq[StreamingQuery]): Unit =
-    floors.put(kind, qs.map(floorOf).sum): Unit
-
-  private def floorOf(q: StreamingQuery): Double =
-    q.recentProgress.toSeq.map { p =>
+  /** Records `kind`'s progress and floor from its queries' progress
+    * buffers; call before stop(). recentProgress holds the last ~100
+    * batches — far above any finite materialization here. A run of
+    * several queries (e18's two legs) reports the SUM of their floors. */
+  private def record(kind: String, qs: Seq[StreamingQuery]): Unit = {
+    val progress = qs.flatMap(_.recentProgress)
+    progressDump.put(kind, progress.map(_.json))
+    floors.put(kind, progress.map { p =>
       val d = p.durationMs
       val trig = Option(d.get("triggerExecution")).map(_.longValue).getOrElse(0L)
       val add = Option(d.get("addBatch")).map(_.longValue).getOrElse(0L)
       math.max(0L, trig - add)
-    }.sum / 1000.0
-
-  /** Session-global memory-sink name per (operator, data dir) — the
-    * shared collision-proof tag: a fixed name would make two
-    * invocations for different dirs (or a concurrent Verify/Bench
-    * sharing the session) read each other's materialization. */
-  private def memSinkName(kind: String, dir: String): String =
-    s"graft_${kind}_" + graft.functions.F.dirTag(dir)
+    }.sum / 1000.0): Unit
+  }
 
   /** State partition count for the finite-input materializations —
     * which for streaming is also the STATE STORE count, each paying
@@ -414,44 +465,43 @@ object StreamPipeline {
     * heuristic: it sizes stores to aggregate state ÷ target store
     * size (see withStatePartitions' scaladoc). Results are
     * partition-count-invariant (DeterminismSpec), so this changes
-    * cost, never content. SPARK_GRAFT_STATE_PARTS is the dev-only
-    * A/B override ([[parseStateParts]]). */
-  private[graft] def materializeStateParts(dir: String): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(parseStateParts).getOrElse(
-      if (graft.functions.F.autoSplitMb(dir) > 0) 8 else 2)
+    * cost, never content. The dev-only A/B override
+    * SPARK_GRAFT_STATE_PARTS is parsed before the session starts
+    * ([[graft.GraftSession.stateParts]]), which leaves its value in
+    * `graft.state.parts`. */
+  private def materializeStateParts(spark: SparkSession, dir: String): Int =
+    spark.conf.getOption("graft.state.parts").map(_.toInt).getOrElse(
+      if (autoSplitMb(dir) > 0) 8 else 2)
 
-  /** A SPARK_GRAFT_STATE_PARTS value as a state store count: a positive
-    * integer, or an error that names the variable. */
-  private[graft] def parseStateParts(v: String): Int =
-    graft.GraftSession.parseKnob("SPARK_GRAFT_STATE_PARTS", 1)(v)
-
-  /** Collision-proof staging dir per (operator, data dir) — the shared
-    * `F.dirTag` scheme. (`hashCode`-keyed names, the original scheme,
-    * could collide across dirs — and `math.abs(Int.MinValue)` is
-    * negative — either of which would cross-contaminate two operators'
-    * streamed inputs.) */
+  /** Collision-proof staging dir per (operator or table, data dir) —
+    * the shared `F.dirTag` scheme. (`hashCode`-keyed names, the
+    * original scheme, could collide across dirs — and
+    * `math.abs(Int.MinValue)` is negative — either of which would
+    * cross-contaminate two operators' streamed inputs.) */
   private def stagingPath(kind: String, dir: String): String =
-    s"target/graft-$kind-stream-" + graft.functions.F.dirTag(dir)
+    s"target/graft-$kind-stream-" + dirTag(dir)
 
-  /** The events parquet staged behind a REAL file streaming source —
-    * the unbounded-input surface for the oracle-checked streaming
-    * operators (p9, p13). The staging is scaffolding (a deterministic
-    * copy of the dir's events parquet), not the operator, so it runs
-    * through F.landOnce ([[graft.Once]]: once per JVM per dir, heals a
-    * cleaned target/) — ten streaming operators × four bench
-    * passes must not pay forty identical copies. */
-  private def stagedEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val streamDir = java.nio.file.Paths.get(stagingPath("p9", dir))
+  /** Input table `table` of `dir` behind a REAL file streaming source —
+    * the unbounded-input surface of the oracle-checked streaming
+    * operators — planned on [[graft.Tables.rawSchema]] and conformed
+    * like every batch read ([[graft.Tables.conform]]; for events that
+    * is [[graft.Tables.normalizeEventsTs]]). The staging is scaffolding
+    * (a deterministic copy of `$dir/<table>.parquet`), not the
+    * operator, so it lands once per JVM per (table, dir) through
+    * F.landOnce ([[graft.Once]]), which heals a cleaned target/, and
+    * every operator streaming that table reads the same copy: ten
+    * streaming operators × four bench passes must not pay forty
+    * identical copies. */
+  private def staged(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val streamDir = stagingPath(table, dir)
     // heal artifact = stageParquet's done-marker, NOT the bare dir: a
     // partial clean that leaves an empty directory must re-land, or the
     // same JVM would serve an empty staged stream
-    graft.functions.F.landOnce(streamDir.toString,
-      streamDir.resolve(graft.functions.F.stagedMarkerName("events")).toString) {
-      graft.functions.F.stageParquet(
-        s"$dir/events.parquet", streamDir.toString, "events")
+    landOnce(streamDir, s"$streamDir/${stagedMarkerName(table)}") {
+      stageParquet(s"$dir/$table.parquet", streamDir, table)
     }
-    graft.Tables.normalizeEventsTs(spark.readStream
-      .schema(graft.Tables.rawSchema(spark, dir, "events")).parquet(streamDir.toString))
+    graft.Tables.conform(spark.readStream
+      .schema(graft.Tables.rawSchema(spark, dir, table)).parquet(streamDir), table)
   }
 
   /** Wire partition count for the p30 staged Kafka-shaped input. 32 —
@@ -485,8 +535,8 @@ object StreamPipeline {
     val streamDir = stagingPath("p30", dir)
     // heal artifact = the batch write's _SUCCESS commit marker (written
     // last by the committer), not the bare dir — same empty-dir hazard
-    // as the stageParquet sites
-    graft.functions.F.landOnce(streamDir, s"$streamDir/_SUCCESS") {
+    // as [[staged]]
+    landOnce(streamDir, s"$streamDir/_SUCCESS") {
       val corrupt = spark.range(3).select(
         lit(null).cast("binary").as("key"),
         concat(lit("not json #"), col("id").cast("string")).cast("binary").as("value"),
@@ -521,17 +571,9 @@ object StreamPipeline {
     * the oracle models exactly that loss, so a decode that silently
     * re-invented precision, crashed, or leaked the corrupt records
     * could not stay green. */
-  def kpiDailyViaKafkaWire(spark: SparkSession, dir: String): DataFrame = {
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startStream(spark, kpiDailyStream(spark,
-        graft.sources.KafkaEvents.decodeEvents(stagedWireStream(spark, dir)))
-        .writeStream.format("memory").queryName(memSinkName("p30", dir))
-        .outputMode("complete"), noDataBatches = false)
-      try query.processAllAvailable()
-      finally { recordFloor("p30", query); query.stop() }
-    }
-    spark.table(memSinkName("p30", dir)).orderBy("date")
-  }
+  def kpiDailyViaKafkaWire(spark: SparkSession, dir: String): DataFrame =
+    toMemory(spark, "p30", dir, "complete", noDataBatches = false)(kpiDailyStream(spark,
+      graft.sources.KafkaEvents.decodeEvents(stagedWireStream(spark, dir)))).orderBy("date")
 
   /** How long after a signup a purchase still completes that trip in
     * the p13 stream-stream join. */
@@ -563,20 +605,13 @@ object StreamPipeline {
 
   /** p13 as an oracle-checkable batch result (file streaming source →
     * memory sink), like kpiDailyViaFileStream. */
-  def signupPurchaseJoinViaFileStream(spark: SparkSession, dir: String): DataFrame = {
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startStream(spark, signupPurchaseJoin(spark, stagedEventsStream(spark, dir))
-        .writeStream.format("memory").queryName(memSinkName("p13", dir))
-        .outputMode("append"))
-      try query.processAllAvailable()
-      finally { recordFloor("p13", query); query.stop() }
-    }
-    spark.table(memSinkName("p13", dir))
+  def signupPurchaseJoinViaFileStream(spark: SparkSession, dir: String): DataFrame =
+    toMemory(spark, "p13", dir, "append")(
+        signupPurchaseJoin(spark, staged(spark, dir, "events")))
       .select(col("s_event_id"), col("p_event_id"), col("user_id"),
         col("s_ts").cast("timestamp_ntz").as("s_ts"),
         col("p_ts").cast("timestamp_ntz").as("p_ts"), col("fare"))
       .orderBy("s_event_id", "p_event_id")
-  }
 
   /** p20: STREAM-STATIC enrichment join — the streaming purchase fact
     * picks up the customer's nation from a BATCH dimension table, then
@@ -607,17 +642,9 @@ object StreamPipeline {
 
   /** p20 driver-facing materialization over the real events parquet
     * via a file streaming source; oracle = the equivalent batch join. */
-  def revenueByNationViaFileStream(spark: SparkSession, dir: String): DataFrame = {
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startStream(spark,
-        revenueByNationStream(spark, stagedEventsStream(spark, dir), dir)
-        .writeStream.format("memory").queryName(memSinkName("p20", dir))
-        .outputMode("complete"))
-      try query.processAllAvailable()
-      finally { recordFloor("p20", query); query.stop() }
-    }
-    spark.table(memSinkName("p20", dir)).orderBy("date", "n_name")
-  }
+  def revenueByNationViaFileStream(spark: SparkSession, dir: String): DataFrame =
+    toMemory(spark, "p20", dir, "complete")(
+      revenueByNationStream(spark, staged(spark, dir, "events"), dir)).orderBy("date", "n_name")
 
   /** p21: IDEMPOTENT PARTITIONED SINK — the streaming daily-KPI output
     * landed durably via `foreachBatch` + dynamic partition OVERWRITE:
@@ -637,16 +664,13 @@ object StreamPipeline {
     * days kept, not with the dates the batch touched. */
   def idempotentKpiSink(spark: SparkSession, dir: String): DataFrame = {
     val out = stagingPath("p21sink", dir)
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startStream(spark, kpiDailyStream(spark, stagedEventsStream(spark, dir))
+    run(spark, "p21", dir, noDataBatches = false)(
+      kpiDailyStream(spark, staged(spark, dir, "events"))
         .writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
             .partitionBy("date").parquet(out)
-        }, noDataBatches = false)
-      try query.processAllAvailable()
-      finally { recordFloor("p21", query); query.stop() }
-    }
+        })
     spark.read.schema(graft.pipeline.SinkOps.kpiDataSchema).parquet(out)
       .select(col("date").cast("date").as("date"), col("total_fare"),
         col("count_trips"), col("average_fare"), col("max_fare"), col("min_fare"))
@@ -680,15 +704,9 @@ object StreamPipeline {
     * branch) runs over the tiny materialized register table. n_exact
     * joins in from a batch scan as the accuracy reference column. */
   def hllDistinctStream(spark: SparkSession, dir: String): DataFrame = {
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startStream(spark, hllRegistersStream(stagedEventsStream(spark, dir))
-        .writeStream.format("memory").queryName(memSinkName("p19", dir))
-        .outputMode("complete"))
-      try query.processAllAvailable()
-      finally { recordFloor("p19", query); query.stop() }
-    }
+    val regs = toMemory(spark, "p19", dir, "complete")(
+      hllRegistersStream(staged(spark, dir, "events")))
     val m = graft.operators.SketchOps.HllM
-    val regs = spark.table(memSinkName("p19", dir))
     val agg = regs.groupBy("date").agg(
       (sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(53 - rho AS INT))")) +
         (lit(m.toLong) - count(lit(1))) * lit(9007199254740992L)).as("s"),
@@ -754,21 +772,12 @@ object StreamPipeline {
     * a watermarked event_id dedup over the staged events, counted per
     * type and day, run to completion into `key`'s own memory sink,
     * which is returned as a table. */
-  private def dailyTypeCounts(spark: SparkSession, dir: String, key: String): DataFrame = {
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val counts = stagedEventsStream(spark, dir)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .groupBy(col("event_type"), to_date(col("ts")).as("date"))
-        .agg(count(lit(1)).as("n"))
-      val query = startStream(spark, counts
-        .writeStream.format("memory").queryName(memSinkName(key, dir))
-        .outputMode("complete"))
-      try query.processAllAvailable()
-      finally { recordFloor(key, query); query.stop() }
-    }
-    spark.table(memSinkName(key, dir))
-  }
+  private def dailyTypeCounts(spark: SparkSession, dir: String, key: String): DataFrame =
+    toMemory(spark, key, dir, "complete")(staged(spark, dir, "events")
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("event_id")
+      .groupBy(col("event_type"), to_date(col("ts")).as("date"))
+      .agg(count(lit(1)).as("n")))
 
   /** p35's lateness allowance — how far behind the max observed event
     * time the watermark trails (and therefore how old a row may arrive
@@ -810,7 +819,7 @@ object StreamPipeline {
     * deployment that just monitors drops reads
     * `observedMetrics`/`numRowsDroppedByWatermark` for free. */
   def lateDataAccounting(spark: SparkSession, dir: String): DataFrame = {
-    val streamed = streamedWindowCounts(spark, dir)
+    val streamed = streamedWindowCounts(spark, dir, "p35")
     val bat = graft.Tables.events(spark, dir)
       .filter(graft.pipeline.TripPipeline.validCond)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -827,64 +836,37 @@ object StreamPipeline {
   /** The p35 streaming leg — the watermarked windowed count table the
     * staged two-phase replay actually ADMITS, shared by p35 (the drop
     * ledger) and p38 (the lambda reconciliation), so the two read the
-    * identical speed-layer state. */
-  private[graft] def streamedWindowCounts(spark: SparkSession, dir: String): DataFrame = {
+    * identical speed-layer state. `kind` is the calling key, which
+    * records its own floor and progress. */
+  private[graft] def streamedWindowCounts(spark: SparkSession, dir: String, kind: String)
+      : DataFrame = {
     import graft.pipeline.TripPipeline
     val streamDir = java.nio.file.Paths.get(stagingPath("p35", dir))
     val raw = graft.Tables.raw(spark, dir, "events")
-    graft.functions.F.landOnce(streamDir.toString,
+    landOnce(streamDir.toString,
         Seq("evens", "tick", "odds", "flush").map(n =>
           streamDir.resolve(s"$n.parquet").toString)) {
       java.nio.file.Files.createDirectories(streamDir)
-      def land(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val tmp = streamDir.resolve(s"_tmp_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val listing = java.nio.file.Files.list(tmp)
-        val part = try listing
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally listing.close()
-        val dst = streamDir.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(mtimeMs)): Unit
-      }
-      val maxMicros = graft.Tables.normalizeEventsTs(raw)
-        .agg(max(unix_micros(col("ts")))).head().getLong(0)
-      val sentinel = spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(
-          -1L, graft.Tables.tsLiteral(raw.schema, maxMicros + 3L * 3600 * 1000000L),
-          FlushUser, "click", 0.0, null)), raw.schema)
-      val tick = spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(
-          -2L, graft.Tables.tsLiteral(raw.schema, maxMicros),
-          -1L, "click", 0.0, null)), raw.schema)
+      def land(df: DataFrame, name: String, mtimeMs: Long): Unit =
+        landFile(df, streamDir.resolve(s"$name.parquet"), Some(mtimeMs))
+      val maxMicros = maxTsMicros(raw)
       // mtime ORDER (not value) is what the file source consumes; 30 s
       // spacing clears any filesystem mtime granularity
       val t0 = System.currentTimeMillis() - 240000L
       land(raw.filter(col("event_id") % 2 === 0), "evens", t0)
-      land(tick, "tick", t0 + 30000L)
+      land(clickRow(raw, -2L, maxMicros, -1L), "tick", t0 + 30000L)
       land(raw.filter(col("event_id") % 2 =!= 0), "odds", t0 + 60000L)
-      land(sentinel, "flush", t0 + 90000L)
+      land(clickRow(raw, -1L, maxMicros + FlushLeadMicros, FlushUser), "flush", t0 + 90000L)
     }
     val sdf = graft.Tables.normalizeEventsTs(
       spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1").parquet(streamDir.toString))
-    val sink = memSinkName("p35", dir)
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val query = startStream(spark, sdf.filter(TripPipeline.validCond)
-        .withWatermark("ts", LateDelay)
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_stream"))
-        .select(col("w.start").cast("timestamp_ntz").as("win_start"),
-          col("event_type"), col("n_stream"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append"))
-      try query.processAllAvailable()
-      finally { recordFloor("p35", query); query.stop() }
-    }
-    spark.table(sink)
+    toMemory(spark, kind, dir, "append")(sdf.filter(TripPipeline.validCond)
+      .withWatermark("ts", LateDelay)
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n_stream"))
+      .select(col("w.start").cast("timestamp_ntz").as("win_start"),
+        col("event_type"), col("n_stream")))
   }
 
   /** p38: LAMBDA RECONCILIATION — the repair leg p35's ledger calls
@@ -905,7 +887,7 @@ object StreamPipeline {
     * dimension-scale tables. */
   def lambdaReconcile(spark: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.TripPipeline
-    val streamed = streamedWindowCounts(spark, dir)
+    val streamed = streamedWindowCounts(spark, dir, "p38")
       .select(col("win_start"), col("event_type"), col("n_stream").as("n"))
     val ev = graft.Tables.events(spark, dir).filter(TripPipeline.validCond)
     val wmRow = ev.filter(col("event_id") % 2 === 0)
@@ -943,27 +925,21 @@ object StreamPipeline {
     * into the serving store and the full-outer join is the store's
     * lookup. */
   def cdcUpsertStream(spark: SparkSession, dir: String): DataFrame = {
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val changes = stagedEventsStream(spark, dir)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .filter(col("event_type").isin("purchase", "error"))
-        .select(col("user_id").as("key"),
-          struct(col("ts"), col("event_id").as("seq"),
-            when(col("event_type") === "error", "D").otherwise("U").as("op"),
-            when(col("event_type") === "purchase", col("value")).as("val"))
-            .as("chg"))
-        .groupBy("key")
-        .agg(max("chg").as("last"), count(lit(1)).as("n_changes"))
-      val query = startStream(spark, changes.writeStream.format("memory")
-        .queryName(memSinkName("p27", dir)).outputMode("complete"))
-      try query.processAllAvailable()
-      finally { recordFloor("p27", query); query.stop() }
-    }
+    val changes = toMemory(spark, "p27", dir, "complete")(staged(spark, dir, "events")
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("event_id")
+      .filter(col("event_type").isin("purchase", "error"))
+      .select(col("user_id").as("key"),
+        struct(col("ts"), col("event_id").as("seq"),
+          when(col("event_type") === "error", "D").otherwise("U").as("op"),
+          when(col("event_type") === "purchase", col("value")).as("val"))
+          .as("chg"))
+      .groupBy("key")
+      .agg(max("chg").as("last"), count(lit(1)).as("n_changes")))
     val base = graft.Tables.customer(spark, dir)
       .select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("base_val"))
-    base.join(spark.table(memSinkName("p27", dir)), Seq("key"), "full_outer")
+    base.join(changes, Seq("key"), "full_outer")
       .filter(col("last").isNull || col("last.op") === "U")
       .select(col("key"),
         when(col("last").isNotNull, col("last.val"))
@@ -992,20 +968,13 @@ object StreamPipeline {
         .select(col("*"), SketchOps.cmCells(col("mh")))
         .select(col("*"), col("dc.d").as("d"), col("dc.cell").as("cell"))
         .drop("dc", "mh")
-    withStatePartitions(spark, materializeStateParts(dir)) {
-      val cells = cellsOf(
-        stagedEventsStream(spark, dir)
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("event_id")
-          .select(col("ts"), col("event_id"), col("user_id")),
-        col("user_id"))
-        .groupBy("d", "cell").agg(count(lit(1)).as("cnt"))
-      val query = startStream(spark, cells.writeStream.format("memory")
-        .queryName(memSinkName("p28", dir)).outputMode("complete"))
-      try query.processAllAvailable()
-      finally { recordFloor("p28", query); query.stop() }
-    }
-    val sketch = spark.table(memSinkName("p28", dir))
+    val sketch = toMemory(spark, "p28", dir, "complete")(cellsOf(
+      staged(spark, dir, "events")
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("event_id")
+        .select(col("ts"), col("event_id"), col("user_id")),
+      col("user_id"))
+      .groupBy("d", "cell").agg(count(lit(1)).as("cnt")))
     val truth = graft.Tables.events(spark, dir)
       .groupBy("user_id").agg(count(lit(1)).as("true_cnt"))
       .orderBy(col("true_cnt").desc, col("user_id")).limit(10)
@@ -1046,12 +1015,6 @@ object StreamPipeline {
     * discipline) and the stream side never re-scans the corpus. */
   def streamNearDup(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.DedupOps
-    val streamDir = java.nio.file.Paths.get(stagingPath("p39", dir))
-    landOnce(streamDir.toString,
-      streamDir.resolve(stagedMarkerName("documents")).toString) {
-      stageParquet(s"$dir/documents.parquet", streamDir.toString, "documents")
-    }
-    val schema = graft.Tables.rawSchema(spark, dir, "documents")
     val p = DedupOps.P
     // the SAME md5-derived permutation coefficients as
     // DedupOps.minhashSig, derived via the one driver-side hash mirror
@@ -1078,7 +1041,7 @@ object StreamPipeline {
     // ~1 s at sf0.1 — a ~16× re-evaluation of the per-shingle hashing).
     // A Generate node's output is an attribute, so each tier is
     // evaluated exactly once per row.
-    val incoming = spark.readStream.schema(schema).parquet(streamDir.toString)
+    val incoming = staged(spark, dir, "documents")
       .filter(col("doc_id") % 4 === 0)
       .withColumn("t", tokens(col("text")))
       .select(col("doc_id"),
@@ -1117,12 +1080,8 @@ object StreamPipeline {
         col("n_agree").cast(org.apache.spark.sql.types.DoubleType) / DedupOps.K)
       .filter(col("est_jaccard") >= 0.25)
       .select("incoming_doc", "existing_doc", "est_jaccard")
-    val query = startStream(spark, out
-      .writeStream.format("memory").queryName(memSinkName("p39", dir))
-      .outputMode("append"))
-    try query.processAllAvailable()
-    finally { recordFloor("p39", query); query.stop() }
-    spark.table(memSinkName("p39", dir)).orderBy("incoming_doc", "existing_doc")
+    toMemory(spark, "p39", dir, "append")(out)
+      .orderBy("incoming_doc", "existing_doc")
   }
 
   /** p40: IN-STREAM SEMANTIC DECONTAMINATION — d19's admission decision
@@ -1153,12 +1112,6 @@ object StreamPipeline {
     * rescanned and there is zero state to snapshot. */
   def streamDecon(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{AnnOps, CorpusOps, DedupOps}
-    val streamDir = java.nio.file.Paths.get(stagingPath("p40", dir))
-    landOnce(streamDir.toString,
-      streamDir.resolve(stagedMarkerName("embeddings")).toString) {
-      stageParquet(s"$dir/embeddings.parquet", streamDir.toString, "embeddings")
-    }
-    val schema = graft.Tables.rawSchema(spark, dir, "embeddings")
     val dot = dotBest(spark)
     // static per-cell eval index: array_sort on the (eval_id, eq, e_n2)
     // structs orders by eval_id — the fold's tie-break order
@@ -1168,8 +1121,7 @@ object StreamPipeline {
         struct(col("eval_id"), col("eq"), col("e_n2")))).as("evs"))
     val simT = "struct<sim:double,eval_id:bigint>"
     val arrivals = AnnOps.encodeCells(spark, dir,
-        spark.readStream.schema(schema).parquet(streamDir.toString)
-          .filter(col("vec_id") % CorpusOps.EvalMod =!= 0))
+        staged(spark, dir, "embeddings").filter(col("vec_id") % CorpusOps.EvalMod =!= 0))
       .withColumn("n2", dot(col("q"), col("q")).cast(org.apache.spark.sql.types.DoubleType))
     val out = arrivals
       .join(broadcast(probeIx), Seq("label"), "left")
@@ -1192,12 +1144,7 @@ object StreamPipeline {
       .select(col("vec_id"), col("b").isNull.as("is_kept"),
         col("b").getField("eval_id").as("contam_of"),
         round(col("b").getField("sim"), 6).as("sim"))
-    val query = startStream(spark, out
-      .writeStream.format("memory").queryName(memSinkName("p40", dir))
-      .outputMode("append"))
-    try query.processAllAvailable()
-    finally { recordFloor("p40", query); query.stop() }
-    spark.table(memSinkName("p40", dir)).orderBy("vec_id")
+    toMemory(spark, "p40", dir, "append")(out).orderBy("vec_id")
   }
 
   /** p41: IN-STREAM QUALITY/LANGUAGE ADMISSION — the STATELESS tier of
@@ -1227,13 +1174,7 @@ object StreamPipeline {
     * partitions alone. */
   def streamQuality(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{CorpusOps, TextOps}
-    val streamDir = java.nio.file.Paths.get(stagingPath("p41", dir))
-    landOnce(streamDir.toString,
-      streamDir.resolve(stagedMarkerName("documents")).toString) {
-      stageParquet(s"$dir/documents.parquet", streamDir.toString, "documents")
-    }
-    val schema = graft.Tables.rawSchema(spark, dir, "documents")
-    val arrivals = spark.readStream.schema(schema).parquet(streamDir.toString)
+    val arrivals = staged(spark, dir, "documents")
       .withColumn("t", graft.functions.F.tokens(col("text")))
     val out = TextOps.withPredLang(TextOps.withQuality(arrivals))
       // generator barrier: quality_score and pred_lang are each read
@@ -1248,12 +1189,7 @@ object StreamPipeline {
         when(col("sc.quality_score") < CorpusOps.MinQuality, lit("low_quality"))
           .when(col("sc.pred_lang") =!= col("lang"), lit("lang_mismatch"))
           .otherwise(lit("admitted")).as("verdict"))
-    val query = startStream(spark, out
-      .writeStream.format("memory").queryName(memSinkName("p41", dir))
-      .outputMode("append"))
-    try query.processAllAvailable()
-    finally { recordFloor("p41", query); query.stop() }
-    spark.table(memSinkName("p41", dir)).orderBy("doc_id")
+    toMemory(spark, "p41", dir, "append")(out).orderBy("doc_id")
   }
 
   /** Daily KPIs over the matched-trip stream — event-time 1-day window,

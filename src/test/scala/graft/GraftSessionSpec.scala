@@ -68,6 +68,15 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("SPARK_GRAFT_STATE_PARTS is a positive integer or a named error") {
+    assert(GraftSession.stateParts(Map.empty) === None)
+    assert(GraftSession.stateParts(Map("SPARK_GRAFT_STATE_PARTS" -> " 4 ")) === Some(4))
+    Seq("0", "-2", "four", "2.5", "").foreach { v =>
+      knobError("SPARK_GRAFT_STATE_PARTS")(
+        GraftSession.stateParts(Map("SPARK_GRAFT_STATE_PARTS" -> v)))
+    }
+  }
+
   test("the test session carries Bench's keys") {
     val conf = spark.conf
     assert(conf.get("spark.sql.session.timeZone") === "UTC")

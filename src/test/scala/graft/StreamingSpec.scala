@@ -113,12 +113,48 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("SPARK_GRAFT_STATE_PARTS is a positive integer or a named error") {
-    assert(StreamPipeline.parseStateParts(" 4 ") === 4)
-    Seq("0", "-2", "four", "2.5", "").foreach { v =>
-      val e = intercept[IllegalArgumentException](StreamPipeline.parseStateParts(v))
-      assert(e.getMessage.contains("SPARK_GRAFT_STATE_PARTS"), e.getMessage)
+  test("p9 on two data dirs in one session returns each dir's own batch kpiDaily") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val small = StreamPipeline.kpiDailyViaFileStream(spark, Sf0001)
+    val large = StreamPipeline.kpiDailyViaFileStream(spark, Sf001)
+    Seq(Sf0001 -> small, Sf001 -> large).foreach { case (dir, got) =>
+      val batch = rows(TripPipeline.kpiDaily(spark, dir))
+      assert(rows(got) === batch, dir)
+      // each dir's run fills its own sink: a name shared across dirs
+      // would leave only the last run's KPIs under both
+      assert(rows(spark.table(StreamPipeline.sinkName("p9", dir)).orderBy("date")) === batch, dir)
     }
+    assert(rows(small) !== rows(large))
+  }
+
+  test("p38 and e18 record their own stream floor and micro-batch progress") {
+    SparkEntry.queries("p38_lambda_reconcile")(spark, Sf0001).count()
+    SparkEntry.queries("e18_ann_stream_upsert")(spark, Sf0001).count()
+    val floors = StreamPipeline.streamFloors
+    assert(floors.contains("p38") && floors.contains("e18"), floors)
+    Seq("p38", "e18").foreach { k =>
+      val progress = StreamPipeline.lastProgress(k)
+      assert(progress.nonEmpty, k)
+      assert(progress.forall(_.contains("\"durationMs\"")), k)
+    }
+  }
+
+  test("only StreamPipeline runs streams to completion, makes memory sinks or scopes state stores") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // split so no source file matches by quoting these
+    val needles = Seq("processAll" + "Available", "format(\"" + "memory\")",
+      "withState" + "Partitions")
+    val files = {
+      val s = Files.walk(Paths.get("src/main/scala"))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+    }
+    val hits = files.filterNot(_.getFileName.toString == "StreamPipeline.scala")
+      .flatMap { f =>
+        val text = Files.readString(f)
+        needles.filter(text.contains).map(n => s"${f.getFileName}: $n")
+      }
+    assert(hits.isEmpty, hits.mkString("; "))
   }
 
   test("streaming quarantine equals the batch DLQ complement on injected invalid rows") {
