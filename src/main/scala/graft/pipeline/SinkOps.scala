@@ -9,19 +9,61 @@ import graft.Tables
   * KPI writer, which lands daily KPIs under `date=YYYY-MM-DD/` JSON
   * partitions (glue_jobs/KPI-Aggregator.py:117-125).
   *
-  * Scale notes: `partitionBy("date")` makes every executor write only
-  * the partitions present in its shuffle split; downstream readers prune
-  * by directory (partition pruning — a `WHERE date = X` never touches
-  * other days' files). KPI rows are one-per-day so the write volume is tiny
-  * regardless of input SF; for high-cardinality partition keys you would
-  * `repartition($"date")` first to avoid small-file explosion.
+  * Scale notes: downstream readers prune by directory (partition
+  * pruning — a `WHERE date = X` never touches other days' files). KPI
+  * rows are one per day, so the write volume is tiny regardless of
+  * input SF, and [[writeKpiPartitioned]] collects and lands them;
+  * a lake with many rows per partition goes through Spark's
+  * partitioned writer (p14).
   */
 object SinkOps {
 
-  /** Write `kpi` partitioned by `date` (JSON like the reference by
-    * default; parquet also supported) and return the output path. */
-  def writeKpiPartitioned(kpi: DataFrame, path: String, format: String = "json"): String = {
-    kpi.write.mode("overwrite").format(format).partitionBy("date").save(path)
+  /** Writes `kpi` (a `date` column plus the KPI columns) under `path`
+    * as one `date=<d>/part-00000.json` per date, with each row's
+    * non-date columns as one JSON document per line, and returns
+    * `path`. The layout and the file bytes are those of
+    * `kpi.write.mode("overwrite").partitionBy("date").json(path)`: the
+    * documents are Spark's own `to_json` rendering and the directory
+    * names Spark's partition path strings.
+    *
+    * The rows are collected and written through `path`'s
+    * Hadoop FileSystem ([[graft.io.LocalFs]] for `file:`), so no write
+    * job is planned or run. Each date is replaced on its own: its file
+    * is written under a hidden temp name in its `date=` dir and renamed
+    * over `part-00000.json`, and then every other `part-*` file of that
+    * dir (an earlier Spark-written one) is deleted. Every `date=` dir
+    * with no row in `kpi` is deleted, so `path` ends up holding
+    * exactly `kpi`. A reader never sees a date dir without its file,
+    * only (between two dates' renames) some dates already new. */
+  def writeKpiPartitioned(kpi: DataFrame, path: String): String = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val docCols = kpi.columns.filterNot(_ == "date").map(c => kpi.col(s"`$c`")).toIndexedSeq
+    val byDir = kpi.select(col("date").cast(StringType), to_json(struct(docCols: _*)))
+      .collect().toSeq
+      .groupMap(r => ExternalCatalogUtils.getPartitionPathString("date", r.getString(0)))(
+        _.getString(1))
+    val root = new Path(path)
+    val fs = root.getFileSystem(kpi.sparkSession.sessionState.newHadoopConf())
+    fs.mkdirs(root)
+    byDir.foreach { case (name, docs) =>
+      val dir = new Path(root, name)
+      val part = new Path(dir, "part-00000.json")
+      val tmp = new Path(dir, ".part-00000.json.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(docs.map(_ + "\n").mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      // a filesystem whose rename does not replace an existing file
+      // (HDFS) gets the old one deleted first
+      if (!fs.rename(tmp, part) && !(fs.delete(part, false) && fs.rename(tmp, part)))
+        throw new java.io.IOException(s"could not rename $tmp to $part")
+      fs.listStatus(dir).map(_.getPath)
+        .filter(p => p.getName.startsWith("part-") && p.getName != part.getName)
+        .foreach(fs.delete(_, false))
+    }
+    fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
+      .filter(p => p.getName.startsWith("date=") && !byDir.contains(p.getName))
+      .foreach(fs.delete(_, true))
     path
   }
 
@@ -60,7 +102,8 @@ object SinkOps {
     * JSON) also round-trips doubles bit-exactly with no re-parse. */
   def partitionedParquetRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.functions.F.sinkPath("kpi_parquet", dir)
-    writeKpiPartitioned(TripPipeline.kpiDailyByType(spark, dir), out, "parquet")
+    TripPipeline.kpiDailyByType(spark, dir)
+      .write.mode("overwrite").partitionBy("date").parquet(out)
     prunedKpiRead(spark, out)
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery}
@@ -19,13 +19,17 @@ case class TripEvent(
     value: java.lang.Double)
 
 /** Per-user matcher state: the earliest signup seen (null until one
-  * arrives) and whether the completed trip was already emitted. Two
-  * fields per user, but one row for EVERY user seen so far: the
-  * NoTimeout matcher ([[StreamPipeline.matchedTrips]]) never drops a
-  * user, finished trips included, so the state grows with the number
-  * of users (a traced 62-batch trip_stream run went from 33.6k to
-  * 149.6k state rows). [[StreamPipeline.matchedTripsStandalone]] reaps
-  * it, but cannot feed another stateful operator. */
+  * arrives) and whether the completed trip was already emitted. It is
+  * also the KPI chain's only re-delivery guard (the reference's
+  * `check_existing`, first event wins per trip and kind): a repeated
+  * signup cannot lower `startTs`, and a repeated purchase after the
+  * trip was emitted finds `emitted` set. Two fields per user, but one
+  * row for EVERY user seen so far: the NoTimeout matcher
+  * ([[StreamPipeline.matchedTrips]]) never drops a user, finished trips
+  * included, so the state grows with the number of users (a traced
+  * 62-batch trip_stream run went from 33.6k to 149.6k state rows).
+  * [[StreamPipeline.matchedTripsStandalone]] reaps it, but cannot feed
+  * another stateful operator. */
 case class TripMatchState(startTs: Timestamp, emitted: Boolean)
 
 /** A completed trip: first signup matched with the first at-or-after
@@ -36,17 +40,20 @@ case class CompletedTrip(user_id: Long, start_ts: Timestamp, end_ts: Timestamp, 
 /** Structured Streaming re-expression of the reference's real-time
   * ingestion path (Kinesis → Lambda per-event processing,
   * lambdas/TripStartProcessor/TripStartProcessor.py): the same
-  * validate → dedup → stateful trip match → daily KPI chain as the
-  * batch TripPipeline, expressed over an unbounded source.
+  * validate → stateful trip match → daily KPI chain as the batch
+  * TripPipeline, expressed over an unbounded source.
   *
   * Mapping of reference semantics onto streaming operators:
   *  - per-event schema validation (TripStartProcessor.py:29-45) →
   *    the SAME TripPipeline.validCond filter, applied per micro-batch;
   *  - idempotent ingestion / "already processed" check
-  *    (TripStartProcessor.py:60-72 `check_existing`) → watermarked
-  *    `dropDuplicates(event_id)`: at-least-once sources (Kinesis
-  *    re-delivery) collapse to exactly-once, and the watermark bounds
-  *    the dedup state instead of letting it grow forever;
+  *    (TripStartProcessor.py:60-72 `check_existing`, first event wins
+  *    per trip and kind) → the matcher's own state (below): a
+  *    re-delivered signup cannot lower the kept first signup, and a
+  *    purchase re-delivered after its trip was emitted is ignored, so
+  *    at-least-once sources (Kinesis re-delivery) cannot move a KPI
+  *    and the chain needs no event_id dedup. There is no watermark:
+  *    late rows count, as in batch p5 and its oracle;
   *  - trip completion matching (KPI-Aggregator.py:98) →
   *    `flatMapGroupsWithState` keyed by user: state is (first signup
   *    ts, emitted?) and a completed trip is emitted on the first
@@ -54,15 +61,15 @@ case class CompletedTrip(user_id: Long, start_ts: Timestamp, end_ts: Timestamp, 
   *  - daily KPI aggregation (KPI-Aggregator.py:104-110) → event-time
   *    window aggregation over the matched trips.
   *
-  * Scale notes: the chain shuffles three times, once per stateful
-  * operator (`explain()` of the KPI chain): the dedup hash-partitions on
-  * event_id, the matcher on user_id (its grouping key) and the daily
-  * aggregation on the window. Matcher state is 2 small fields per user,
-  * kept for every user ever seen (see [[TripMatchState]]); watermarks
-  * bound the dedup state. Exactness caveat (inherent to single-pass
-  * streaming): results equal the batch pipeline when events arrive in
-  * event-time order per user — intra-batch disorder is handled by
-  * sorting each group's batch slice, cross-batch disorder would need
+  * Scale notes: the chain shuffles twice, once per stateful operator
+  * (`explain()` of the KPI chain): the matcher hash-partitions on
+  * user_id (its grouping key) and the daily aggregation on the window.
+  * Matcher state is 2 small fields per user, kept for every user ever
+  * seen (see [[TripMatchState]]). Exactness caveat (inherent to
+  * single-pass streaming): results equal the batch pipeline when events
+  * arrive in event-time order per user — intra-batch disorder is
+  * handled by sorting each group's batch slice, cross-batch disorder
+  * (other than an exact re-delivery, see [[matchedTrips]]) would need
   * retraction, which the reference (DynamoDB conditional writes)
   * doesn't do either.
   *
@@ -71,54 +78,71 @@ case class CompletedTrip(user_id: Long, start_ts: Timestamp, end_ts: Timestamp, 
   * to completion over a finite staged input, and every one of them
   * does so through [[run]] (the memory-sink form is [[toMemory]],
   * sink `graft_<key>_<dirTag>`). A run scopes the state store count,
-  * starts each query through [[startStream]], processes all available
-  * input, then records the key's floor and per-batch progress and
-  * stops its queries, also on failure. An input table is staged by
-  * [[staged]]: one copy of `$dir/<table>.parquet` per (table, dir)
-  * per JVM, read on [[graft.Tables.rawSchema]]; p15, p30 and p35 stage
-  * their own files (sentinel, wire shape, replay order), one-file
-  * landings through [[landFile]]. There is no knob for another path;
-  * restart and counter runs attach in [[run]]. The one unbounded
-  * query, [[kpiSinkStream]], starts through [[startStream]] itself.
-  * StreamingSpec fails if any other source file calls
-  * `processAllAvailable`, makes a memory sink or scopes the state
-  * partitions.
+  * starts each query, processes all available input, then records the
+  * key's floor and per-batch progress and stops its queries, also on
+  * failure. An input table is staged by [[staged]]: one copy of
+  * `$dir/<table>.parquet` per (table, dir) per JVM, read on
+  * [[graft.Tables.rawSchema]]; p15, p30 and p35 stage their own files
+  * (sentinel, wire shape, replay order), one-file landings through
+  * [[landFile]]. There is no knob for another path; restart and
+  * counter runs attach in [[run]]. The one unbounded query,
+  * [[kpiSinkStream]], starts itself. StreamingSpec fails if any other
+  * source file calls `processAllAvailable`, makes a memory sink or
+  * scopes the state partitions.
   */
 object StreamPipeline {
 
-  /** validate + watermark + exactly-once ingestion dedup on event_id.
-    * dropDuplicatesWithinWatermark (NOT plain dropDuplicates): with the
-    * event-time column absent from the dedup subset, plain dedup state
-    * is never evicted and grows with every event_id ever seen; the
-    * within-watermark variant reaps keys once the watermark passes them,
-    * which also matches the real guarantee needed — Kinesis re-delivery
-    * happens within a bounded window, not years later. */
+  /** validate + watermark + exactly-once ingestion dedup on event_id,
+    * the input of [[matchedTripsStandalone]] (its event-time timeout
+    * needs the watermark; the KPI chain needs neither, see
+    * [[matchedTrips]]). dropDuplicatesWithinWatermark (NOT plain
+    * dropDuplicates): with the event-time column absent from the dedup
+    * subset, plain dedup state is never evicted and grows with every
+    * event_id ever seen; the within-watermark variant reaps keys once
+    * the watermark passes them. */
   def dedupedEvents(events: DataFrame): DataFrame =
     events.filter(TripPipeline.validCond)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Stateful trip matcher over the deduped stream.
+  /** Stateful trip matcher over the validated stream, with no dedup
+    * and no watermark in front of it.
     *
-    * State-cleanup note: the matcher runs with NoTimeout because Spark's
-    * global-watermark correctness check (rightly) refuses an event-time-
-    * timeout flatMapGroupsWithState that FEEDS another stateful operator
-    * — a timeout-armed matcher may emit rows already older than the
-    * watermark, which the downstream window aggregation would silently
-    * drop. In a deployment where matcher state must be reaped (abandoned
-    * trips), split the query at this boundary: run the matcher with
-    * EventTimeTimeout into a foreachBatch/Kafka sink and aggregate in a
-    * second query, exactly like the reference splits Lambda (match) from
-    * Glue (aggregate). State is 2 fields per user either way; here it
-    * keeps a row for every user ever seen. */
+    * Re-delivery: [[matchOne]]'s state is first-event-wins per user and
+    * kind, so an exact re-delivery cannot move a KPI: a repeated signup
+    * cannot lower the kept minimum, and a repeated purchase after the
+    * trip was emitted is ignored. Without a dedup or watermark the
+    * matcher also agrees with batch p4/p5 and the oracle in two cases
+    * the dedup changed: late rows count however old they are, and a
+    * purchase that arrived before its (earlier) signup and is
+    * re-delivered after it completes the trip.
+    *
+    * State-cleanup note: the matcher runs with NoTimeout. An
+    * event-time timeout needs a watermark on this input, and Spark's
+    * global-watermark correctness check (rightly) refuses an
+    * event-time-timeout flatMapGroupsWithState that FEEDS another
+    * stateful operator — a timeout-armed matcher may emit rows already
+    * older than the watermark, which the downstream window aggregation
+    * would silently drop. In a deployment where matcher state must be
+    * reaped (abandoned trips), split the query at this boundary: run the
+    * matcher with EventTimeTimeout into a foreachBatch/Kafka sink and
+    * aggregate in a second query, exactly like the reference splits
+    * Lambda (match) from Glue (aggregate). State is 2 fields per user
+    * either way; here it keeps a row for every user ever seen. */
   def matchedTrips(spark: SparkSession, events: DataFrame): Dataset[CompletedTrip] = {
     import spark.implicits._
-    dedupedEvents(events)
-      .filter(col("event_type").isin("signup", "purchase"))
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[TripEvent]
-      .groupByKey(_.user_id.longValue())
+    tripEventsByUser(spark, events)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(matchOne)
+  }
+
+  /** The valid signup and purchase events of `events` grouped by the
+    * user_id column itself (no per-row key function). */
+  private def tripEventsByUser(spark: SparkSession, events: DataFrame)
+      : KeyValueGroupedDataset[Long, TripEvent] = {
+    import spark.implicits._
+    events.filter(TripPipeline.validCond && col("event_type").isin("signup", "purchase"))
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      .groupBy(col("user_id")).as[Long, TripEvent]
   }
 
   /** How long a user's matcher state outlives the watermark before the
@@ -136,11 +160,7 @@ object StreamPipeline {
       events: DataFrame,
       retentionMs: Long = StateRetentionMs): Dataset[CompletedTrip] = {
     import spark.implicits._
-    dedupedEvents(events)
-      .filter(col("event_type").isin("signup", "purchase"))
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[TripEvent]
-      .groupByKey(_.user_id.longValue())
+    tripEventsByUser(spark, dedupedEvents(events))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         matchOneWithTimeout(retentionMs))
   }
@@ -283,38 +303,42 @@ object StreamPipeline {
   }
 
   /** Streaming partitioned KPI sink: lands the daily KPIs under
-    * `date=.../part-....json` via foreachBatch, same layout as the batch
-    * SinkOps / the reference's Glue writer
-    * (glue_jobs/KPI-Aggregator.py:117-125). Complete-mode batches carry
-    * the full KPI set, so a full overwrite per micro-batch is idempotent
-    * under retries (re-running batch N rewrites the same content).
+    * `date=.../part-00000.json` via foreachBatch, through the batch
+    * writer [[graft.pipeline.SinkOps.writeKpiPartitioned]] (same layout
+    * as the reference's Glue writer, glue_jobs/KPI-Aggregator.py:117-125).
+    * Complete-mode batches carry the full KPI set, so a full overwrite
+    * per micro-batch is idempotent under retries (re-running batch N
+    * rewrites the same content).
     *
-    * One trigger per landed batch: the query runs without Spark's
-    * no-data micro-batch ([[startStream]]), which would re-commit
-    * every state store and rewrite every `date=` partition with the
-    * same content after each move of the watermark. That is right only
-    * while no operator of [[kpiDailyStream]] emits output when the
-    * watermark alone moves. */
+    * One trigger per landed batch, with three stages and no write job:
+    * [[kpiDailyStream]] holds no watermark, so Spark never schedules a
+    * no-data micro-batch for it, and the sink collects the few KPI rows
+    * instead of planning a partitioned write.
+    *
+    * The query names no checkpoint, so each start runs on a fresh
+    * temporary one. A checkpoint of this chain written before it lost
+    * its event_id dedup (one stateful operator more) does not resume
+    * under it: restart such a query from a fresh checkpoint. */
   def kpiSinkStream(
       spark: SparkSession,
       events: DataFrame,
       path: String): org.apache.spark.sql.streaming.StreamingQuery =
-    startStream(spark, kpiDailyStream(spark, events).writeStream
+    kpiDailyStream(spark, events).writeStream
       .outputMode("complete")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         graft.pipeline.SinkOps.writeKpiPartitioned(batch.toDF(), path): Unit
-      }, noDataBatches = false)
+      }.start()
 
   /** p9 as an oracle-checkable BATCH result: drives the full streaming
-    * pipeline (validate → watermarked dedup → stateful match → windowed
-    * KPI) over the events parquet through a REAL file streaming source
-    * and returns the materialized memory-sink table. Because the
-    * streaming chain is equivalent to the batch pipeline on in-order
-    * input (proven under re-delivery by StreamingSpec), the result
-    * hash-matches the same DuckDB oracle as p5 — which is what promotes
-    * the streaming operator from test-verified to oracle-verified. */
+    * pipeline (validate → stateful match → windowed KPI) over the events
+    * parquet through a REAL file streaming source and returns the
+    * materialized memory-sink table. Because the streaming chain is
+    * equivalent to the batch pipeline on in-order input (proven under
+    * re-delivery by StreamingSpec), the result hash-matches the same
+    * DuckDB oracle as p5 — which is what promotes the streaming
+    * operator from test-verified to oracle-verified. */
   def kpiDailyViaFileStream(spark: SparkSession, dir: String): DataFrame =
-    toMemory(spark, "p9", dir, "complete", noDataBatches = false)(
+    toMemory(spark, "p9", dir, "complete")(
       kpiDailyStream(spark, staged(spark, dir, "events"))).orderBy("date")
 
   /** Runs `body` with the session's shuffle-partition count — which for
@@ -344,50 +368,27 @@ object StreamPipeline {
     }
   }
 
-  /** Spark's switch for the extra micro-batch it runs with no new input
-    * after the watermark moves. */
-  private[graft] val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-
-  /** Starts a streaming query. Every query graft starts goes through
-    * here: the finite runs through [[run]], the unbounded
-    * [[kpiSinkStream]] directly.
-    *
-    * Its checkpoint needs no setting: `core-site.xml` puts every local
-    * checkpoint on [[graft.io.LocalCheckpointFileManager]] (why:
-    * [[graft.io.LocalFs]]).
-    *
-    * `noDataBatches = false` is for the [[kpiDailyStream]] chain only:
-    * it runs without Spark's no-data micro-batch, so each batch of input
-    * costs one trigger (why that is safe: kpiDailyStream's scaladoc).
-    * The skipped batch would re-emit the previous KPI set unchanged; the
-    * next data batch evicts the dedup's expired keys against the same
-    * watermark. It filters late rows against the previous batch's
-    * watermark, one batch older than behind a no-data batch, so the
-    * chain drops fewer late rows, never more. Append- and update-mode
-    * outputs need the no-data batch to emit closed windows and sessions.
-    *
-    * The query reads the switch from the session copy it takes in
-    * `start()`, so it is set only around that call. */
-  private[graft] def startStream(spark: SparkSession, writer: DataStreamWriter[Row],
-      noDataBatches: Boolean = true): StreamingQuery =
-    if (noDataBatches) writer.start()
-    else withSessionConf(spark, NoDataBatchesKey -> "false")(writer.start())
-
   /** Runs `kind`'s stream queries over their finite staged input to
     * completion — the one way graft does it. The run scopes the shuffle
     * partition (state store) count to [[materializeStateParts]], the
     * stateless p39–p41 included (their stream-static shuffle joins ran
-    * no slower at that count), starts every writer through
-    * [[startStream]] and has each query process all available input.
-    * Whether that succeeds or throws, it records `kind`'s floor and
-    * per-batch progress ([[streamFloors]], [[lastProgress]]) and stops
-    * every query it started. */
-  private[graft] def run(spark: SparkSession, kind: String, dir: String,
-      noDataBatches: Boolean = true)(writers: DataStreamWriter[Row]*): Unit =
+    * no slower at that count), starts every writer and has each query
+    * process all available input. Whether that succeeds or throws, it
+    * records `kind`'s floor and per-batch progress ([[streamFloors]],
+    * [[lastProgress]]) and stops every query it started.
+    *
+    * A start needs no setting: `core-site.xml` puts every local
+    * checkpoint on [[graft.io.LocalCheckpointFileManager]] (why:
+    * [[graft.io.LocalFs]]), and each query keeps Spark's no-data
+    * micro-batches, which append- and update-mode outputs need to emit
+    * closed windows and sessions (the [[kpiDailyStream]] chain holds no
+    * watermark, so it never gets one). */
+  private[graft] def run(spark: SparkSession, kind: String, dir: String)(
+      writers: DataStreamWriter[Row]*): Unit =
     withStatePartitions(spark, materializeStateParts(spark, dir)) {
       val qs = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
       try {
-        writers.foreach(w => qs += startStream(spark, w, noDataBatches))
+        writers.foreach(w => qs += w.start())
         qs.foreach(_.processAllAvailable())
       } finally {
         if (qs.nonEmpty) record(kind, qs.toSeq)
@@ -398,10 +399,10 @@ object StreamPipeline {
   /** [[run]] with `df` written to a memory sink in output `mode`, run
     * alongside the `also` writers (e18's code lake leg), and the sink
     * returned as a table. */
-  private[graft] def toMemory(spark: SparkSession, kind: String, dir: String, mode: String,
-      noDataBatches: Boolean = true)(df: DataFrame, also: DataStreamWriter[Row]*): DataFrame = {
+  private[graft] def toMemory(spark: SparkSession, kind: String, dir: String, mode: String)(
+      df: DataFrame, also: DataStreamWriter[Row]*): DataFrame = {
     val name = sinkName(kind, dir)
-    run(spark, kind, dir, noDataBatches)(
+    run(spark, kind, dir)(
       also :+ df.writeStream.format("memory").queryName(name).outputMode(mode): _*)
     spark.table(name)
   }
@@ -478,7 +479,7 @@ object StreamPipeline {
     * original scheme, could collide across dirs — and
     * `math.abs(Int.MinValue)` is negative — either of which would
     * cross-contaminate two operators' streamed inputs.) */
-  private def stagingPath(kind: String, dir: String): String =
+  private[graft] def stagingPath(kind: String, dir: String): String =
     s"target/graft-$kind-stream-" + dirTag(dir)
 
   /** Input table `table` of `dir` behind a REAL file streaming source —
@@ -563,7 +564,7 @@ object StreamPipeline {
     * payloads in Kafka's record shape, the wire decode
     * (KafkaEvents.decodeEvents — the same column logic the real Kafka
     * source feeds) parses them, corrupt payloads are skipped
-    * (never crash), and the UNCHANGED validate → dedup → match → KPI
+    * (never crash), and the UNCHANGED validate → match → KPI
     * chain (kpiDailyStream) runs downstream — proving the pipeline is
     * source-agnostic in code, not just in claim. Oracle: p5/p9's daily
     * KPI statement over a per-wire-class ts-truncated events relation
@@ -572,7 +573,7 @@ object StreamPipeline {
     * re-invented precision, crashed, or leaked the corrupt records
     * could not stay green. */
   def kpiDailyViaKafkaWire(spark: SparkSession, dir: String): DataFrame =
-    toMemory(spark, "p30", dir, "complete", noDataBatches = false)(kpiDailyStream(spark,
+    toMemory(spark, "p30", dir, "complete")(kpiDailyStream(spark,
       graft.sources.KafkaEvents.decodeEvents(stagedWireStream(spark, dir)))).orderBy("date")
 
   /** How long after a signup a purchase still completes that trip in
@@ -664,7 +665,7 @@ object StreamPipeline {
     * days kept, not with the dates the batch touched. */
   def idempotentKpiSink(spark: SparkSession, dir: String): DataFrame = {
     val out = stagingPath("p21sink", dir)
-    run(spark, "p21", dir, noDataBatches = false)(
+    run(spark, "p21", dir)(
       kpiDailyStream(spark, staged(spark, dir, "events"))
         .writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -757,11 +758,11 @@ object StreamPipeline {
 
   /** p34: STREAMING EWMA FORECAST — a14's predictive leg live, on
     * p26's deployment split: the per-(event_type, day) counts are the
-    * bounded stream state (watermarked event_id dedup upstream — p9's
-    * exactly-once discipline; days × types rows at any volume), and
-    * the 7-lag binary-weight fold — which needs an ORDERED trailing
-    * window — runs over the tiny materialized count table at forecast
-    * time. The fold is `Analytics.ewmaFoldOver`, the IDENTICAL
+    * bounded stream state (watermarked event_id dedup upstream: a
+    * count, unlike p9's first-event-wins matcher, is not idempotent;
+    * days × types rows at any volume), and the 7-lag binary-weight
+    * fold — which needs an ORDERED trailing window — runs over the tiny
+    * materialized count table at forecast time. The fold is `Analytics.ewmaFoldOver`, the IDENTICAL
     * definition batch a14 runs, so the streamed forecast cannot drift
     * from the batch one (spec pins hash-equality); the oracle is a14's
     * statement verbatim. */
@@ -912,11 +913,11 @@ object StreamPipeline {
     * and max is idempotent + associative, so the state merges correctly
     * across micro-batches and re-deliveries (count is not idempotent,
     * so exactly-once change counts ride on the upstream watermarked
-    * dedup — p9's discipline). The base snapshot joins in BATCH-side at
-    * read time (full outer on the key): a key with no changes keeps its
-    * base value, a key whose latest op is a delete disappears, a
-    * never-seen key inserts — bit-identical to the batch p23 (proven by
-    * spec; the oracle is p23's statement).
+    * dedup). The base snapshot joins in BATCH-side at read time (full
+    * outer on the key): a key with no changes keeps its base value, a
+    * key whose latest op is a delete disappears, a never-seen key
+    * inserts — bit-identical to the batch p23 (proven by spec; the
+    * oracle is p23's statement).
     *
     * Scale shape: state is ONE small struct per key — the minimum any
     * keyed materialized view can hold — vs the per-batch MERGE loop's
@@ -1195,14 +1196,13 @@ object StreamPipeline {
   /** Daily KPIs over the matched-trip stream — event-time 1-day window,
     * same decimal-exact aggregates as the batch kpiDaily.
     *
-    * No operator here emits output when only the watermark moves: the
-    * watermarked dedup asks for a no-data batch only to evict expired
-    * keys, the NoTimeout matcher has no timeout to fire, and the
-    * complete-mode aggregation neither evicts nor emits on a watermark
-    * move. Its four starts ([[kpiSinkStream]], p9, p21, p30) rely on
-    * that to skip Spark's no-data micro-batch ([[startStream]]). A
-    * timeout-armed matcher or an append-mode output added here must
-    * turn no-data batches back on for them. */
+    * Two stateful operators, the [[matchedTrips]] matcher and the
+    * complete-mode window aggregation, and no watermark: Spark runs a
+    * no-data micro-batch only for an operator with a watermark or a
+    * timeout to act on, so each batch of input costs one trigger for
+    * all four starts ([[kpiSinkStream]], p9, p21, p30). A timeout-armed
+    * matcher needs `withWatermark` back in front of it, and with it
+    * the no-data batches (or an explicit switch to skip them). */
   def kpiDailyStream(spark: SparkSession, events: DataFrame): DataFrame =
     matchedTrips(spark, events).toDF()
       .groupBy(window(col("end_ts"), "1 day").as("w"))

@@ -619,10 +619,12 @@ class DepthOpsSpec extends AnyFunSuite with SparkSpec {
         rows.map { case (id, t) => Row(id, ts(t), 7L, "click", 1.0, null) }.asJava,
         schema)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = graft.streaming.StreamPipeline.lateDataAccounting(spark, dir)
+    val out = try graft.streaming.StreamPipeline.lateDataAccounting(spark, dir)
       .collect()
       .map(r => (localDateTimeOf(r.get(0)).toString,
         r.getLong(2), r.getLong(3), r.getLong(4)))
+    finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(graft.streaming.StreamPipeline.stagingPath("p35", dir)))
     val expected = Array(
       ("2024-01-01T09:00", 1L, 0L, 1L),
       ("2024-01-01T10:00", 3L, 2L, 1L), // the == boundary row is DROPPED

@@ -112,6 +112,34 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(parts.length === direct.length)
   }
 
+  test("the KPI sink writes Spark's bytes, one part file per date, and drops absent dates") {
+    import java.nio.file.{Files, Paths}
+    val kpi = TripPipeline.kpiDaily(spark, Sf0001).localCheckpoint()
+    Files.createDirectories(Paths.get("target"))
+    val tmp = Files.createTempDirectory(Paths.get("target"), "kpi-sink-spec")
+    try {
+      val reference = tmp.resolve("spark").toString
+      kpi.write.partitionBy("date").json(reference)
+      // the sink as Spark's writer left it, with one more date
+      val out = tmp.resolve("sink").toString
+      val gone = spark.createDataFrame(
+        java.util.List.of(Row(java.sql.Date.valueOf("1999-01-01"), 1.0, 1L, 1.0, 1.0, 1.0)),
+        kpi.schema)
+      kpi.unionByName(gone).write.partitionBy("date").json(out)
+      SinkOps.writeKpiPartitioned(kpi, out)
+      def dateDirs(p: String) =
+        new java.io.File(p).listFiles().filter(_.getName.startsWith("date=")).sortBy(_.getName)
+      assert(dateDirs(out).map(_.getName).toSeq === dateDirs(reference).map(_.getName).toSeq)
+      assert(dateDirs(out).length === kpi.count())
+      dateDirs(out).zip(dateDirs(reference)).foreach { case (d, r) =>
+        assert(d.list().filterNot(_.endsWith(".crc")).toSeq === Seq("part-00000.json"), d)
+        val sparkPart = r.listFiles().filter(_.getName.startsWith("part-")).head
+        assert(Files.readString(d.toPath.resolve("part-00000.json")) ===
+          Files.readString(sparkPart.toPath), d)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
   test("p16 incremental merge survives a late signup that MOVES a trip earlier") {
     // user 5 base: signup day2, purchases day1+day3 → base trip ends day3.
     // late signup day0 re-matches the day1 purchase → trip moves EARLIER.

@@ -105,8 +105,10 @@ class Round15OpsSpec extends AnyFunSuite with SparkSpec {
     assert(stream.exists(!_._2), "no in-stream contamination flag at sf0.001 — vacuous")
     // and the constructed paraphrase is REJECTED at the ingest gate
     val para = paraphraseDir
-    val pStream = graft.streaming.StreamPipeline.streamDecon(spark, para)
+    val pStream = try graft.streaming.StreamPipeline.streamDecon(spark, para)
       .collect().map(key).map { case (v, k, w, s) => v -> ((k, w, s)) }.toMap
+    finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(graft.streaming.StreamPipeline.stagingPath("embeddings", para)))
     assert(pStream(1L) === ((false, Some(0L), Some(1.0))),
       "paraphrase not rejected in-stream")
     DedupOps.clearMemo(spark, para)

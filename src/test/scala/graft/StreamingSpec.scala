@@ -13,7 +13,10 @@ import graft.streaming.StreamPipeline
   * order, and must be idempotent under at-least-once re-delivery. */
 class StreamingSpec extends AnyFunSuite with SparkSpec {
 
-  private def feedAndCollect(chunks: Seq[Seq[Row]], name: String): Array[Row] = {
+  /** The KPI chain fed `chunks`, one micro-batch each; `inspect` sees
+    * the query after the last one. */
+  private def feedAndCollect(chunks: Seq[Seq[Row]], name: String,
+      inspect: StreamingQuery => Unit = _ => ()): Array[Row] = {
     val evDf = Tables.events(spark, Sf0001)
     implicit val enc = Encoders.row(evDf.schema)
     val stream = MemoryStream[Row](enc, spark)
@@ -21,9 +24,19 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .writeStream.format("memory").queryName(name).outputMode("complete").start()
     try {
       chunks.foreach { c => stream.addData(c); query.processAllAvailable() }
+      inspect(query)
       spark.table(name).orderBy("date").collect()
     } finally query.stop()
   }
+
+  /** Batch p5 (`kpiDailyOf`) over every row of `chunks`. */
+  private def batchKpis(chunks: Seq[Seq[Row]]): Array[Row] =
+    TripPipeline.kpiDailyOf(spark.createDataFrame(
+      scala.jdk.CollectionConverters.SeqHasAsJava(chunks.flatten).asJava,
+      Tables.events(spark, Sf0001).schema)).collect()
+
+  private def event(id: Long, ts: String, user: Long, kind: String, value: Double): Row =
+    Row(id, java.sql.Timestamp.valueOf(ts), user, kind, value, null)
 
   private lazy val orderedEvents: Seq[Row] =
     Tables.events(spark, Sf0001).orderBy("ts", "event_id").collect().toSeq
@@ -61,11 +74,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streaming foreachBatch sink lands the batch-identical partitioned KPIs") {
-    val noData = StreamPipeline.NoDataBatchesKey
-    // every session key the start helper sets
-    val keys = Seq(noData)
-    def settings(): Seq[Option[String]] = keys.map(spark.conf.getAll.get)
-    val before = settings()
     val evDf = Tables.events(spark, Sf0001)
     implicit val enc = Encoders.row(evDf.schema)
     val stream = MemoryStream[Row](enc, spark)
@@ -75,12 +83,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // trigger ahead of it reports a progress
     stream.addData(chunks.head)
     val query = StreamPipeline.kpiSinkStream(spark, stream.toDF(), out)
-    assert(settings() === before, "kpiSinkStream must leave the session keys it sets as they were")
     try {
       query.processAllAvailable()
       chunks.tail.foreach { c => stream.addData(c); query.processAllAvailable() }
-      // one trigger per landed batch: the watermark moving after a batch
-      // must not cost a second, input-less trigger
+      // one trigger per landed batch: no operator of the chain may ask
+      // for a second, input-less trigger
       val progress = query.recentProgress
       assert(progress.length === chunks.length,
         s"input rows per trigger: ${progress.map(_.numInputRows).mkString(", ")}")
@@ -98,19 +105,50 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(g.getLong(2) === e.getLong(2))
       assert(math.abs(g.getDouble(1) - e.getDouble(1)) < 1e-9)
     }
-    // p9 gives back explicitly set values too. The p15 test below runs
-    // after both starts and still needs the session's no-data batches
-    // to close its sessions.
-    val explicit = Seq("true")
-    keys.zip(explicit).foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      assert(StreamPipeline.kpiDailyViaFileStream(spark, Sf0001).count() === batch.length)
-      assert(settings() === explicit.map(Some(_)),
-        "p9 must leave the session keys it sets as they were")
-    } finally keys.zip(before).foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    // three rewrites of the sink leave one part file per date dir and
+    // no temp file (the .crc sidecars are the checksummed filesystem's)
+    val dateDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("date="))
+    assert(dateDirs.length === batch.length)
+    dateDirs.foreach { d =>
+      assert(d.list().filterNot(_.endsWith(".crc")).toSeq === Seq("part-00000.json"), d)
     }
+  }
+
+  test("a purchase re-delivered after its late-arriving earlier signup completes the trip") {
+    val purchase = event(10L, "2024-01-01 10:00:00", 1L, "purchase", 25.5)
+    val chunks = Seq(
+      Seq(purchase, event(11L, "2024-01-01 08:00:00", 2L, "signup", 0.0)),
+      Seq(event(12L, "2024-01-01 09:00:00", 1L, "signup", 0.0),
+        event(13L, "2024-01-01 11:00:00", 2L, "purchase", 7.25)),
+      Seq(purchase))
+    val batch = batchKpis(chunks)
+    assert(batch.map(_.getLong(2)).sum === 2L, "both users complete a trip in batch")
+    assert(feedAndCollect(chunks, "kpi_stream_late_signup").toSeq === batch.toSeq)
+  }
+
+  test("a signup older than the stream's max ts by more than an hour counts as in batch") {
+    // three batches of a later day first, so any one-hour watermark
+    // would stand far past the signup when it lands
+    val later = (0L until 3L).map(i =>
+      Seq(event(20L + i, "2024-01-02 12:00:00", 100L + i, "click", 1.0)))
+    val chunks = later ++ Seq(
+      Seq(event(30L, "2024-01-02 09:00:00", 3L, "signup", 0.0)),
+      Seq(event(31L, "2024-01-02 12:30:00", 3L, "purchase", 40.0)))
+    val batch = batchKpis(chunks)
+    assert(batch.map(_.getLong(2)).sum === 1L)
+    assert(feedAndCollect(chunks, "kpi_stream_old_signup").toSeq === batch.toSeq)
+  }
+
+  test("the KPI chain runs two stateful operators and no watermark") {
+    import org.apache.spark.sql.execution.streaming.operators.stateful.{EventTimeWatermarkExec,
+      StateStoreWriter}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    var plan: org.apache.spark.sql.execution.SparkPlan = null
+    feedAndCollect(Seq(orderedEvents.take(200)), "kpi_stream_plan", q =>
+      plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
+    val stateful = plan.collect { case s: StateStoreWriter => s.nodeName }
+    assert(stateful.length === 2, stateful)
+    assert(plan.collect { case w: EventTimeWatermarkExec => w }.isEmpty, plan.treeString)
   }
 
   test("p9 on two data dirs in one session returns each dir's own batch kpiDaily") {
@@ -304,8 +342,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     spark.read.parquet(out).orderBy("user_id").collect()
   }
 
-  private val helperStart: DataStreamWriter[Row] => StreamingQuery =
-    StreamPipeline.startStream(spark, _)
+  /** A plain start: `core-site.xml` gives it graft's checkpoint manager. */
+  private val helperStart: DataStreamWriter[Row] => StreamingQuery = _.start()
   /** A start under Spark's default checkpoint manager, named explicitly:
     * graft's `core-site.xml` makes graft's manager the default of every
     * conf that does not. */
@@ -385,8 +423,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val half = orderedEvents.length / 2
     val first = orderedEvents.take(half)
     val second = orderedEvents.drop(half)
-    // re-deliver the tail chunk (inside the watermark) — the watermarked
-    // dropDuplicates(event_id) must absorb it
+    // re-deliver the tail chunk — the matcher's first-event-wins state
+    // must absorb it
     val got = feedAndCollect(Seq(first, second, second), "kpi_stream_redeliver")
     assert(got.length === batch.length)
     got.zip(batch).foreach { case (g, e) =>
