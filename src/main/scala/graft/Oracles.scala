@@ -1899,8 +1899,9 @@ object Oracles {
          |FROM trips GROUP BY CAST(end_ts AS DATE) ORDER BY date""".stripMargin,
 
     // p21: the idempotent-sink round-trip must preserve the daily KPIs
-    // bit-for-bit — its oracle IS the p5 SQL (parquet round-trips the
-    // doubles exactly; the streaming agg is batch-equivalent like p9).
+    // bit-for-bit — its oracle IS the p5 SQL (the JSON documents
+    // round-trip the doubles exactly, as p10's do; the streaming agg is
+    // batch-equivalent like p9).
     "p21_idempotent_sink" ->
       s"""WITH $tripCte
          |SELECT CAST(end_ts AS DATE) AS date,

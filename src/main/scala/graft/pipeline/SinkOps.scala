@@ -78,6 +78,14 @@ object SinkOps {
     StructField("max_fare", DoubleType),
     StructField("min_fare", DoubleType)))
 
+  /** Reads back what [[writeKpiPartitioned]] landed under `path`: read
+    * on [[kpiDataSchema]], `date` cast to a date and first, the KPI
+    * columns in the order they were written, ordered by date. */
+  def readKpiPartitioned(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(kpiDataSchema).json(path)
+      .select(col("date").cast(DateType).as("date") +: kpiDataSchema.fieldNames.toSeq.map(col): _*)
+      .orderBy("date")
+
   /** p10: daily-KPI partitioned sink round-trip — computes kpiDaily,
     * writes it `date=.../part-*.json` like the reference, reads the
     * partition tree back with an explicit schema, and returns the
@@ -85,11 +93,7 @@ object SinkOps {
     * every value bit-for-bit). */
   def kpiSinkRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.functions.F.sinkPath("kpi_daily", dir)
-    writeKpiPartitioned(TripPipeline.kpiDaily(spark, dir), out)
-    spark.read.schema(kpiDataSchema).json(out)
-      .select(col("date").cast(DateType).as("date"), col("total_fare"),
-        col("count_trips"), col("average_fare"), col("max_fare"), col("min_fare"))
-      .orderBy("date")
+    readKpiPartitioned(spark, writeKpiPartitioned(TripPipeline.kpiDaily(spark, dir), out))
   }
 
   /** p14: parquet lake layout + PARTITION PRUNING — the by-type daily
@@ -181,26 +185,6 @@ object SinkOps {
       .orderBy("date", "event_type")
   }
 
-  /** p24: SMALL-FILE COMPACTION — the lake-maintenance pass every
-    * streaming/incremental sink eventually needs: a landing zone of many
-    * tiny files (here: the event log deliberately fragmented into 96
-    * splits, the shape a per-micro-batch writer leaves behind) rewritten
-    * into few right-sized files, then verified content-identical.
-    *
-    * Spark realization: the compaction read-rewrite uses `coalesce`, NOT
-    * `repartition` — coalesce merges input splits on the map side with
-    * ZERO shuffle (compaction moves bytes, it must not also pay a
-    * network pass), and `maxRecordsPerFile` caps file size from the
-    * other direction. The returned verification aggregate (per-type
-    * counts + decimal-exact value sum + id-range) comes from the
-    * COMPACTED lake, so the oracle (which computes the same from the
-    * source table) proves the rewrite lost and duplicated nothing.
-    *
-    * Scale notes: at 100 TB compaction runs per partition directory
-    * (date=.../), each directory coalescing independently —
-    * embarrassingly parallel, bounded memory (a writer task streams
-    * row groups). File COUNT bounds (96 → ≤ 8) are pinned by spec, not
-    * here: the query contract is content equality. */
   /** p32: PARTITION BACKFILL — the reprocessing pass every production
     * lake eventually needs: a bug (or late data) invalidates a date
     * RANGE, and the fix recomputes THAT RANGE from the source and
@@ -321,6 +305,26 @@ object SinkOps {
       .orderBy("date")
   }
 
+  /** p24: SMALL-FILE COMPACTION — the lake-maintenance pass every
+    * streaming/incremental sink eventually needs: a landing zone of many
+    * tiny files (here: the event log deliberately fragmented into 96
+    * splits, the shape a per-micro-batch writer leaves behind) rewritten
+    * into few right-sized files, then verified content-identical.
+    *
+    * Spark realization: the compaction read-rewrite uses `coalesce`, NOT
+    * `repartition` — coalesce merges input splits on the map side with
+    * ZERO shuffle (compaction moves bytes, it must not also pay a
+    * network pass), and `maxRecordsPerFile` caps file size from the
+    * other direction. The returned verification aggregate (per-type
+    * counts + decimal-exact value sum + id-range) comes from the
+    * COMPACTED lake, so the oracle (which computes the same from the
+    * source table) proves the rewrite lost and duplicated nothing.
+    *
+    * Scale notes: at 100 TB compaction runs per partition directory
+    * (date=.../), each directory coalescing independently —
+    * embarrassingly parallel, bounded memory (a writer task streams
+    * row groups). File COUNT bounds (96 → ≤ 8) are pinned by spec, not
+    * here: the query contract is content equality. */
   def compactionRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val fragmented = graft.functions.F.sinkPath("frag", dir)
     val compacted = graft.functions.F.sinkPath("compact", dir)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -46,7 +46,7 @@ object TripPipeline {
     col("event_type").isin(KnownTypes: _*) &&
     col("value").isNotNull && col("value") >= 0.0
 
-  private def ntz(c: String): org.apache.spark.sql.Column =
+  private def ntz(c: String): Column =
     col(c).cast("timestamp_ntz")
 
   /** DataFrame-level validate — p1 on any events-shaped input (used by
@@ -166,14 +166,24 @@ object TripPipeline {
 
   /** p5 on any events relation — see [[tripMatchOf]]. */
   private[graft] def kpiDailyOf(ev: DataFrame): DataFrame =
-    tripMatchOf(ev)
-      .groupBy(to_date(col("end_ts")).as("date"))
-      .agg(
-        decSum(col("fare")).as("total_fare"),
-        count(lit(1)).as("count_trips"),
-        decAvg(col("fare")).as("average_fare"),
-        max(col("fare")).as("max_fare"),
-        min(col("fare")).as("min_fare"))
+    kpiByDate(tripMatchOf(ev))
+
+  /** THE five daily KPIs of a trip relation with a `fare` column, in
+    * output order. Batch p5 and p16 and the streaming
+    * [[graft.streaming.StreamPipeline.kpiDailyStream]] all aggregate
+    * with this one list, so their columns cannot drift apart. */
+  private[graft] val KpiAggs: Seq[Column] = Seq(
+    decSum(col("fare")).as("total_fare"),
+    count(lit(1)).as("count_trips"),
+    decAvg(col("fare")).as("average_fare"),
+    max(col("fare")).as("max_fare"),
+    min(col("fare")).as("min_fare"))
+
+  /** [[KpiAggs]] per completion date of `trips` (an `end_ts` and a
+    * `fare` column), ordered by date. */
+  private def kpiByDate(trips: DataFrame): DataFrame =
+    trips.groupBy(to_date(col("end_ts")).as("date"))
+      .agg(KpiAggs.head, KpiAggs.tail: _*)
       .orderBy("date")
 
   /** p6: KPIs by (date, event_type) — the natural extension the reference
@@ -292,7 +302,7 @@ object TripPipeline {
   /** DataFrame-level p16: `isLate` marks the delta rows (tests inject
     * adversarial late events — e.g. a signup that moves a trip to an
     * earlier date — through this). */
-  def incrementalKpiDf(ev: DataFrame, isLate: org.apache.spark.sql.Column): DataFrame = {
+  def incrementalKpiDf(ev: DataFrame, isLate: Column): DataFrame = {
     // no broadcast hint on the delta user set: a correction batch is
     // USUALLY small, but "usually small" is how fact-scale broadcasts
     // sneak in (the q3/q5 lesson) — AQE broadcasts it when runtime
@@ -302,16 +312,8 @@ object TripPipeline {
       .join(affectedUsers, Seq("user_id"), "left_anti")
     val rematchedTrips = tripsOf(
       ev.join(affectedUsers, Seq("user_id"), "left_semi"))
-    carriedTrips.unionByName(rematchedTrips)
-      .select(col("user_id"), ntz("ts").as("end_ts"), col("value").as("fare"))
-      .groupBy(to_date(col("end_ts")).as("date"))
-      .agg(
-        decSum(col("fare")).as("total_fare"),
-        count(lit(1)).as("count_trips"),
-        decAvg(col("fare")).as("average_fare"),
-        max(col("fare")).as("max_fare"),
-        min(col("fare")).as("min_fare"))
-      .orderBy("date")
+    kpiByDate(carriedTrips.unionByName(rematchedTrips)
+      .select(col("user_id"), ntz("ts").as("end_ts"), col("value").as("fare")))
   }
 
   /** p11: multi-format datetime normalization — the reference ingests

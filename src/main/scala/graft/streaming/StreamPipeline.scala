@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery}
@@ -23,13 +23,8 @@ case class TripEvent(
   * also the KPI chain's only re-delivery guard (the reference's
   * `check_existing`, first event wins per trip and kind): a repeated
   * signup cannot lower `startTs`, and a repeated purchase after the
-  * trip was emitted finds `emitted` set. Two fields per user, but one
-  * row for EVERY user seen so far: the NoTimeout matcher
-  * ([[StreamPipeline.matchedTrips]]) never drops a user, finished trips
-  * included, so the state grows with the number of users (a traced
-  * 62-batch trip_stream run went from 33.6k to 149.6k state rows).
-  * [[StreamPipeline.matchedTripsStandalone]] reaps it, but cannot feed
-  * another stateful operator. */
+  * trip was emitted finds `emitted` set. The state holds one row for
+  * every user ever seen, and nothing reaps it. */
 case class TripMatchState(startTs: Timestamp, emitted: Boolean)
 
 /** A completed trip: first signup matched with the first at-or-after
@@ -82,31 +77,22 @@ case class CompletedTrip(user_id: Long, start_ts: Timestamp, end_ts: Timestamp, 
   * key's floor and per-batch progress and stops its queries, also on
   * failure. An input table is staged by [[staged]]: one copy of
   * `$dir/<table>.parquet` per (table, dir) per JVM, read on
-  * [[graft.Tables.rawSchema]]; p15, p30 and p35 stage their own files
-  * (sentinel, wire shape, replay order), one-file landings through
-  * [[landFile]]. There is no knob for another path; restart and
-  * counter runs attach in [[run]]. The one unbounded query,
-  * [[kpiSinkStream]], starts itself. StreamingSpec fails if any other
-  * source file calls `processAllAvailable`, makes a memory sink or
-  * scopes the state partitions.
+  * [[graft.Tables.rawSchema]]; p15 reads that copy and its own flush
+  * sentinel through one glob, p30 and p35 stage their own files (wire
+  * shape, replay order), one-file landings through [[landFile]].
+  * There is no knob for another path; restart and counter runs attach
+  * in [[run]]. The one unbounded query, [[kpiSinkStream]], starts the
+  * KPI sink writer that p21 runs to completion ([[kpiSinkWriter]]).
+  * StreamingSpec fails if any other source file calls
+  * `processAllAvailable`, makes a memory sink or scopes the state
+  * partitions.
   */
 object StreamPipeline {
 
-  /** validate + watermark + exactly-once ingestion dedup on event_id,
-    * the input of [[matchedTripsStandalone]] (its event-time timeout
-    * needs the watermark; the KPI chain needs neither, see
-    * [[matchedTrips]]). dropDuplicatesWithinWatermark (NOT plain
-    * dropDuplicates): with the event-time column absent from the dedup
-    * subset, plain dedup state is never evicted and grows with every
-    * event_id ever seen; the within-watermark variant reaps keys once
-    * the watermark passes them. */
-  def dedupedEvents(events: DataFrame): DataFrame =
-    events.filter(TripPipeline.validCond)
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stateful trip matcher over the validated stream, with no dedup
-    * and no watermark in front of it.
+  /** Stateful trip matcher over the validated stream: the valid signup
+    * and purchase events, grouped by the user_id column itself (no
+    * per-row key function), with no dedup and no watermark in front of
+    * the matcher.
     *
     * Re-delivery: [[matchOne]]'s state is first-event-wins per user and
     * kind, so an exact re-delivery cannot move a KPI: a repeated signup
@@ -117,75 +103,14 @@ object StreamPipeline {
     * purchase that arrived before its (earlier) signup and is
     * re-delivered after it completes the trip.
     *
-    * State-cleanup note: the matcher runs with NoTimeout. An
-    * event-time timeout needs a watermark on this input, and Spark's
-    * global-watermark correctness check (rightly) refuses an
-    * event-time-timeout flatMapGroupsWithState that FEEDS another
-    * stateful operator — a timeout-armed matcher may emit rows already
-    * older than the watermark, which the downstream window aggregation
-    * would silently drop. In a deployment where matcher state must be
-    * reaped (abandoned trips), split the query at this boundary: run the
-    * matcher with EventTimeTimeout into a foreachBatch/Kafka sink and
-    * aggregate in a second query, exactly like the reference splits
-    * Lambda (match) from Glue (aggregate). State is 2 fields per user
-    * either way; here it keeps a row for every user ever seen. */
+    * The state holds one row for every user ever seen, and nothing
+    * reaps it. */
   def matchedTrips(spark: SparkSession, events: DataFrame): Dataset[CompletedTrip] = {
-    import spark.implicits._
-    tripEventsByUser(spark, events)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(matchOne)
-  }
-
-  /** The valid signup and purchase events of `events` grouped by the
-    * user_id column itself (no per-row key function). */
-  private def tripEventsByUser(spark: SparkSession, events: DataFrame)
-      : KeyValueGroupedDataset[Long, TripEvent] = {
     import spark.implicits._
     events.filter(TripPipeline.validCond && col("event_type").isin("signup", "purchase"))
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .groupBy(col("user_id")).as[Long, TripEvent]
-  }
-
-  /** How long a user's matcher state outlives the watermark before the
-    * standalone (split-deployment) matcher reaps it. */
-  val StateRetentionMs: Long = 7L * 24 * 3600 * 1000
-
-  /** The split-deployment matcher: same semantics as matchedTrips but
-    * with EventTimeTimeout state cleanup — legal because this variant is
-    * meant to be a TERMINAL query (foreachBatch/Kafka sink), not an
-    * input to further stateful operators (see matchedTrips' scaladoc).
-    * Abandoned trips' state is dropped once the watermark passes
-    * last-activity + retention. */
-  def matchedTripsStandalone(
-      spark: SparkSession,
-      events: DataFrame,
-      retentionMs: Long = StateRetentionMs): Dataset[CompletedTrip] = {
-    import spark.implicits._
-    tripEventsByUser(spark, dedupedEvents(events))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        matchOneWithTimeout(retentionMs))
-  }
-
-  private[streaming] def matchOneWithTimeout(retentionMs: Long)(
-      userId: Long,
-      events: Iterator[TripEvent],
-      state: GroupState[TripMatchState]): Iterator[CompletedTrip] = {
-    if (state.hasTimedOut) {
-      // reap: a user idle past last-activity + retention starts a fresh
-      // matching epoch on their next event
-      state.remove()
-      Iterator.empty
-    } else {
-      val batch = events.toIndexedSeq
-      val out = matchOne(userId, batch.iterator, state)
-      // arm from the group's LAST EVENT TIME, not the watermark: early
-      // in the stream the watermark still reads epoch 0, and an
-      // epoch-relative timeout would wrongly reap every group on the
-      // next batch. Event-time + retention always leads the watermark.
-      val lastMs = batch.map(_.ts.getTime).max
-      state.setTimeoutTimestamp(math.max(
-        lastMs + retentionMs, state.getCurrentWatermarkMs() + 1))
-      out
-    }
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(matchOne)
   }
 
   /** Process one user's micro-batch slice against its running state. */
@@ -248,19 +173,21 @@ object StreamPipeline {
     * gap), which closes all real sessions; the sentinel user's own
     * session is excluded from the output. On a real unbounded stream no
     * sentinel is needed — late sessions close as the watermark
-    * advances; this is purely the finite-input materialization trick. */
+    * advances; this is purely the finite-input materialization trick.
+    *
+    * p15's own staging dir holds only the sentinel: one file source
+    * reads it next to the shared staged events copy ([[staged]]). */
   def sessionizeViaFileStream(spark: SparkSession, dir: String): DataFrame = {
-    val streamDir = java.nio.file.Paths.get(stagingPath("p15", dir))
+    val flushDir = java.nio.file.Paths.get(stagingPath("p15", dir))
     val raw = graft.Tables.raw(spark, dir, "events")
-    landOnce(streamDir.toString, Seq(stagedMarkerName("events"), "flush.parquet")
-        .map(streamDir.resolve(_).toString)) {
-      stageParquet(s"$dir/events.parquet", streamDir.toString, "events")
+    landOnce(flushDir.toString, flushDir.resolve("flush.parquet").toString) {
+      // an events copy left here by an older layout would be read twice
+      org.apache.hadoop.fs.FileUtil.fullyDelete(flushDir.toFile)
       landFile(clickRow(raw, -1L, maxTsMicros(raw) + FlushLeadMicros, FlushUser),
-        streamDir.resolve("flush.parquet"))
+        flushDir.resolve("flush.parquet"))
     }
-    val sdf = graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(raw.schema).parquet(streamDir.toString))
-    toMemory(spark, "p15", dir, "append")(sessionizeStream(sdf))
+    toMemory(spark, "p15", dir, "append")(
+        sessionizeStream(staged(spark, dir, "events", plus = Some("p15"))))
       .filter(col("user_id") =!= FlushUser)
       .orderBy("user_id", "session_start")
   }
@@ -302,13 +229,11 @@ object StreamPipeline {
       java.nio.file.attribute.FileTime.fromMillis(ms)))
   }
 
-  /** Streaming partitioned KPI sink: lands the daily KPIs under
-    * `date=.../part-00000.json` via foreachBatch, through the batch
-    * writer [[graft.pipeline.SinkOps.writeKpiPartitioned]] (same layout
-    * as the reference's Glue writer, glue_jobs/KPI-Aggregator.py:117-125).
-    * Complete-mode batches carry the full KPI set, so a full overwrite
-    * per micro-batch is idempotent under retries (re-running batch N
-    * rewrites the same content).
+  /** Streaming partitioned KPI sink: starts [[kpiSinkWriter]], which
+    * lands the daily KPIs of `events` under `path` as one
+    * `date=.../part-00000.json` per date (the layout of the reference's
+    * Glue writer, glue_jobs/KPI-Aggregator.py:117-125). p21 runs the
+    * same writer to completion and is its oracle check.
     *
     * One trigger per landed batch, with three stages and no write job:
     * [[kpiDailyStream]] holds no watermark, so Spark never schedules a
@@ -319,15 +244,22 @@ object StreamPipeline {
     * temporary one. A checkpoint of this chain written before it lost
     * its event_id dedup (one stateful operator more) does not resume
     * under it: restart such a query from a fresh checkpoint. */
-  def kpiSinkStream(
-      spark: SparkSession,
-      events: DataFrame,
-      path: String): org.apache.spark.sql.streaming.StreamingQuery =
+  def kpiSinkStream(spark: SparkSession, events: DataFrame, path: String): StreamingQuery =
+    kpiSinkWriter(spark, events, path).start()
+
+  /** THE streaming KPI sink: [[kpiDailyStream]] in complete mode, each
+    * micro-batch landed under `path` by the batch writer
+    * [[graft.pipeline.SinkOps.writeKpiPartitioned]]. A complete-mode
+    * batch carries every date, and the writer replaces each date's file
+    * and deletes the dates the batch lacks, so re-running batch N
+    * leaves the same files. */
+  private def kpiSinkWriter(spark: SparkSession, events: DataFrame, path: String)
+      : DataStreamWriter[Row] =
     kpiDailyStream(spark, events).writeStream
       .outputMode("complete")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         graft.pipeline.SinkOps.writeKpiPartitioned(batch.toDF(), path): Unit
-      }.start()
+      }
 
   /** p9 as an oracle-checkable BATCH result: drives the full streaming
     * pipeline (validate → stateful match → windowed KPI) over the events
@@ -492,8 +424,13 @@ object StreamPipeline {
     * F.landOnce ([[graft.Once]]), which heals a cleaned target/, and
     * every operator streaming that table reads the same copy: ten
     * streaming operators × four bench passes must not pay forty
-    * identical copies. */
-  private def staged(spark: SparkSession, dir: String, table: String): DataFrame = {
+    * identical copies. With `plus = Some(kind)` the source is one
+    * Hadoop glob over this copy and `kind`'s own [[stagingPath]], whose
+    * files (p15's flush sentinel) it reads as more rows of the table;
+    * the marker and temp dirs are `_`-prefixed, so the listing skips
+    * them. */
+  private def staged(spark: SparkSession, dir: String, table: String,
+      plus: Option[String] = None): DataFrame = {
     val streamDir = stagingPath(table, dir)
     // heal artifact = stageParquet's done-marker, NOT the bare dir: a
     // partial clean that leaves an empty directory must re-land, or the
@@ -501,8 +438,9 @@ object StreamPipeline {
     landOnce(streamDir, s"$streamDir/${stagedMarkerName(table)}") {
       stageParquet(s"$dir/$table.parquet", streamDir, table)
     }
+    val source = plus.fold(streamDir)(kind => stagingPath(s"{$table,$kind}", dir))
     graft.Tables.conform(spark.readStream
-      .schema(graft.Tables.rawSchema(spark, dir, table)).parquet(streamDir), table)
+      .schema(graft.Tables.rawSchema(spark, dir, table)).parquet(source), table)
   }
 
   /** Wire partition count for the p30 staged Kafka-shaped input. 32 —
@@ -525,8 +463,9 @@ object StreamPipeline {
     * decode and everything downstream is identical to what runs
     * against a real broker — only `.format("kafka")` itself is swapped
     * for the staged file source (the connector artifact is deploy-time;
-    * see graft.sources.KafkaEvents). */
-  /** The staging is test/verify scaffolding (a deterministic function
+    * see graft.sources.KafkaEvents).
+    *
+    * The staging is test/verify scaffolding (a deterministic function
     * of the dir), not the operator; repeated p30 calls should measure
     * the INGESTION, not a rewrite of the same parquet — so the landing
     * runs through F.landOnce ([[graft.Once]]: once per JVM per dir,
@@ -647,35 +586,28 @@ object StreamPipeline {
     toMemory(spark, "p20", dir, "complete")(
       revenueByNationStream(spark, staged(spark, dir, "events"), dir)).orderBy("date", "n_name")
 
-  /** p21: IDEMPOTENT PARTITIONED SINK — the streaming daily-KPI output
-    * landed durably via `foreachBatch` + dynamic partition OVERWRITE:
-    * each micro-batch rewrites exactly the `date=.../` partitions it
-    * carries, so re-processing a batch (failure replay, at-least-once
-    * redelivery, a full backfill) produces byte-identical partitions
-    * instead of duplicate rows — exactly-once BY IDEMPOTENCE, the
-    * standard pattern when the sink is a plain object store with no
-    * transactional log. An append sink would double the data on every
-    * replay; the spec proves a second full re-delivery leaves the sink
-    * unchanged.
+  /** p21: IDEMPOTENT PARTITIONED SINK — the streaming daily KPIs landed
+    * durably by [[kpiSinkWriter]], the writer [[kpiSinkStream]] starts,
+    * run to completion over the staged events and read back with
+    * [[graft.pipeline.SinkOps.readKpiPartitioned]]; so this key is the
+    * oracle check on that sink. Each complete-mode micro-batch replaces
+    * every `date=.../part-00000.json` and deletes the dates it lacks, so
+    * re-processing a batch (failure replay, at-least-once redelivery, a
+    * full backfill) leaves the same files instead of duplicate rows —
+    * exactly-once BY IDEMPOTENCE, the standard pattern when the sink is
+    * a plain object store with no transactional log. An append sink
+    * would double the data on every replay; the spec proves a second
+    * full re-delivery leaves the sink unchanged.
     *
     * Scale shape: the KPI relation is days × 1 rows, so each batch's
     * write volume is trivial regardless of stream volume. Under
     * complete mode every batch carries EVERY date, so each batch
-    * rewrites every partition the sink holds: the write grows with the
+    * rewrites every date file the sink holds: the write grows with the
     * days kept, not with the dates the batch touched. */
   def idempotentKpiSink(spark: SparkSession, dir: String): DataFrame = {
     val out = stagingPath("p21sink", dir)
-    run(spark, "p21", dir)(
-      kpiDailyStream(spark, staged(spark, dir, "events"))
-        .writeStream.outputMode("complete")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date").parquet(out)
-        })
-    spark.read.schema(graft.pipeline.SinkOps.kpiDataSchema).parquet(out)
-      .select(col("date").cast("date").as("date"), col("total_fare"),
-        col("count_trips"), col("average_fare"), col("max_fare"), col("min_fare"))
-      .orderBy("date")
+    run(spark, "p21", dir)(kpiSinkWriter(spark, staged(spark, dir, "events"), out))
+    graft.pipeline.SinkOps.readKpiPartitioned(spark, out)
   }
 
   /** Streaming HLL register maintenance: per (day, register) running
@@ -729,8 +661,8 @@ object StreamPipeline {
   /** p26: STREAMING KPI ANOMALY MONITOR — a7's integer-exact
     * high/low/warmup verdicts as a LIVE pipeline: the per-(event_type,
     * day) counts are the streaming state (a watermarked dedup on
-    * event_id upstream keeps the counts exactly-once on an
-    * at-least-once source — p9's discipline; state is bounded at
+    * event_id upstream, [[stagedDedupedEvents]], keeps the counts
+    * exactly-once on an at-least-once source; state is bounded at
     * days × types rows), and the trailing-window comparison runs over
     * the tiny materialized count table. The split is deliberate and is
     * how a monitor deploys at 100 TB: counts accumulate in stream state
@@ -774,11 +706,21 @@ object StreamPipeline {
     * type and day, run to completion into `key`'s own memory sink,
     * which is returned as a table. */
   private def dailyTypeCounts(spark: SparkSession, dir: String, key: String): DataFrame =
-    toMemory(spark, key, dir, "complete")(staged(spark, dir, "events")
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
+    toMemory(spark, key, dir, "complete")(stagedDedupedEvents(spark, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("date"))
       .agg(count(lit(1)).as("n")))
+
+  /** The staged events with a 1-hour watermark and an event_id dedup
+    * within it: the exactly-once input of the counting keys p26, p27,
+    * p28 and p34, whose counts (unlike p19's register max or the trip
+    * matcher's first-event-wins state) are not idempotent.
+    * dropDuplicatesWithinWatermark, not plain dropDuplicates: without
+    * the event-time column in the subset, plain dedup state is never
+    * evicted. */
+  private def stagedDedupedEvents(spark: SparkSession, dir: String): DataFrame =
+    staged(spark, dir, "events")
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("event_id")
 
   /** p35's lateness allowance — how far behind the max observed event
     * time the watermark trails (and therefore how old a row may arrive
@@ -805,7 +747,9 @@ object StreamPipeline {
     * p15's flush sentinel 3 h past the corpus max, which drives the
     * final watermark past every real window end so append mode emits
     * them all; the sentinel's own window stays open and never emits, so
-    * it self-excludes. The tick is one validCond-failing row (negative
+    * it self-excludes. These files are p35's own copy of the events,
+    * not the shared staged one ([[staged]]): the evens/tick/odds replay
+    * order is the operator. The tick is one validCond-failing row (negative
     * user_id — contributes to neither stats nor counts) whose only job
     * is to burn a batch: Spark 4 runs a TWO-watermark design (the
     * StateStoreSave literals in the plan) — batch N filters late rows
@@ -926,9 +870,7 @@ object StreamPipeline {
     * into the serving store and the full-outer join is the store's
     * lookup. */
   def cdcUpsertStream(spark: SparkSession, dir: String): DataFrame = {
-    val changes = toMemory(spark, "p27", dir, "complete")(staged(spark, dir, "events")
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
+    val changes = toMemory(spark, "p27", dir, "complete")(stagedDedupedEvents(spark, dir)
       .filter(col("event_type").isin("purchase", "error"))
       .select(col("user_id").as("key"),
         struct(col("ts"), col("event_id").as("seq"),
@@ -970,9 +912,7 @@ object StreamPipeline {
         .select(col("*"), col("dc.d").as("d"), col("dc.cell").as("cell"))
         .drop("dc", "mh")
     val sketch = toMemory(spark, "p28", dir, "complete")(cellsOf(
-      staged(spark, dir, "events")
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
+      stagedDedupedEvents(spark, dir)
         .select(col("ts"), col("event_id"), col("user_id")),
       col("user_id"))
       .groupBy("d", "cell").agg(count(lit(1)).as("cnt")))
@@ -1194,7 +1134,7 @@ object StreamPipeline {
   }
 
   /** Daily KPIs over the matched-trip stream — event-time 1-day window,
-    * same decimal-exact aggregates as the batch kpiDaily.
+    * the batch kpiDaily's aggregate list ([[TripPipeline.KpiAggs]]).
     *
     * Two stateful operators, the [[matchedTrips]] matcher and the
     * complete-mode window aggregation, and no watermark: Spark runs a
@@ -1206,12 +1146,7 @@ object StreamPipeline {
   def kpiDailyStream(spark: SparkSession, events: DataFrame): DataFrame =
     matchedTrips(spark, events).toDF()
       .groupBy(window(col("end_ts"), "1 day").as("w"))
-      .agg(
-        decSum(col("fare")).as("total_fare"),
-        count(lit(1)).as("count_trips"),
-        decAvg(col("fare")).as("average_fare"),
-        max(col("fare")).as("max_fare"),
-        min(col("fare")).as("min_fare"))
+      .agg(TripPipeline.KpiAggs.head, TripPipeline.KpiAggs.tail: _*)
       .select(to_date(col("w.start")).as("date"), col("total_fare"),
         col("count_trips"), col("average_fare"), col("max_fare"), col("min_fare"))
 }

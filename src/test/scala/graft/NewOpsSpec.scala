@@ -522,10 +522,22 @@ class NewOpsSpec extends AnyFunSuite with SparkSpec {
     val first = StreamPipeline.idempotentKpiSink(spark, Sf0001).collect().map(_.toSeq).toSeq
     assert(first.nonEmpty)
     // run the ENTIRE pipeline again: a fresh query re-processes every
-    // event (at-least-once replay of all batches); dynamic partition
-    // overwrite must rewrite — not append — so rows must not double
+    // event (at-least-once replay of all batches); the sink replaces
+    // each date's file — never appends — so rows must not double
     val second = StreamPipeline.idempotentKpiSink(spark, Sf0001).collect().map(_.toSeq).toSeq
     assert(second === first, "re-delivery must not change the sink")
+  }
+
+  test("p21 lands one JSON part file per date, the kpiSinkStream layout") {
+    import graft.streaming.StreamPipeline
+    val n = StreamPipeline.idempotentKpiSink(spark, Sf0001).count()
+    val dateDirs = new java.io.File(StreamPipeline.stagingPath("p21sink", Sf0001)).listFiles()
+      .filter(_.getName.startsWith("date="))
+    assert(n > 0 && dateDirs.length === n)
+    // the .crc sidecars are the checksummed filesystem's
+    dateDirs.foreach { d =>
+      assert(d.list().filterNot(_.endsWith(".crc")).toSeq === Seq("part-00000.json"), d)
+    }
   }
 
   // --- s4: HLL estimate lands inside its error envelope ------------------

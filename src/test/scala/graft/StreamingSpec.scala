@@ -93,11 +93,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         s"input rows per trigger: ${progress.map(_.numInputRows).mkString(", ")}")
       assert(progress.forall(_.numInputRows > 0))
     } finally query.stop()
-    val landed = spark.read
-      .schema(graft.pipeline.SinkOps.kpiDataSchema).json(out)
-      .select(col("date").cast("date").as("date"), col("total_fare"),
-        col("count_trips"), col("average_fare"), col("max_fare"), col("min_fare"))
-      .orderBy("date").collect()
+    val landed = graft.pipeline.SinkOps.readKpiPartitioned(spark, out).collect()
     val batch = TripPipeline.kpiDaily(spark, Sf0001).collect()
     assert(landed.length === batch.length)
     landed.zip(batch).foreach { case (g, e) =>
@@ -177,21 +173,30 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("only StreamPipeline runs streams to completion, makes memory sinks or scopes state stores") {
-    import java.nio.file.{Files, Paths}
+  /** Every Scala source file under `src/main/scala`. */
+  private def mainSources: List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+  }
+
+  test("only StreamPipeline runs streams to completion, makes memory sinks or scopes state stores") {
+    import java.nio.file.Files
     // split so no source file matches by quoting these
     val needles = Seq("processAll" + "Available", "format(\"" + "memory\")",
       "withState" + "Partitions")
-    val files = {
-      val s = Files.walk(Paths.get("src/main/scala"))
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
-    }
-    val hits = files.filterNot(_.getFileName.toString == "StreamPipeline.scala")
+    val hits = mainSources.filterNot(_.getFileName.toString == "StreamPipeline.scala")
       .flatMap { f =>
         val text = Files.readString(f)
         needles.filter(text.contains).map(n => s"${f.getFileName}: $n")
       }
+    assert(hits.isEmpty, hits.mkString("; "))
+  }
+
+  test("only TripPipeline aliases the daily KPI aggregates") {
+    val needle = "as(\"total_fare\")"
+    val hits = mainSources.filterNot(_.getFileName.toString == "TripPipeline.scala")
+      .filter(f => java.nio.file.Files.readString(f).contains(needle)).map(_.getFileName)
     assert(hits.isEmpty, hits.mkString("; "))
   }
 
@@ -234,6 +239,14 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     got.zip(batch).foreach { case (g, e) => assert(g === e) }
   }
 
+  test("p15 stages only its flush sentinel beside the shared events copy") {
+    StreamPipeline.sessionizeViaFileStream(spark, Sf0001).count()
+    // what a file listing sees: `_` and `.` names are hidden
+    val visible = new java.io.File(StreamPipeline.stagingPath("p15", Sf0001)).list()
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
+    assert(visible === Seq("flush.parquet"))
+  }
+
   test("streaming session_window sessionization equals the batch gap rule") {
     import java.sql.Timestamp
     val evDf = Tables.events(spark, Sf0001)
@@ -271,41 +284,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         assert(math.abs(g.getDouble(4) - e.getDouble(4)) < 1e-9)
       }
     } finally query.stop()
-  }
-
-  test("standalone matcher (EventTimeTimeout) matches batch; short retention reaps state") {
-    def run(name: String, retentionMs: Long): Array[Row] = {
-      val evDf = Tables.events(spark, Sf0001)
-      implicit val enc = Encoders.row(evDf.schema)
-      val stream = MemoryStream[Row](enc, spark)
-      val query = StreamPipeline.matchedTripsStandalone(spark, stream.toDF(), retentionMs)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        val third = orderedEvents.length / 3
-        orderedEvents.grouped(third + 1).foreach { c =>
-          stream.addData(c); query.processAllAvailable()
-        }
-      } finally query.stop()
-      spark.table(name)
-        .select(col("user_id"), col("start_ts").cast("timestamp_ntz").as("start_ts"),
-          col("end_ts").cast("timestamp_ntz").as("end_ts"), col("fare"))
-        .orderBy("user_id", "start_ts").collect()
-    }
-    // retention beyond the data span → no state reaped → exactly batch p4
-    val got = run("trips_standalone_long", 90L * 24 * 3600 * 1000)
-    val exp = TripPipeline.tripMatch(spark, Sf0001)
-      .select(col("user_id"), col("start_ts"), col("end_ts"), col("fare"))
-      .orderBy("user_id", "start_ts").collect()
-    assert(got.toSeq === exp.toSeq)
-    // short retention → idle users' state is reaped and a NEW matching
-    // epoch begins (more trips than batch) — evidence the timeout fires;
-    // every emitted trip is still internally consistent
-    val reaped = run("trips_standalone_short", 24L * 3600 * 1000)
-    assert(reaped.length > got.length)
-    reaped.foreach { r =>
-      assert(!r.getAs[java.time.LocalDateTime]("end_ts")
-        .isBefore(r.getAs[java.time.LocalDateTime]("start_ts")))
-    }
   }
 
   /** The trip matcher over `orderedEvents` into a checkpointed parquet
