@@ -20,10 +20,16 @@ import org.apache.spark.sql.SparkSession
   *  - results are fully materialized through the `noop` sink (exercises
   *    the complete plan including final sorts/projections, unlike
   *    count() which lets Catalyst prune them);
+  *  - between timed queries, untimed, a GC runs only when used heap is
+  *    above half of max (see `maybeGc`);
   *  - failures are recorded per query — never silently swallowed into a
   *    fast wall-time;
   *  - the substrate memo is released at the end (per-dir), so a session
   *    benching many dirs doesn't accumulate pinned persists.
+  *
+  * Knobs: `SPARK_GRAFT_SF_DIR` (input), `SPARK_GRAFT_REPS` (timed
+  * passes), `SPARK_GRAFT_ONLY` (query subset), plus the session's own
+  * ([[GraftSession]]). There is one pass order and one GC rule.
   */
 object Bench {
   val DefaultReps = 3
@@ -34,17 +40,6 @@ object Bench {
   def reps(env: collection.Map[String, String] = sys.env): Int =
     GraftSession.intKnob("SPARK_GRAFT_REPS", 1, env).getOrElse(DefaultReps)
 
-  /** `SPARK_GRAFT_GC_EACH`: forced GC between timed queries — `1`
-    * before every query, `0` never; unset (None), ADAPTIVE: only when
-    * used heap crosses half of max. */
-  def gcEach(env: collection.Map[String, String] = sys.env): Option[Boolean] =
-    GraftSession.flagKnob("SPARK_GRAFT_GC_EACH", env)
-
-  /** `SPARK_GRAFT_FAMILY_MAJOR=1`: warm, time and release one family at a
-    * time (see main); `0` or unset keeps the global interleave. */
-  def familyMajor(env: collection.Map[String, String] = sys.env): Boolean =
-    GraftSession.flagKnob("SPARK_GRAFT_FAMILY_MAJOR", env).getOrElse(false)
-
   def main(args: Array[String]): Unit = {
     // dev-only filter for isolating queries while iterating
     // (SPARK_GRAFT_ONLY=d2_ngram_jaccard,d7_winnow); unset, every key is
@@ -52,8 +47,6 @@ object Bench {
     val only = SparkEntry.onlyKeys(sys.env.get("SPARK_GRAFT_ONLY"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val Reps = reps()
-    val gcMode = gcEach()
-    val byFamily = familyMajor()
     // Scan-split sizing for the local harness: snappy parquet with
     // string-heavy columns (events.props JSON) decodes at 5-20× its
     // stored bytes of CPU, so the 128 MB/4 MB defaults leave a big
@@ -127,19 +120,13 @@ object Bench {
     // letting them pressure the next one's memory — the round-9
     // natural experiment showed late-suite queries run ~3× slower
     // under accumulated suite context. Unconditional per-query GC cost
-    // 169 s of the round-11 wall, so the default is now ADAPTIVE:
-    // collect only when used heap crosses half of max (the pressure the
-    // round-9 experiment was actually about), which skips the forced
-    // pause for the majority of light queries. SPARK_GRAFT_GC_EACH=1
-    // restores every-query GC; =0 disables forced GC entirely.
+    // 169 s of the round-11 wall, so the one rule is ADAPTIVE: collect
+    // only when used heap crosses half of max (the pressure the round-9
+    // experiment was actually about), which skips the forced pause for
+    // the majority of light queries.
     val maxHeap = Runtime.getRuntime.maxMemory
-    def maybeGc(): Unit = gcMode match {
-      case Some(false) => ()
-      case Some(true) => System.gc()
-      case None =>
-        val used = heapPools().map(_.getUsage.getUsed).sum
-        if (used * 2 > maxHeap) System.gc()
-    }
+    def maybeGc(): Unit =
+      if (heapPools().map(_.getUsage.getUsed).sum * 2 > maxHeap) System.gc()
 
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -148,33 +135,12 @@ object Bench {
     def shortId(name: String): String = name.takeWhile(_ != '_')
     require(selected.map(s => shortId(s._1)).distinct.size == selected.size,
       "short query ids must stay unique — rename the clashing query")
-    // Memo spill policy for carve-scale suites (SPARK_GRAFT_FAMILY_MAJOR
-    // =1): at n ≥ 10⁶ the co-resident memoized substrates of every
-    // family in ONE local JVM pin the heap at its ceiling (round 15
-    // measured 46 of 48 GB with 21.7 s GC at the 1.28M-vector carve —
-    // a local-mode artifact; on a cluster substrates partition across
-    // executors). Family-major order warms and times one SURVEY family
-    // (short-id letter prefix) at a time, releasing its substrate
-    // persists before the next, so at most one family's substrates are
-    // ever co-resident. Within a family the timed passes stay
-    // round-robin (the host-spike robustness the global interleave
-    // exists for); a cross-family substrate cleared at a boundary
-    // rebuilds inside the next family's own UNTIMED warm pass. Default
-    // off: the driver's sf0.1 bench keeps the global interleave
-    // (substrates there are small, and cross-pass spike robustness
-    // matters more than heap headroom).
     val calPre = Seq.fill(3)(calOnce())
     val warmT0 = System.nanoTime()
-    // pass 0: substrate/cache warm pass, untimed (per family when
-    // family-major — see above)
-    val warmOks = scala.collection.mutable.Map.empty[String, Boolean]
-    if (!byFamily)
-      selected.foreach { case (name, fn) => warmOks(name) = runOnce(name, fn) }
+    // pass 0: substrate/cache warm pass, untimed
+    val warmOks = selected.map { case (name, fn) => name -> runOnce(name, fn) }.toMap
     // telemetry window = the timed passes only (warm-pass substrate
-    // builds are charged to no query, so their GC isn't either). In
-    // family-major mode later families' warm passes DO land inside the
-    // window — gc_s/heap_mb then bound the policy's whole working set,
-    // which is the number the policy exists to shrink.
+    // builds are charged to no query, so their GC isn't either)
     heapPools().foreach(_.resetPeakUsage())
     val gc0 = gcMillis()
     // passes 1..Reps run ROUND-ROBIN — the whole suite once per pass,
@@ -183,27 +149,16 @@ object Bench {
     // median window (round 5 charged 53 s to a 0.8 s query that way);
     // interleaved, the same spike clips one sample from many queries
     // and every median survives.
-    def runPasses(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]) =
-      (1 to Reps).map { _ =>
-        qs.map { case (name, fn) =>
-          maybeGc()
-          val t0 = System.nanoTime()
-          val ok = runOnce(name, fn)
-          name -> ((System.nanoTime() - t0) / 1e9, ok)
-        }.toMap
-      }
-    val passes: Seq[Map[String, (Double, Boolean)]] =
-      if (!byFamily) runPasses(selected)
-      else selected.groupBy(_._1.head).toSeq.sortBy(_._1).flatMap { case (_, fam) =>
-        // family-scoped warm pass (substrate builds untimed, as ever)
-        fam.foreach { case (name, fn) => warmOks(name) = runOnce(name, fn) }
-        val p = runPasses(fam)
-        operators.DedupOps.clearMemo(spark, sfDir)
-        System.gc()
-        p
-      }
+    val passes = (1 to Reps).map { _ =>
+      selected.map { case (name, fn) =>
+        maybeGc()
+        val t0 = System.nanoTime()
+        val ok = runOnce(name, fn)
+        name -> ((System.nanoTime() - t0) / 1e9, ok)
+      }.toMap
+    }
     val results = selected.map { case (name, _) =>
-      val samples = passes.flatMap(_.get(name))
+      val samples = passes.map(_(name))
       val median = samples.map(_._1).sorted.apply(Reps / 2)
       (name, median, warmOks(name) && samples.forall(_._2))
     }

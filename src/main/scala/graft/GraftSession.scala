@@ -13,23 +13,25 @@ import graft.functions.F
   * [[graft.io.LocalFs]] and every streaming checkpoint on
   * [[graft.io.LocalCheckpointFileManager]] (why: [[graft.io.LocalFs]]).
   *
-  * The session's `SPARK_GRAFT_*` knobs are read through [[intKnob]],
-  * [[flagKnob]], [[memoLevel]] and [[stateParts]], which name the
-  * variable when its value is not valid, before any session starts. */
+  * The session registers [[graft.functions.GraftExtensions]], which
+  * every graft query requires (its `graft_*` functions and the
+  * TopKPerKey strategy have no built-ins fallback).
+  *
+  * graft reads six `SPARK_GRAFT_*` knobs: `CPUS`, `SPLIT_MB` and
+  * `STATE_PARTS` here, `SF_DIR`, `REPS` and `ONLY` in Bench and Verify.
+  * The integer ones go through [[intKnob]], which names the variable
+  * when its value is not valid, before any session starts. */
 object GraftSession {
 
   /** Bench's session over `dataDir`: `master` (default `local[threads]`)
     * with `threads` shuffle partitions, the UTC session zone, graft's SQL
     * extensions, no UI, the object-agg fallback and codegen cache sizes
     * of [[F]], and the scan split sized to the input ([[splitMb]]).
-    * `SPARK_GRAFT_MEMO_LEVEL` sets `graft.memo.level`, the storage
-    * level of memoized substrates (e.g. `MEMORY_AND_DISK_SER` at carve
-    * scale), and `SPARK_GRAFT_STATE_PARTS` sets `graft.state.parts`, the
-    * state store count of the finite stream runs. `conf` adds keys that
+    * `SPARK_GRAFT_STATE_PARTS` sets `graft.state.parts`, the state
+    * store count of the finite stream runs. `conf` adds keys that
     * belong to one caller only. */
   def apply(dataDir: String, threads: Int = cpus(), master: Option[String] = None,
       conf: Seq[(String, String)] = Nil): SparkSession = {
-    val level = memoLevel()
     val parts = stateParts()
     val mb = splitMb(dataDir)
     val split =
@@ -50,7 +52,6 @@ object GraftSession {
     val spark = keys.foldLeft(SparkSession.builder().master(master.getOrElse(s"local[$threads]"))) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
-    level.foreach(l => spark.conf.set("graft.memo.level", l))
     parts.foreach(n => spark.conf.set("graft.state.parts", n.toString))
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -59,17 +60,6 @@ object GraftSession {
   /** `SPARK_GRAFT_CPUS`: local threads and shuffle partitions (default 4). */
   def cpus(env: collection.Map[String, String] = sys.env): Int =
     intKnob("SPARK_GRAFT_CPUS", 1, env).getOrElse(4)
-
-  /** `SPARK_GRAFT_MEMO_LEVEL`: a storage level name
-    * (`StorageLevel.fromString`) for memoized substrates, if set. */
-  def memoLevel(env: collection.Map[String, String] = sys.env): Option[String] =
-    env.get("SPARK_GRAFT_MEMO_LEVEL").map { v =>
-      try { org.apache.spark.storage.StorageLevel.fromString(v); v }
-      catch {
-        case _: IllegalArgumentException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_MEMO_LEVEL must name a storage level (e.g. MEMORY_AND_DISK_SER), got '$v'")
-      }
-    }
 
   /** `SPARK_GRAFT_STATE_PARTS`: the dev A/B override of the state store
     * count of the finite stream runs (input-sized by default, see
@@ -97,14 +87,6 @@ object GraftSession {
   /** The integer knob `name` of `env`, if set. */
   def intKnob(name: String, min: Int, env: collection.Map[String, String] = sys.env): Option[Int] =
     env.get(name).map(parseKnob(name, min))
-
-  /** The 0/1 knob `name` of `env`, if set, or an error that names it. */
-  def flagKnob(name: String, env: collection.Map[String, String]): Option[Boolean] =
-    env.get(name).map(_.trim match {
-      case "0" => false
-      case "1" => true
-      case v => throw new IllegalArgumentException(s"$name must be 0 or 1, got '$v'")
-    })
 
   /** `v` as an integer of at least `min`, or an error that names `name`. */
   def parseKnob(name: String, min: Int)(v: String): Int = {

@@ -219,25 +219,13 @@ object Analytics {
   /** q20: per-priority top-3 orders through the custom TopKPerKey
     * operator — one hash shuffle + bounded per-key heaps, NO sort stage
     * (vs. the window row_number formulation in q7, which fully sorts
-    * every partition). Falls back to the window formulation in sessions
-    * without GraftExtensions; identical output either way (total tie
-    * order). */
+    * every partition). Ties break on the order key (total order). */
   def q20TopkHeap(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.orders(spark, dir)
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
-    // same probe as every other extension-gated path (a session built
-    // with .withExtensions(...) has the function but no conf entry)
-    val hasExt = graft.functions.F.extensionLive(spark)
-    val top =
-      if (hasExt)
-        graft.plans.TopKPerKey(base, Seq("o_orderpriority"),
-          Seq(("o_totalprice", false), ("o_orderkey", true)), 3)
-      else {
-        val w = Window.partitionBy("o_orderpriority")
-          .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        base.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3).drop("rn")
-      }
-    top.orderBy(col("o_orderpriority"), col("o_totalprice").desc, col("o_orderkey"))
+    graft.plans.TopKPerKey(base, Seq("o_orderpriority"),
+        Seq(("o_totalprice", false), ("o_orderkey", true)), 3)
+      .orderBy(col("o_orderpriority"), col("o_totalprice").desc, col("o_orderkey"))
   }
 
   /** q22 (TPC-H Q22 shape): wealthy dormant customers — a scalar

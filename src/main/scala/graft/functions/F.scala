@@ -6,10 +6,11 @@ import org.apache.spark.sql.types._
 
 /** Column helpers shared across graft operators.
   *
-  * Everything here is built from codegen'd Catalyst built-ins (no UDFs)
-  * and is *oracle-portable*: each helper has an exact DuckDB-SQL
-  * equivalent, so query results can be hash-compared bit-for-bit against
-  * an independent engine (see graft.Oracles).
+  * Everything here is built from codegen'd Catalyst built-ins (no UDFs),
+  * or from graft's own native expressions ([[dotLong]]), and is
+  * *oracle-portable*: each helper has an exact DuckDB-SQL equivalent, so
+  * query results can be hash-compared bit-for-bit against an
+  * independent engine (see graft.Oracles).
   */
 object F {
 
@@ -85,15 +86,13 @@ object F {
     * ~154 s of one-time compile work that the 100-entry default
     * re-ran EVERY PASS (~600 s across a 4-pass bench). 16384 holds
     * the measured suite with ~3× headroom for growth at a bounded
-    * worst-case source-text ceiling inside the 8 GB driver. Dev A/B
-    * override: SPARK_GRAFT_CODEGEN_CACHE. Scale note: this is
-    * JVM-level, core-count- and data-size-independent; a production
-    * driver (or executor) running a large mixed query suite wants the
-    * same setting in its submit conf. Results are unaffected — the
-    * cache keys on generated SOURCE TEXT, so a hit replays the
-    * identical class. */
-  val CodegenCacheEntries: Int =
-    graft.GraftSession.intKnob("SPARK_GRAFT_CODEGEN_CACHE", 0).getOrElse(16384)
+    * worst-case source-text ceiling inside the 8 GB driver. Scale
+    * note: this is JVM-level, core-count- and data-size-independent;
+    * a production driver (or executor) running a large mixed query
+    * suite wants the same setting in its submit conf. Results are
+    * unaffected — the cache keys on generated SOURCE TEXT, so a hit
+    * replays the identical class. */
+  val CodegenCacheEntries: Int = 16384
 
   /** Collision-proof per-data-dir tag: the sanitized dir name keeps it
     * readable, the md5-derived suffix keeps DISTINCT dirs from ever
@@ -394,39 +393,17 @@ object F {
     transform(arr, x => floor(x.cast(DoubleType) * lit(1000.0) + lit(0.5)).cast(LongType))
 
   /** Exact integer dot product of two quantized embeddings (built-in
-    * formulation — portable to any session; see dotBest for the
-    * codegen'd native expression). */
+    * formulation — portable to any engine; [[DotProductRewrite]] plans
+    * it as the native [[LongDotProduct]], and it is the reference the
+    * specs compare [[dotLong]] against). */
   def dotQ(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  /** Is GraftExtensions live in this session? GraftExtensions installs
-    * its pieces ATOMICALLY (functions + TopKPerKeyStrategy + optimizer
-    * rule in one apply), so the presence of `graft_dot_long` is the one
-    * probe for all of them — in particular for paths that PLAN a
-    * TopKPerKey node, which needs the strategy, not just a function.
-    * This helper is the single place that assumption is stated; every
-    * path gated on the EXTENSION AS A WHOLE (the strategy, the rewrite
-    * rule, or this function) must probe through it. Paths that merely
-    * call one specific OTHER function (the minhash/simhash aggregates
-    * in DedupOps) probe that function's own existence directly — a
-    * more precise check that carries no strategy assumption. A session
-    * that hand-registers functions without the strategy is outside the
-    * supported surface. */
-  def extensionLive(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.catalog.functionExists("graft_dot_long")
-
-  /** Best available integer dot product for this session: the native
-    * codegen'd LongDotProduct when GraftExtensions is registered
-    * (a tight primitive loop in the generated stage), the higher-order
-    * built-ins otherwise. Identical results either way. */
-  def dotBest(spark: org.apache.spark.sql.SparkSession): (Column, Column) => Column =
-    if (extensionLive(spark))
-      (a, b) => call_function("graft_dot_long", a, b)
-    else dotQ
-
-  /** Cosine similarity from quantized vectors: double division of exact
-    * integers — identical across engines. */
-  def cosineQ(a: Column, b: Column): Column = cosineWith(dotQ)(a, b)
+  /** Exact integer dot product through the codegen'd native
+    * [[LongDotProduct]] (`graft_dot_long`, registered by
+    * [[GraftExtensions]]): a tight primitive loop in the generated
+    * stage. Same result as [[dotQ]]. */
+  def dotLong(a: Column, b: Column): Column = call_function("graft_dot_long", a, b)
 
   /** Cosine built over a supplied dot-product implementation. */
   def cosineWith(dot: (Column, Column) => Column)(a: Column, b: Column): Column =

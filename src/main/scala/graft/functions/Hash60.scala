@@ -72,10 +72,9 @@ object Hash60 {
   *
   * into the native [[Hash60]] — so every operator written against
   * `F.hash60` (and any user code spelling the same pattern) gets the
-  * string-free digest path automatically in sessions with
-  * GraftExtensions, and falls back to the built-ins elsewhere with
-  * bit-identical results — the [[DotProductRewrite]] contract applied
-  * to hashing.
+  * string-free digest path automatically, with results bit-identical
+  * to the built-ins (which stay the portable, oracle-side spelling) —
+  * the [[DotProductRewrite]] contract applied to hashing.
   *
   * The match is deliberately EXACT on the constant arguments
   * (substring(_, 1, 15), bases 16 → 10, target bigint): any other

@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Null behavior EXACTLY mirrors the built-in formulation: null if
   * either array is null, if the lengths differ (zip_with pads the
   * shorter side with nulls), or if any element is null (a null product
-  * nulls the running sum) — so sessions with and without the extension
-  * can never diverge.
+  * nulls the running sum) — so the native expression and the built-in
+  * it replaces can never diverge.
   *
   * OVERFLOW behavior follows `mode`, mirroring the three eval modes the
   * built-in arithmetic can carry: LEGACY wraps (Java long semantics),
@@ -32,9 +32,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * MathUtils, so error-class matchers see the same SparkThrowable as
   * for built-in `*`/`+`), TRY yields null. The optimizer rewrite
   * propagates the mode it matched, and the SQL-function builder derives
-  * the mode from the session's ANSI conf at resolution time — so with
-  * or without the extension, rewritten or explicit, the same query has
-  * the same overflow semantics.
+  * the mode from the session's ANSI conf at resolution time — so
+  * rewritten or explicit, the same query has the same overflow
+  * semantics as the built-in.
   *
   * The match is exact even on null-result inputs: zip_with is EAGER, so
   * the built-in evaluates the product of every index where both
@@ -176,20 +176,24 @@ case class LongDotProduct(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extension registering graft's native functions — wire with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
-  * Operators probe `spark.catalog.functionExists` and fall back to the
-  * built-in (slower, semantically identical) formulation when a session
-  * was built without the extension, so nothing hard-depends on it. */
+/** Session extension registering graft's native functions, the
+  * TopKPerKey planner strategy and the two rewrite rules — wire with
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
+  * ([[graft.GraftSession]] always does). It is REQUIRED: operators call
+  * the `graft_*` functions and plan `TopKPerKey` unconditionally, so in
+  * a session built without it a query fails at analysis naming the
+  * missing `graft_*` function, or at planning on the unplanned
+  * `TopKPerKey` node. The built-in formulations the specs compare
+  * against ([[F.dotQ]], the declarative sketches, the window top-k) are
+  * references, never selected at run time. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       new FunctionIdentifier("graft_dot_long"),
       new ExpressionInfo(classOf[LongDotProduct].getName, "graft_dot_long"),
       // overflow mode follows the session's ANSI conf at resolution
-      // time, so graft_dot_long(a, b) and the built-in fallback
-      // formulation can never diverge on overflow (F.dotBest's
-      // "identical results either way" contract)
+      // time, so graft_dot_long(a, b) (F.dotLong) and the built-in
+      // F.dotQ formulation can never diverge on overflow
       (children: Seq[Expression]) => LongDotProduct(children.head, children(1),
         EvalMode.fromSQLConf(SQLConf.get))))
     ext.injectFunction((

@@ -28,12 +28,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * milli-unit quantized inputs (|x| ≤ ~1e6) and codewords in
   * [−1000, 1000], each subspace distance is ≤ ~3.3e13 — far inside
   * int64, so wrap-vs-ANSI overflow modes cannot diverge on any real
-  * input; the values are bit-identical to the built-ins-only fallback
+  * input; the values are bit-identical to the built-ins-only reference
   * formulation in AnnOps (spec-pinned) and to the DuckDB oracle's SQL
   * regeneration of the same codebook.
   *
   * Null contract (both expressions): null if the vector is null, its
-  * length differs from M·SubDim, or any element is null. The fallback
+  * length differs from M·SubDim, or any element is null. The reference
   * formulation only meets this contract on well-formed inputs
   * (quantize() output is always non-null and full-width); malformed
   * vectors are outside the supported surface, as documented there.
@@ -101,7 +101,7 @@ abstract class PqCodebookExpression extends BinaryExpression {
 /** graft_pq_encode(vec, codebook) → array<int> of length M: the PQ
   * codeword (argmin_k Σ_d (vec[m·SubDim+d] − cb[m][k][d])²) per
   * subspace, ties toward the smaller k (strict-< keeps the first
-  * minimum — identical to the fallback's array_position-of-array_min
+  * minimum — identical to the reference's array_position-of-array_min
   * and to the oracle's (dist, k) struct-min). One constant-size nested
   * loop map-side: the zero-shuffle encode the IVF+PQ index build
   * (AnnOps e6/e10–e14) runs over the whole corpus. */

@@ -108,12 +108,12 @@ object AnnOps {
 
   /** Sign bit of q·w(p) — an exact integer dot against a literal
     * coefficient array, evaluated map-side. */
-  private def planeBit(dot: (Column, Column) => Column, q: Column, p: Int): Column =
-    when(dot(q, typedlit(planeW(p))) > 0, lit(1L)).otherwise(lit(0L))
+  private def planeBit(q: Column, p: Int): Column =
+    when(dotLong(q, typedlit(planeW(p))) > 0, lit(1L)).otherwise(lit(0L))
 
   /** Packed LSH code over planes [p0, p0+n): bit i = sign of plane p0+i. */
-  private def packedCode(dot: (Column, Column) => Column, q: Column, p0: Int, n: Int): Column =
-    (0 until n).map(i => planeBit(dot, q, p0 + i) * lit(1L << i)).reduce(_ + _)
+  private def packedCode(q: Column, p0: Int, n: Int): Column =
+    (0 until n).map(i => planeBit(q, p0 + i) * lit(1L << i)).reduce(_ + _)
 
   /** Target members per IVF coarse cell — the d12/ClusterOps sizing
     * discipline applied to the inverted file: [[cellBits]] grows the
@@ -165,10 +165,9 @@ object AnnOps {
     * ONE definition shared by the batch [[quantized]] projection and
     * e18's streaming delta encode, so the two ingest paths cannot
     * fork in geometry. */
-  private def cellCol(spark: SparkSession, b: Int): Column = {
-    val dot = dotBest(spark)
+  private def cellCol(b: Int): Column = {
     val sub = (0 until b).map(i =>
-      when(dot(col("q"), typedlit(cellPlaneW(i))) > 0, lit(1L << i))
+      when(dotLong(col("q"), typedlit(cellPlaneW(i))) > 0, lit(1L << i))
         .otherwise(lit(0L))).reduce(_ + _)
     (col("label").cast(LongType) * (1L << b) + sub).cast(IntegerType)
   }
@@ -188,7 +187,7 @@ object AnnOps {
       df: DataFrame): DataFrame = {
     val b = cellBitsOf(spark, dir)
     df.select(col("vec_id"), col("label"), quantize(col("embedding")).as("q"))
-      .withColumn("label", cellCol(spark, b))
+      .withColumn("label", cellCol(b))
   }
 
   private[graft] def quantized(spark: SparkSession, dir: String): DataFrame =
@@ -217,7 +216,7 @@ object AnnOps {
         if (raw.rdd.getNumPartitions < want) raw.repartition(want) else raw
       spread
         .select(col("vec_id"), quantize(col("embedding")).as("q"), col("label"))
-        .withColumn("label", cellCol(spark, cellBitsOf(spark, dir)))
+        .withColumn("label", cellCol(cellBitsOf(spark, dir)))
     }
 
   /** e1: brute-force cosine top-k per query — the exactness baseline.
@@ -225,7 +224,7 @@ object AnnOps {
     * this stays a broadcast of the small query side against a single
     * corpus scan; the unbounded scale path is e2. */
   def annTopk(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
-    cosineTopkOf(spark, quantized(spark, dir), "vec_id", "q", QueryStride, k)
+    cosineTopkOf(quantized(spark, dir), "vec_id", "q", QueryStride, k)
 
   /** THE exact-cosine top-k scoring chain — e1 and m4 (blob-embedding
     * similarity) both run through this one definition, so the shared
@@ -236,18 +235,17 @@ object AnnOps {
     * three — the exact doubles are unchanged (norms are the same exact
     * integers, cast and multiplied in the same order as the oracle's
     * `dot / sqrt(na * nb)`). */
-  private[operators] def cosineTopkOf(spark: SparkSession, rel: DataFrame,
-      idCol: String, vCol: String, stride: Int, k: Int): DataFrame = {
-    val dot = dotBest(spark)
+  private[operators] def cosineTopkOf(rel: DataFrame, idCol: String, vCol: String,
+      stride: Int, k: Int): DataFrame = {
     val withN = rel.select(col(idCol).as("_id"), col(vCol).as("_v"))
-      .withColumn("_n2", dot(col("_v"), col("_v")).cast(DoubleType))
+      .withColumn("_n2", dotLong(col("_v"), col("_v")).cast(DoubleType))
     val queries = panelOf(withN, "_id", stride)
       .select(col("_id").as("q_id"), col("_v").as("qv"), col("_n2").as("qn2"))
     rankTopk(
       withN.select(col("_id").as("c_id"), col("_v").as("cv"), col("_n2").as("cn2"))
         .join(broadcast(queries), col("q_id") =!= col("c_id"))
         .withColumn("score",
-          dot(col("qv"), col("cv")).cast(DoubleType) / sqrt(col("qn2") * col("cn2"))),
+          dotLong(col("qv"), col("cv")).cast(DoubleType) / sqrt(col("qn2") * col("cn2"))),
       k)
   }
 
@@ -277,14 +275,14 @@ object AnnOps {
       val p = bandPlanes(Tables.embeddings(spark, dir).count())
       quantized(spark, dir)
         .select(col("vec_id"), col("q"),
-          packedCode(dotBest(spark), col("q"), 0, p).as("bucket"))
+          packedCode(col("q"), 0, p).as("bucket"))
     }
 
   /** e2: LSH-bucketed ANN — query joins only its own bucket; exact cosine
     * rerank inside the bucket, top-3. This is the 100 TB path: the join
     * is an equality join on (bucket), never a cross join. */
   def annLsh(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val cos = cosineWith(dotBest(spark)) _
+    val cos = cosineWith(dotLong) _
     val withB = withBucket(spark, dir)
     val queries = withB.filter(col("vec_id") % QueryStride === 0)
       .select(col("vec_id").as("q_id"), col("q").as("qq"), col("bucket"))
@@ -305,7 +303,7 @@ object AnnOps {
     * codes differ in ≤ 1 bit, which is what the oracle re-derives with
     * bit_count(xor). */
   def annMultiprobe(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val cos = cosineWith(dotBest(spark)) _
+    val cos = cosineWith(dotLong) _
     val withB = withBucket(spark, dir)
     val nPlanes = bandPlanes(Tables.embeddings(spark, dir).count())
     val probeSet = array((col("bucket") +:
@@ -369,7 +367,7 @@ object AnnOps {
     * probe through the identical presentation. */
   private def ivfRerank(spark: SparkSession, dir: String, probed: DataFrame,
       k: Int): DataFrame = {
-    val cos = cosineWith(dotBest(spark)) _
+    val cos = cosineWith(dotLong) _
     val qv = quantized(spark, dir)
     rankTopk(
       probed.join(qv.select(col("vec_id").as("c_id"), col("q").as("cq"), col("label")), "label")
@@ -395,7 +393,7 @@ object AnnOps {
     * metadata) or a broadcast id set; candidates shrink before the
     * expensive exact rerank, never after. */
   def annFiltered(spark: SparkSession, dir: String, k: Int = 3, nProbe: Int = NProbe): DataFrame = {
-    val cos = cosineWith(dotBest(spark)) _
+    val cos = cosineWith(dotLong) _
     val allowed = graft.Tables.documents(spark, dir)
       .filter(col("lang") === "en").select(col("doc_id").as("c_id"))
     val qv = quantized(spark, dir)
@@ -422,7 +420,7 @@ object AnnOps {
     * persisted index; the probe logic itself must not fork. */
   private def probedCellsWith(spark: SparkSession, dir: String, nProbe: Int,
       cent: DataFrame): DataFrame =
-    probedCellsOf(spark,
+    probedCellsOf(
       quantized(spark, dir).filter(col("vec_id") % QueryStride === 0)
         .select(col("vec_id").as("q_id"), col("q").as("qq")),
       nProbe, cent)
@@ -432,9 +430,8 @@ object AnnOps {
     * carve's vectors (its query side is the benchmark, not a stride).
     * One definition: the dist2 identity and (dist2, label) tie-break
     * cannot fork between consumers. */
-  private[graft] def probedCellsOf(spark: SparkSession, queries: DataFrame,
-      nProbe: Int, cent: DataFrame): DataFrame = {
-    val dot = dotBest(spark)
+  private[graft] def probedCellsOf(queries: DataFrame, nProbe: Int,
+      cent: DataFrame): DataFrame = {
     // score the fat rows (the dist2 dots need qq), RANK the narrow
     // ones: at |queries| × |cells| candidate volume the crnk window
     // sorts its whole input, and the 64-long qq payload would make
@@ -445,8 +442,8 @@ object AnnOps {
     val narrow = queries
       .crossJoin(broadcast(cent))
       .withColumn("dist2",
-        col("n") * col("n") * dot(col("qq"), col("qq")) -
-          lit(2L) * col("n") * dot(col("qq"), col("s")) + col("ss"))
+        col("n") * col("n") * dotLong(col("qq"), col("qq")) -
+          lit(2L) * col("n") * dotLong(col("qq"), col("s")) + col("ss"))
       .select(col("q_id"), col("label"), col("dist2"))
       .withColumn("crnk", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -473,7 +470,7 @@ object AnnOps {
 
   /** The full codebook [m][k][d] as one constant-folded literal — the
     * second argument of the native PQ codec expressions and the
-    * indexable table of the built-ins fallback. */
+    * indexable table of the built-ins reference. */
   private lazy val codebook: Seq[Seq[Seq[Long]]] =
     (0 until SubSpaces).map(m => (0 until CodebookK).map(k =>
       (0 until SubDim).map(d => pqC(m, k, d))))
@@ -484,8 +481,8 @@ object AnnOps {
     * trees that Spark evaluates via clean CodegenFallback, vs. the old
     * literal expansion whose thousands of inlined nodes blew janino's
     * method limit and silently dropped the stage to interpreted
-    * execution). Extension sessions never run this: the native codec
-    * below generates a constant-size loop instead. */
+    * execution). The reference the native codec below is checked
+    * against; no query plans it. */
   private def pqDistsHof(q: Column, m: Int): Column =
     transform(element_at(cbLit, m + 1), cv =>
       aggregate(zip_with(slice(q, m * SubDim + 1, SubDim), cv,
@@ -500,28 +497,23 @@ object AnnOps {
   }
 
   /** Codes array (length SubSpaces) of one vector: the native
-    * constant-size-codegen expression when GraftExtensions is live
-    * (the 100 TB path — the encode is THE corpus-proportional pass of
-    * the index build and must stay inside whole-stage codegen, pinned
-    * by CodegenHealthSpec), the portable built-ins otherwise.
-    * Identical values either way (spec-pinned). */
-  private def pqCodesCol(spark: SparkSession, q: Column): Column =
-    if (extensionLive(spark)) call_function("graft_pq_encode", q, cbLit)
-    else array((0 until SubSpaces).map(m => pqCodeHof(q, m)): _*)
+    * constant-size-codegen `graft_pq_encode` (the 100 TB path — the
+    * encode is THE corpus-proportional pass of the index build and must
+    * stay inside whole-stage codegen, pinned by CodegenHealthSpec). */
+  private def pqCodesCol(q: Column): Column = call_function("graft_pq_encode", q, cbLit)
 
   /** Flat ADC table (length SubSpaces·CodebookK, (m·K + k) order) of one
-    * query vector — same native-vs-portable split as [[pqCodesCol]]. */
-  private def pqDistsFlatCol(spark: SparkSession, q: Column): Column =
-    if (extensionLive(spark)) call_function("graft_pq_adc", q, cbLit)
-    else flatten(array((0 until SubSpaces).map(m => pqDistsHof(q, m)): _*))
+    * query vector: the native `graft_pq_adc`. */
+  private def pqDistsFlatCol(q: Column): Column = call_function("graft_pq_adc", q, cbLit)
 
-  /** Test hook for the "identical results either way" contract:
-    * (native codes, fallback codes, native ADC, fallback ADC) over the
-    * same vector column — CodegenHealthSpec asserts bit-equality. */
+  /** Test hook: (native codes, built-ins codes, native ADC, built-ins
+    * ADC) over the same vector column — CodegenHealthSpec asserts the
+    * native codec bit-equal to the [[pqCodeHof]]/[[pqDistsHof]]
+    * reference formulation. */
   private[graft] def pqCodecColumnsForTest(q: Column): (Column, Column, Column, Column) =
-    (call_function("graft_pq_encode", q, cbLit),
+    (pqCodesCol(q),
       array((0 until SubSpaces).map(m => pqCodeHof(q, m)): _*),
-      call_function("graft_pq_adc", q, cbLit),
+      pqDistsFlatCol(q),
       flatten(array((0 until SubSpaces).map(m => pqDistsHof(q, m)): _*)))
 
   /** e6: IVF+PQ ANN — the production composition: the IVF coarse probe
@@ -549,7 +541,7 @@ object AnnOps {
   private[graft] def pqEncodePlan(spark: SparkSession, dir: String): DataFrame =
     quantized(spark, dir)
       .select(col("vec_id").as("c_id"), col("label"),
-        posexplode(pqCodesCol(spark, col("q"))).as(Seq("m", "code")))
+        posexplode(pqCodesCol(col("q"))).as(Seq("m", "code")))
       .select("c_id", "label", "m", "code")
 
   /** The compressed corpus index (c_id, cell label, m, code), map-side.
@@ -567,7 +559,7 @@ object AnnOps {
     quantized(spark, dir)
       .filter(col("vec_id") % QueryStride === 0)
       .select(col("vec_id").as("q_id"),
-        posexplode(pqDistsFlatCol(spark, col("q"))).as(Seq("pos", "dist")))
+        posexplode(pqDistsFlatCol(col("q"))).as(Seq("pos", "dist")))
       .select(col("q_id"),
         (col("pos") / lit(CodebookK)).cast(IntegerType).as("m"),
         (col("pos") % lit(CodebookK)).as("k"),
@@ -580,7 +572,7 @@ object AnnOps {
     * cannot drift. */
   private def pqAnswer(spark: SparkSession, dir: String, cent: DataFrame,
       codes: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val cos = cosineWith(dotBest(spark)) _
+    val cos = cosineWith(dotLong) _
     val qv = quantized(spark, dir)
     // per-query ADC lookup table: (q_id, m, k, dist), map-side
     val qdist = DedupOps.memoized(spark, "ann_pq_qdist", dir)(pqAdcPlan(spark, dir))
@@ -1039,14 +1031,13 @@ object AnnOps {
     * e25's sweep prices denser slices off the same build. */
   private[graft] def cellGraph(spark: SparkSession, dir: String): DataFrame =
     DedupOps.memoized(spark, "ann_cellGraph", dir) {
-      val dot = dotBest(spark)
       val cent = centroids(spark, dir)
       val p = bandPlanes(cent.count())
       def beamPlaneW(gp: Int): Seq[Long] =
         (0 until Dims).map(d => hash60Driver(s"bp_${gp}_${d}") % 2001L - 1000L)
       def beamCode(s: Column, j: Int): Column =
         (0 until p).map { i =>
-          when(dot(s, typedlit(beamPlaneW(j * p + i))) > 0, lit(1L << i))
+          when(dotLong(s, typedlit(beamPlaneW(j * p + i))) > 0, lit(1L << i))
             .otherwise(lit(0L))
         }.reduce(_ + _)
       val codes = array((0 until Bands).map(j => beamCode(col("s"), j)): _*)
@@ -1145,7 +1136,6 @@ object AnnOps {
       persist: Boolean = false,
       shared: Option[graft.Once[(String, Int, Int, Int), DataFrame]] = None): BeamChain = {
     require(degree <= BeamDegreeMax, s"degree $degree > BeamDegreeMax $BeamDegreeMax")
-    val dot = dotBest(spark)
     val qv = quantized(spark, dir)
     val cent = centroids(spark, dir)
     val adj = cellGraph(spark, dir)
@@ -1166,8 +1156,8 @@ object AnnOps {
       v.join(broadcast(queries), "q_id")
         .join(broadcast(cent), "label")
         .withColumn("dist2",
-          col("n") * col("n") * dot(col("qq"), col("qq")) -
-            lit(2L) * col("n") * dot(col("qq"), col("s")) + col("ss"))
+          col("n") * col("n") * dotLong(col("qq"), col("qq")) -
+            lit(2L) * col("n") * dotLong(col("qq"), col("s")) + col("ss"))
         .select("q_id", "label", "dist2")
     def topW(v: DataFrame, w: Int): DataFrame =
       v.withColumn("brnk", row_number().over(
@@ -1211,7 +1201,7 @@ object AnnOps {
     * ONE chain instead of rebuilding it (the r17 ADVICE find). */
   private def beamRerank(spark: SparkSession, dir: String, chain: BeamChain,
       k: Int): DataFrame = {
-    val cos = cosineWith(dotBest(spark)) _
+    val cos = cosineWith(dotLong) _
     val qv = quantized(spark, dir)
     val probed = chain.probed.join(broadcast(chain.queries), "q_id")
     rankTopk(
@@ -1317,8 +1307,7 @@ object AnnOps {
       }
       finally pool.shutdown()
     }
-    val ivfProbed = probedCellsOf(spark, panelQueries, NProbe,
-      centroids(spark, dir)).materialized()
+    val ivfProbed = probedCellsOf(panelQueries, NProbe, centroids(spark, dir)).materialized()
     val ivfCost = ivfProbed.join(broadcast(cellSizes), "label")
       .agg(sum("n").as("candidates_scanned"))
     val ivfRanked = nq.select((col("n_q") * lit(cells)).as("cells_ranked"))
@@ -1346,7 +1335,7 @@ object AnnOps {
     DedupOps.memoized(spark, "ann_bandCodes", dir) {
       val ppb = bandPlanes(Tables.embeddings(spark, dir).count())
       val codes = array((0 until Bands).map(j =>
-        packedCode(dotBest(spark), col("q"), j * ppb, ppb)): _*)
+        packedCode(col("q"), j * ppb, ppb)): _*)
       quantized(spark, dir)
         .select(col("vec_id"), posexplode(codes).as(Seq("band", "code")))
     }
@@ -1355,7 +1344,7 @@ object AnnOps {
     * candidate generation (a<b sharing ANY band code), then exact cosine
     * threshold on the persisted quantized vectors. */
   def embedNearDup(spark: SparkSession, dir: String, minCosine: Double = 0.3): DataFrame = {
-    val cos = cosineWith(dotBest(spark)) _
+    val cos = cosineWith(dotLong) _
     val bands = bandCodes(spark, dir)
     val qv = quantized(spark, dir)
     val cand = bands.select(col("vec_id").as("id_a"), col("band"), col("code"))
@@ -1543,7 +1532,7 @@ object AnnOps {
         .dropDuplicates("vec_id"))
     val codes = arrivals
       .select(col("vec_id").as("c_id"), col("label"),
-        posexplode(pqCodesCol(spark, col("q"))).as(Seq("m", "code")))
+        posexplode(pqCodesCol(col("q"))).as(Seq("m", "code")))
       .select("c_id", "label", "m", "code")
       // cluster the micro-batch on the cell label for the same
       // one-file-per-cell reason as [[writeCells]]
@@ -1581,7 +1570,6 @@ object AnnOps {
     * member scan, no corpus pass, no pairwise join. Exactly the
     * request-path cost a production rebalance pays per split. */
   def annCellSplit(spark: SparkSession, dir: String): DataFrame = {
-    val dot = dotBest(spark)
     val qv = quantized(spark, dir)
     val hot = qv.groupBy("label").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("label")).limit(1)
@@ -1592,24 +1580,24 @@ object AnnOps {
       .select(col("s"), col("n"), col("ss"))
     val seedA = members.crossJoin(broadcast(centRow))
       .withColumn("dist2",
-        col("n") * col("n") * dot(col("q"), col("q")) -
-          lit(2L) * col("n") * dot(col("q"), col("s")) + col("ss"))
+        col("n") * col("n") * dotLong(col("q"), col("q")) -
+          lit(2L) * col("n") * dotLong(col("q"), col("s")) + col("ss"))
       .orderBy(col("dist2").desc, col("vec_id")).limit(1)
       .select(col("vec_id").as("a_id"), col("q").as("a_q"))
     val seedB = members.crossJoin(broadcast(seedA))
       .filter(col("vec_id") =!= col("a_id"))
       .withColumn("da",
-        dot(col("q"), col("q")) - lit(2L) * dot(col("q"), col("a_q")) +
-          dot(col("a_q"), col("a_q")))
+        dotLong(col("q"), col("q")) - lit(2L) * dotLong(col("q"), col("a_q")) +
+          dotLong(col("a_q"), col("a_q")))
       .orderBy(col("da").desc, col("vec_id")).limit(1)
       .select(col("vec_id").as("b_id"), col("q").as("b_q"))
     members.crossJoin(broadcast(seedA)).crossJoin(broadcast(seedB))
       .withColumn("da",
-        dot(col("q"), col("q")) - lit(2L) * dot(col("q"), col("a_q")) +
-          dot(col("a_q"), col("a_q")))
+        dotLong(col("q"), col("q")) - lit(2L) * dotLong(col("q"), col("a_q")) +
+          dotLong(col("a_q"), col("a_q")))
       .withColumn("db",
-        dot(col("q"), col("q")) - lit(2L) * dot(col("q"), col("b_q")) +
-          dot(col("b_q"), col("b_q")))
+        dotLong(col("q"), col("q")) - lit(2L) * dotLong(col("q"), col("b_q")) +
+          dotLong(col("b_q"), col("b_q")))
       .select(col("vec_id"), col("label").as("old_label"),
         when(col("da") <= col("db"), lit(0L)).otherwise(lit(1L)).as("sub"))
       .orderBy("vec_id")
@@ -1748,7 +1736,7 @@ object AnnOps {
     * granularity, bounded by the IVF probe, never corpus². */
   def annSq(spark: SparkSession, dir: String, k: Int = 3,
       nProbe: Int = NProbe, shortlist: Int = PqShortlist): DataFrame = {
-    val cos = cosineWith(dotBest(spark)) _
+    val cos = cosineWith(dotLong) _
     val qv = quantized(spark, dir)
     val q255 = qv.filter(col("vec_id") % QueryStride === 0)
       .select(col("vec_id").as("q_id"),
@@ -1812,7 +1800,7 @@ object AnnOps {
     * by the adaptive IVF probe, never corpus². */
   def annBq(spark: SparkSession, dir: String, k: Int = 3,
       nProbe: Int = NProbe, shortlist: Int = PqShortlist): DataFrame = {
-    val cos = cosineWith(dotBest(spark)) _
+    val cos = cosineWith(dotLong) _
     val qv = quantized(spark, dir)
     val codes = bqCodes(spark, dir)
     val qCodes = codes.filter(col("vec_id") % QueryStride === 0)

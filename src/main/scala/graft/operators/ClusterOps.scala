@@ -390,24 +390,15 @@ object ClusterOps {
     * any partitioning, any engine).
     *
     * Scale shape: the per-cluster top-N runs through the custom
-    * TopKPerKey physical operator when the extension is live — bounded
-    * per-key heaps after one hash shuffle, no per-cluster sort of the
-    * full corpus (the window fallback sorts each cluster's partition).
-    * The rank column is recomputed on the ≤ K·SampleN survivors —
-    * trivial by construction. */
+    * TopKPerKey physical operator — bounded per-key heaps after one
+    * hash shuffle, no per-cluster sort of the full corpus. The rank
+    * column is recomputed on the ≤ K·SampleN survivors — trivial by
+    * construction. */
   def clusterBalancedSample(spark: SparkSession, dir: String): DataFrame = {
     val withH = kmeansStableAssign(spark, dir)
       .select(col("vec_id"), col("cid").as("cluster"))
       .withColumn("h", hash60(concat(lit("bal_"), col("vec_id").cast("string"))))
-    val top =
-      if (graft.functions.F.extensionLive(spark))
-        graft.plans.TopKPerKey(withH, Seq("cluster"),
-          Seq(("h", true), ("vec_id", true)), SampleN)
-      else {
-        val w = Window.partitionBy("cluster").orderBy(col("h"), col("vec_id"))
-        withH.withColumn("rn", row_number().over(w)).filter(col("rn") <= SampleN).drop("rn")
-      }
-    top
+    graft.plans.TopKPerKey(withH, Seq("cluster"), Seq(("h", true), ("vec_id", true)), SampleN)
       .withColumn("rnk", row_number().over(
         Window.partitionBy("cluster").orderBy(col("h"), col("vec_id"))).cast("long"))
       .select(col("cluster"), col("rnk"), col("vec_id"))

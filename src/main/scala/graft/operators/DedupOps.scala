@@ -18,7 +18,7 @@ import graft.functions.F._
   * proportional to true-duplicate density rather than |docs|².
   *
   * Signature construction is shuffle-minimal: the SimHash signature is a
-  * SINGLE hash aggregation with 60 per-bit vote expressions (no row
+  * SINGLE hash aggregation into one 60-slot vote buffer (no row
   * explosion), and every signature that feeds a self-join is persisted
   * first so the join's two sides read the materialized signature instead
   * of recomputing the tokenize→hash lineage. On a cluster the persists
@@ -36,25 +36,16 @@ object DedupOps {
     * or both sides of a self-join need it. Concurrent first callers of a
     * key share one build, a failed build is built again by the next
     * caller, and a build that waits on itself fails naming the keys
-    * ([[graft.Once]]). */
+    * ([[graft.Once]]). Every substrate persists at deserialized
+    * `MEMORY_AND_DISK`: substrates are re-read per query, and on a
+    * cluster they partition across executors. */
   private val memo = new graft.Once[(SparkSession, String, String), DataFrame](_._2)
   private[operators] def memoized(spark: SparkSession, key: String, dir: String)(
       build: => DataFrame): DataFrame = {
     MemoTrace.record(key)
     memo((spark, key, dir)) {
-      // Storage level is a session knob (`graft.memo.level`): the
-      // default deserialized MEMORY_AND_DISK is right for the driver's
-      // SFs, but a carve-scale suite co-residing many array-heavy
-      // substrates in ONE local JVM runs the heap to its ceiling
-      // (round 15: 46 of 48 GB, 21.7 s GC at n = 1.28M) —
-      // MEMORY_AND_DISK_SER stores the long-array rows packed,
-      // trading per-read deserialization CPU for the headroom the
-      // n = 10⁷ decade needs. On a cluster substrates partition
-      // across executors and the default stands.
-      val level = spark.conf.getOption("graft.memo.level")
-        .map(StorageLevel.fromString).getOrElse(StorageLevel.MEMORY_AND_DISK)
       MemoTrace.push(key)
-      try build.persist(level) finally MemoTrace.pop()
+      try build.persist(StorageLevel.MEMORY_AND_DISK) finally MemoTrace.pop()
     }
   }
 
@@ -235,24 +226,21 @@ object DedupOps {
     * over the doc's shingle set. Persisted: it feeds the band build plus
     * both sides of the candidate verification join (3 uses).
     *
-    * Preferred path: the graft_minhash_agg imperative aggregate — ONE
-    * pass over the (doc_id, h) rows with a K-slot buffer, no 16×
-    * permutation crossJoin, no extra shuffle tier. Falls back to the
-    * declarative formulation in sessions without GraftExtensions;
-    * results are bit-identical (same md5-derived coefficients). */
+    * The graft_minhash_agg imperative aggregate: ONE pass over the
+    * (doc_id, h) rows with a K-slot buffer, no 16× permutation
+    * crossJoin, no extra shuffle tier. Bit-identical to
+    * [[minhashSigDeclarative]] (same md5-derived coefficients). */
   private[graft] def minhashSig(spark: SparkSession, dir: String): DataFrame =
     memoized(spark, "minhashSig", dir) {
-      if (spark.catalog.functionExists("graft_minhash_agg"))
-        docNgrams(spark, dir)
-          .withColumn("h", col("ngram") % P) // ngram IS hash60(gram)
-          .groupBy("doc_id")
-          .agg(call_function("graft_minhash_agg", col("h")).as("mhs"))
-          .select(col("doc_id"), posexplode(col("mhs")).as(Seq("i", "mh")))
-      else minhashSigDeclarative(spark, dir)
+      docNgrams(spark, dir)
+        .withColumn("h", col("ngram") % P) // ngram IS hash60(gram)
+        .groupBy("doc_id")
+        .agg(call_function("graft_minhash_agg", col("h")).as("mhs"))
+        .select(col("doc_id"), posexplode(col("mhs")).as(Seq("i", "mh")))
     }
 
-  /** Built-ins-only MinHash (the oracle-mirroring reference formulation
-    * and the no-extension fallback). */
+  /** Built-ins-only MinHash: the oracle-mirroring reference formulation
+    * the specs compare [[minhashSig]] against. */
   private[graft] def minhashSigDeclarative(spark: SparkSession, dir: String): DataFrame = {
     val perms = spark.range(K.toLong).select(col("id").cast(IntegerType).as("i"))
       .withColumn("pa", hash60(concat(lit("perm_a_"), col("i"))) % (P - 1) + 1L)
@@ -558,34 +546,23 @@ object DedupOps {
     * definition shared by d4 (token-frequency votes) and m6 (distinct
     * byte-shingle votes), so the two fuzzy sketches cannot drift.
     *
-    * Preferred path: the graft_simhash_agg imperative aggregate — one
-    * 60-slot buffer updated in a tight loop, ONE shuffle with map-side
-    * partial aggregation and a constant-size plan. Fallback: the same
-    * votes as 60 declarative sum expressions in one groupBy (identical
-    * result, much larger generated code). */
-  private[graft] def simhashOf(spark: SparkSession, votes0: DataFrame): DataFrame =
-    if (spark.catalog.functionExists("graft_simhash_agg"))
-      votes0.groupBy("doc_id")
-        .agg(call_function("graft_simhash_agg", col("c"), col("h")).as("simhash"))
-    else {
-      val votes = (0 until SimBits).map(b =>
-        sum(col("c") * (expr(s"shiftright(h, $b) & 1") * 2L - 1L)).as(s"s$b"))
-      votes0.groupBy("doc_id")
-        .agg(votes.head, votes.tail: _*)
-        .select(col("doc_id"),
-          (0 until SimBits).map(b =>
-            when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ + _)
-            .as("simhash"))
-    }
+    * The graft_simhash_agg imperative aggregate: one 60-slot buffer
+    * updated in a tight loop, ONE shuffle with map-side partial
+    * aggregation and a constant-size plan. Bit-identical to the 60
+    * declarative sums of [[simhashSigDeclarative]]. */
+  private[graft] def simhashOf(votes: DataFrame): DataFrame =
+    votes.groupBy("doc_id")
+      .agg(call_function("graft_simhash_agg", col("c"), col("h")).as("simhash"))
 
   /** Per-doc 60-bit SimHash: token-frequency-weighted bit votes.
     * Persisted because the chunk self-join below reads it from both
     * sides. */
   private[graft] def simhashSig(spark: SparkSession, dir: String): DataFrame =
     memoized(spark, "simhashSig", dir)(
-      simhashOf(spark, tokCounts(spark, dir)))
+      simhashOf(tokCounts(spark, dir)))
 
-  /** Built-ins-only SimHash (oracle-mirroring fallback). */
+  /** Built-ins-only SimHash: the oracle-mirroring reference formulation
+    * the specs compare [[simhashSig]] against. */
   private[graft] def simhashSigDeclarative(spark: SparkSession, dir: String): DataFrame = {
     val votes = (0 until SimBits).map(b =>
       sum(col("c") * (expr(s"shiftright(h, $b) & 1") * 2L - 1L)).as(s"s$b"))
@@ -959,46 +936,35 @@ object DedupOps {
     * or norm arithmetic (the e18 anti-fork discipline). */
   private[graft] def deconProbes(spark: SparkSession, dir: String,
       nProbe: Int): DataFrame = {
-    val dot = dotBest(spark)
     val evalQ = AnnOps.quantized(spark, dir)
       .filter(col("vec_id") % CorpusOps.EvalMod === 0)
       .select(col("vec_id").as("q_id"), col("q").as("qq"))
-    AnnOps.probedCellsOf(spark, evalQ, nProbe, AnnOps.centroids(spark, dir))
+    AnnOps.probedCellsOf(evalQ, nProbe, AnnOps.centroids(spark, dir))
       .select(col("q_id").as("eval_id"), col("qq").as("eq"), col("label"))
-      .withColumn("e_n2", dot(col("eq"), col("eq")).cast(DoubleType))
+      .withColumn("e_n2", dotLong(col("eq"), col("eq")).cast(DoubleType))
   }
 
   def semanticDecon(spark: SparkSession, dir: String,
       tau: Double = SemDedupTau, nProbe: Int = AnnOps.NProbe): DataFrame = {
-    val dot = dotBest(spark)
     val qv = AnnOps.quantized(spark, dir)
     val probed = deconProbes(spark, dir, nProbe)
     val train = qv.filter(col("vec_id") % CorpusOps.EvalMod =!= 0)
-      .withColumn("n2", dot(col("q"), col("q")).cast(DoubleType))
+      .withColumn("n2", dotLong(col("q"), col("q")).cast(DoubleType))
     // best witness by (sim desc, eval_id asc) through TopKPerKey's
     // bounded per-key heaps — d12's no-sort witness rule: a rank
     // window sorts every qualifying (train, eval-probe) pair, which
     // on a duplicate-heavy corpus is cell-size-quadratic. The
-    // candidate relation is projected NARROW first so neither path
-    // sorts/shuffles vector payloads; norms are per-ROW so each pair
+    // candidate relation is projected NARROW first so the heap never
+    // shuffles vector payloads; norms are per-ROW so each pair
     // pays ONE dot (cosineTopkOf's identity — unchanged doubles).
     val cand = train.join(broadcast(probed), "label")
       .withColumn("sim",
-        dot(col("q"), col("eq")).cast(DoubleType) / sqrt(col("n2") * col("e_n2")))
+        dotLong(col("q"), col("eq")).cast(DoubleType) / sqrt(col("n2") * col("e_n2")))
       .filter(col("sim") >= tau)
       .select(col("vec_id"), col("eval_id"), col("sim"))
-    val top =
-      if (graft.functions.F.extensionLive(spark))
-        graft.plans.TopKPerKey(cand, Seq("vec_id"),
-          Seq(("sim", false), ("eval_id", true)), 1)
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id").orderBy(col("sim").desc, col("eval_id"))
-        cand.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn")
-      }
-    val hits = top.select(col("vec_id"), col("eval_id").as("contam_of"),
-      round(col("sim"), 6).as("sim"))
+    val hits = graft.plans.TopKPerKey(cand, Seq("vec_id"),
+        Seq(("sim", false), ("eval_id", true)), 1)
+      .select(col("vec_id"), col("eval_id").as("contam_of"), round(col("sim"), 6).as("sim"))
     train.select("vec_id").join(hits, Seq("vec_id"), "left")
       .select(col("vec_id"), col("contam_of").isNull.as("is_kept"),
         col("contam_of"), col("sim"))

@@ -165,9 +165,9 @@ object MultimodalOps {
     * Scale shape: shingling + hex is a narrow map (array HOFs, no
     * posexplode until the vote rows); the vote aggregation is ONE
     * map-combined shuffle to a single int64 per blob (the imperative
-    * graft_simhash_agg path when the extension is live); candidates
-    * come from 4 chunk-equality joins over K-rows/blob signatures —
-    * never an all-pairs comparison of payloads. */
+    * graft_simhash_agg); candidates come from 4 chunk-equality joins
+    * over K-rows/blob signatures — never an all-pairs comparison of
+    * payloads. */
   def blobFuzzyDedup(spark: SparkSession, dir: String): DataFrame =
     DedupOps.simhashPairsOf(
       DedupOps.memoized(spark, "m6_sig", dir)(
@@ -190,7 +190,7 @@ object MultimodalOps {
            |   sequence(0, octet_length(blob) - $FuzzyShingleBytes),
            |   i -> substring(hx, i * 2 + 1, ${FuzzyShingleBytes * 2})))
            | ELSE array() END""".stripMargin)).as("s"))
-    DedupOps.simhashOf(spark,
+    DedupOps.simhashOf(
       shingles.select(col("doc_id"), lit(1L).as("c"), hash60(col("s")).as("h")))
   }
 
@@ -225,8 +225,7 @@ object MultimodalOps {
       k: Int = EmbTopK): DataFrame =
     // the e1 scoring chain, verbatim — one shared definition (stride
     // panel + PanelCap both applied inside cosineTopkOf/panelOf)
-    AnnOps.cosineTopkOf(spark, blobEmb(spark, dir), "doc_id", "v",
-      EmbQueryStride, k)
+    AnnOps.cosineTopkOf(blobEmb(spark, dir), "doc_id", "v", EmbQueryStride, k)
 
   /** The (doc_id, v: array<long>) blob-embedding substrate m4 scores
     * and m10 indexes — the payload is digested ONCE per blob and the
@@ -288,9 +287,8 @@ object MultimodalOps {
     * partitioning — a probe touches only its cells' partitions. */
   def blobAnnIvf(spark: SparkSession, dir: String, k: Int = M10TopK,
       nProbe: Int = M10NProbe): DataFrame = {
-    import graft.functions.F.{cosineWith, dotBest}
-    val dot = dotBest(spark)
-    val cos = cosineWith(dot) _
+    import graft.functions.F.{cosineWith, dotLong}
+    val cos = cosineWith(dotLong) _
     val emb = blobEmb(spark, dir)
     // cell code: a per-row function of the vector against literal
     // coefficients — one map-side projection, memoized (index build);
@@ -300,7 +298,7 @@ object MultimodalOps {
       val b = m10Planes(Tables.documents(spark, dir).count())
       emb.withColumn("label",
         (0 until b).map(p =>
-          when(dot(col("v"), typedlit(m10PlaneW(p))) > 0, lit(1L << p))
+          when(dotLong(col("v"), typedlit(m10PlaneW(p))) > 0, lit(1L << p))
             .otherwise(lit(0L))).reduce(_ + _))
     }
     val cent = DedupOps.memoized(spark, "m10_cent", dir) {
@@ -312,8 +310,8 @@ object MultimodalOps {
       .partitionBy("q_id").orderBy(col("dist2"), col("label"))
     val probed = queries.crossJoin(broadcast(cent))
       .withColumn("dist2",
-        col("n") * col("n") * dot(col("qv"), col("qv")) -
-          lit(2L) * col("n") * dot(col("qv"), col("s")) + col("ss"))
+        col("n") * col("n") * dotLong(col("qv"), col("qv")) -
+          lit(2L) * col("n") * dotLong(col("qv"), col("s")) + col("ss"))
       .withColumn("crnk", row_number().over(byQ))
       .filter(col("crnk") <= nProbe)
       .select(col("q_id"), col("qv"), col("label"))

@@ -456,13 +456,21 @@ object SketchOps {
   /** The distinct (source, shingle-hash) relation — s10's substrate,
     * shared with d2/d3's n-gram universe (same shingles, same hash60),
     * persisted once per session+dir. */
-  private def sourceHashes(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def sourceHashes(spark: SparkSession, dir: String): DataFrame =
     DedupOps.memoized(spark, "s10_srchash", dir) {
       DedupOps.docNgrams(spark, dir)
         .join(Tables.documents(spark, dir).select(col("doc_id"), col("source")), "doc_id")
         .select(col("source"), col("ngram").as("h")) // ngram IS hash60(gram)
         .distinct()
     }
+
+  /** The per-source bottom-k sketch relation (source, h): ONE
+    * map-combined `graft_kmv_agg` (bounded K-slot buffer — no
+    * per-source sort of the full hash set). */
+  private[graft] def sourceSketch(spark: SparkSession, dir: String): DataFrame =
+    sourceHashes(spark, dir).groupBy("source")
+      .agg(call_function("graft_kmv_agg", col("h")).as("hs"))
+      .select(col("source"), explode(col("hs")).as("h"))
 
   /** s10: SOURCE-OVERLAP ESTIMATION from KMV sketches — the
     * dataset-curation question "how much do my corpus sources share?"
@@ -481,38 +489,17 @@ object SketchOps {
     * cross-source join in the plan.
     *
     * Scale shape: the sketch build is one distinct + one per-source
-    * bottom-k — natively `graft_kmv_agg`, a bounded K-slot imperative
-    * aggregate (O(log K) per row, map-side partial merge — the
-    * MinHashAgg pattern), with a bit-identical window-rank fallback
-    * for sessions without the extension. Everything pairwise runs on
-    * |sources|²·k sketch rows — kilobytes — never on the corpora:
+    * bottom-k — `graft_kmv_agg`, a bounded K-slot imperative aggregate
+    * (O(log K) per row, map-side partial merge — the MinHashAgg
+    * pattern). Everything pairwise runs on |sources|²·k sketch rows —
+    * kilobytes — never on the corpora:
     * S sources cost S·k rows however many petabytes they hold. All
     * arithmetic is int64 hashes + IEEE doubles with power-of-two
     * divisors, so the oracle matches bit-for-bit. */
-  /** The per-source bottom-k sketch relation (source, h). Native path:
-    * ONE map-combined `graft_kmv_agg` (bounded K-slot buffer — no
-    * per-source sort of the full hash set); fallback: distinct + window
-    * rank, bit-identical (pinned in SketchSpec). */
-  private[graft] def sourceSketch(spark: SparkSession, dir: String,
-      native: Boolean): DataFrame = {
-    val full = sourceHashes(spark, dir)
-    if (native)
-      full.groupBy("source")
-        .agg(call_function("graft_kmv_agg", col("h")).as("hs"))
-        .select(col("source"), explode(col("hs")).as("h"))
-    else {
-      import org.apache.spark.sql.expressions.Window
-      full
-        .withColumn("rnk", row_number().over(Window.partitionBy("source").orderBy("h")))
-        .filter(col("rnk") <= SetOpsK)
-        .select("source", "h")
-    }
-  }
-
   def kmvSetOps(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val full = sourceHashes(spark, dir)
-    val sk = sourceSketch(spark, dir, native = extensionLive(spark))
+    val sk = sourceSketch(spark, dir)
     val srcs = full.select("source").distinct()
     val pairs = srcs.select(col("source").as("src_a"))
       .join(srcs.select(col("source").as("src_b")), col("src_a") < col("src_b"))

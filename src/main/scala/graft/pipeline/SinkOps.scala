@@ -67,10 +67,9 @@ object SinkOps {
     path
   }
 
-  /** Explicit schema for reading the JSON partitions back — the `date`
-    * partition column comes from the directory names (partition
-    * discovery), everything else from the JSON documents. Explicit
-    * (never inferred) so a reader at any scale does zero inference scans. */
+  /** The KPI columns of the JSON documents, in the order they are
+    * written. Explicit (never inferred) so a reader at any scale does
+    * zero inference scans. */
   val kpiDataSchema: StructType = StructType(Seq(
     StructField("total_fare", DoubleType),
     StructField("count_trips", LongType),
@@ -78,12 +77,14 @@ object SinkOps {
     StructField("max_fare", DoubleType),
     StructField("min_fare", DoubleType)))
 
-  /** Reads back what [[writeKpiPartitioned]] landed under `path`: read
-    * on [[kpiDataSchema]], `date` cast to a date and first, the KPI
-    * columns in the order they were written, ordered by date. */
+  /** Reads back what [[writeKpiPartitioned]] landed under `path`: `date`
+    * first, then the KPI columns in the order they were written, ordered
+    * by date. `date` is in the read schema, so partition discovery types
+    * the directory names as dates, and a sink with no `date=` dir (an
+    * empty KPI table) reads back as an empty table of the same schema. */
   def readKpiPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(kpiDataSchema).json(path)
-      .select(col("date").cast(DateType).as("date") +: kpiDataSchema.fieldNames.toSeq.map(col): _*)
+    spark.read.schema(StructType(StructField("date", DateType) +: kpiDataSchema.fields)).json(path)
+      .select(col("date") +: kpiDataSchema.fieldNames.toSeq.map(col): _*)
       .orderBy("date")
 
   /** p10: daily-KPI partitioned sink round-trip — computes kpiDaily,

@@ -1053,7 +1053,6 @@ object StreamPipeline {
     * rescanned and there is zero state to snapshot. */
   def streamDecon(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{AnnOps, CorpusOps, DedupOps}
-    val dot = dotBest(spark)
     // static per-cell eval index: array_sort on the (eval_id, eq, e_n2)
     // structs orders by eval_id — the fold's tie-break order
     val probeIx = DedupOps.deconProbes(spark, dir, AnnOps.NProbe)
@@ -1063,12 +1062,12 @@ object StreamPipeline {
     val simT = "struct<sim:double,eval_id:bigint>"
     val arrivals = AnnOps.encodeCells(spark, dir,
         staged(spark, dir, "embeddings").filter(col("vec_id") % CorpusOps.EvalMod =!= 0))
-      .withColumn("n2", dot(col("q"), col("q")).cast(org.apache.spark.sql.types.DoubleType))
+      .withColumn("n2", dotLong(col("q"), col("q")).cast(org.apache.spark.sql.types.DoubleType))
     val out = arrivals
       .join(broadcast(probeIx), Seq("label"), "left")
       // same doubles as batch d19: dot cast to double, / sqrt(n2*e_n2)
       .withColumn("sims", transform(col("evs"), e => struct(
-        (dot(col("q"), e.getField("eq")).cast(org.apache.spark.sql.types.DoubleType) /
+        (dotLong(col("q"), e.getField("eq")).cast(org.apache.spark.sql.types.DoubleType) /
           sqrt(col("n2") * e.getField("e_n2"))).as("sim"),
         e.getField("eval_id").as("eval_id"))))
       .withColumn("hits", filter(col("sims"),

@@ -29,7 +29,6 @@ class CodegenHealthSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("PQ encode and ADC stages stay inside whole-stage codegen and compile") {
-    assume(graft.functions.F.extensionLive(spark))
     // a suite that ran earlier may have persisted this dir's
     // ann_pq_codes/ann_quantized substrates (e11/e18 do); the cache
     // manager would then serve the encode plan AS an InMemoryTableScan
@@ -59,7 +58,6 @@ class CodegenHealthSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("native PQ codec equals the built-ins fallback bit-for-bit") {
-    assume(graft.functions.F.extensionLive(spark))
     val qv = Tables.embeddings(spark, Sf0001)
       .select(graft.functions.F.quantize(col("embedding")).as("q"))
     val (nc, fc, na, fa) = AnnOps.pqCodecColumnsForTest(col("q"))

@@ -39,35 +39,6 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("SPARK_GRAFT_GC_EACH is 0 or 1 or a named error") {
-    assert(Bench.gcEach(Map.empty) === None)
-    assert(Bench.gcEach(Map("SPARK_GRAFT_GC_EACH" -> "1")) === Some(true))
-    assert(Bench.gcEach(Map("SPARK_GRAFT_GC_EACH" -> "0")) === Some(false))
-    Seq("yes", "adaptive", "2", "").foreach { v =>
-      knobError("SPARK_GRAFT_GC_EACH")(Bench.gcEach(Map("SPARK_GRAFT_GC_EACH" -> v)))
-    }
-  }
-
-  test("SPARK_GRAFT_FAMILY_MAJOR is 0 or 1 or a named error") {
-    assert(!Bench.familyMajor(Map.empty))
-    assert(Bench.familyMajor(Map("SPARK_GRAFT_FAMILY_MAJOR" -> "1")))
-    assert(!Bench.familyMajor(Map("SPARK_GRAFT_FAMILY_MAJOR" -> "0")))
-    Seq("true", "on", "").foreach { v =>
-      knobError("SPARK_GRAFT_FAMILY_MAJOR")(
-        Bench.familyMajor(Map("SPARK_GRAFT_FAMILY_MAJOR" -> v)))
-    }
-  }
-
-  test("SPARK_GRAFT_MEMO_LEVEL is a storage level name or a named error") {
-    assert(GraftSession.memoLevel(Map.empty) === None)
-    assert(GraftSession.memoLevel(Map("SPARK_GRAFT_MEMO_LEVEL" -> "MEMORY_AND_DISK_SER")) ===
-      Some("MEMORY_AND_DISK_SER"))
-    Seq("MEMORY_ONLY_FAST", "disk", "").foreach { v =>
-      knobError("SPARK_GRAFT_MEMO_LEVEL")(
-        GraftSession.memoLevel(Map("SPARK_GRAFT_MEMO_LEVEL" -> v)))
-    }
-  }
-
   test("SPARK_GRAFT_STATE_PARTS is a positive integer or a named error") {
     assert(GraftSession.stateParts(Map.empty) === None)
     assert(GraftSession.stateParts(Map("SPARK_GRAFT_STATE_PARTS" -> " 4 ")) === Some(4))
@@ -89,16 +60,36 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec {
     assert(spark.sparkContext.master === "local[4, 2]")
   }
 
+  private def files(root: String, suffix: String = ""): Seq[Path] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator.asScala.filter(f => Files.isRegularFile(f) && f.toString.endsWith(suffix))
+      .toList
+    finally s.close()
+  }
+
   test("GraftSession holds the only SparkSession builder in the sources") {
     // split so this file does not match itself
     val needle = "SparkSession" + ".builder()"
-    def scalaFiles(root: String): Seq[Path] = {
-      val s = Files.walk(Paths.get(root))
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
-    }
-    val hits = Seq("src/main/scala", "src/test/scala").flatMap(scalaFiles)
+    val hits = Seq("src/main/scala", "src/test/scala").flatMap(files(_, ".scala"))
       .filter(f => Files.readString(f).contains(needle))
       .map(_.getFileName.toString)
     assert(hits === Seq("GraftSession.scala"))
+  }
+
+  test("no operator probes for GraftExtensions: the extension is required") {
+    val probes = Seq("extensionLive", "functionExists(")
+    val hits = files("src/main/scala", ".scala").flatMap { f =>
+      val text = Files.readString(f)
+      probes.filter(text.contains).map(p => s"${f.getFileName}: $p")
+    }
+    assert(hits.isEmpty)
+  }
+
+  test("the program reads exactly six SPARK_GRAFT_* knobs") {
+    val knob = "SPARK_GRAFT_[A-Z_]+".r
+    val names = (files("src/main/scala") ++ files("tools") :+ Paths.get("build.sbt"))
+      .flatMap(f => knob.findAllIn(Files.readString(f))).toSet
+    assert(names === Set("CPUS", "SPLIT_MB", "STATE_PARTS", "SF_DIR", "REPS", "ONLY")
+      .map("SPARK_GRAFT_" + _))
   }
 }

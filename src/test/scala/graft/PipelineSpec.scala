@@ -112,6 +112,20 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(parts.length === direct.length)
   }
 
+  test("an empty KPI table written to the sink reads back empty with the KPI schema") {
+    import java.nio.file.{Files, Paths}
+    val empty = TripPipeline.kpiDaily(spark, Sf0001).limit(0)
+    Files.createDirectories(Paths.get("target"))
+    val tmp = Files.createTempDirectory(Paths.get("target"), "kpi-sink-empty")
+    try {
+      val back = SinkOps.readKpiPartitioned(spark,
+        SinkOps.writeKpiPartitioned(empty, tmp.resolve("sink").toString))
+      assert(back.collect().isEmpty)
+      assert(back.schema.map(f => (f.name, f.dataType)) ===
+        (("date", DateType) +: SinkOps.kpiDataSchema.map(f => (f.name, f.dataType))))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
   test("the KPI sink writes Spark's bytes, one part file per date, and drops absent dates") {
     import java.nio.file.{Files, Paths}
     val kpi = TripPipeline.kpiDaily(spark, Sf0001).localCheckpoint()

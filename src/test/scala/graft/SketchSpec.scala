@@ -220,12 +220,15 @@ class SketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("s10 native kmv_agg sketch equals the window-rank fallback bit-for-bit") {
-    import graft.operators.SketchOps
-    assume(graft.functions.F.extensionLive(spark))
-    def rowsOf(native: Boolean) =
-      SketchOps.sourceSketch(spark, Sf0001, native)
-        .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    assert(rowsOf(native = true) === rowsOf(native = false),
+    import org.apache.spark.sql.expressions.Window
+    def rowsOf(sketch: org.apache.spark.sql.DataFrame) =
+      sketch.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    // the built-ins reference: distinct + per-source window rank
+    val windowRank = SketchOps.sourceHashes(spark, Sf0001)
+      .withColumn("rnk", row_number().over(Window.partitionBy("source").orderBy("h")))
+      .filter(col("rnk") <= SketchOps.SetOpsK)
+      .select("source", "h")
+    assert(rowsOf(SketchOps.sourceSketch(spark, Sf0001)) === rowsOf(windowRank),
       "bounded-buffer aggregate drifted from the declarative bottom-k")
   }
 
